@@ -32,8 +32,8 @@ from hll_spark.session import apply_malloc_tunables  # noqa: E402
 from hll_spark.localdf import fast_local_df  # noqa: E402
 
 # env route for the case where this import precedes JVM launch; when
-# the harness created the session first, the worker-side kernels apply
-# the same policy in-process via mallopt (see hll_spark/session.py)
+# the harness created the session first, the workers apply the same
+# policy in-process via mallopt at package import (hll_spark/session.py)
 apply_malloc_tunables()
 
 from hll_spark.operators.agg import (  # noqa: E402

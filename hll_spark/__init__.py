@@ -20,6 +20,12 @@ stateful sketches (:mod:`hll_spark.streaming`), sources and the
 deterministic synthetic web-pages generator (:mod:`hll_spark.sources`).
 """
 
+from .session import tune_worker_process
+
+# every worker imports the package before it runs any hll_spark
+# function: this is where worker-process tuning happens (session.py)
+tune_worker_process()
+
 from .sketchlib.hll import HllConfig, HllSketch
 from .sketchlib.theta import ThetaSketch
 from .operators.agg import hll_distinct, hll_sketch_agg

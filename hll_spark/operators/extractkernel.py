@@ -43,13 +43,6 @@ from typing import Iterable
 
 import numpy as np
 
-from ..session import mallopt_heap_reuse
-
-# this module runs on the workers: apply the heap-reuse allocator
-# policy in-process, covering deployments where the session env was
-# not ours to set (see session.py)
-mallopt_heap_reuse()
-
 _WS_BYTES = frozenset(b" \t\n\x0b\x0c\r")  # Java default (ASCII) \s
 _WS_LUT = np.zeros(256, dtype=bool)
 for _b in _WS_BYTES:

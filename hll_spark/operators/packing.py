@@ -67,7 +67,7 @@ def _range_partitions(df: DataFrame) -> int:
         return max(1, min(-(-size // max(max_pb, 1)), 100_000))
     except Exception:
         try:
-            return _range_partitions(df)
+            return max(df.rdd.getNumPartitions(), 1)
         except Exception:
             return 200
 

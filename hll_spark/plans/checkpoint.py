@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.agg import SketchSpec, merge_sketch_partials, sketch_partials
@@ -70,20 +71,37 @@ class CheckpointStore:
             df.write.mode("overwrite").parquet(target)
 
     def append_metrics(self, job_id: str, stage: str, metrics: dict) -> None:
-        target = self._target(job_id, f"{stage}__metrics")
+        mstage = f"{stage}__metrics"
+        target = self._target(job_id, mstage)
         from ..localdf import fast_local_df
 
-        row = dict(metrics)
+        row = {
+            k: v.item() if isinstance(v, np.generic) else v
+            for k, v in metrics.items()
+        }
         row.update({"job_id": job_id, "stage": stage, "written_at": time.time()})
         keys = sorted(row)
         types = {
             bool: "boolean", int: "bigint", float: "double", str: "string",
         }
-        schema = ", ".join(
-            f"`{k}` {types.get(type(row[k]), 'string')}" for k in keys
-        )
+        prior = {}
+        if any(row[k] is None for k in keys) and self.exists(job_id, mstage):
+            # a null keeps the column's type from earlier appends, so
+            # every file under the metrics path has one schema
+            prior = {
+                f.name: f.dataType.simpleString()
+                for f in self.read(job_id, mstage).schema
+            }
+
+        def sql_type(k):
+            if row[k] is None:
+                return prior.get(k, "bigint")
+            return types.get(type(row[k]), "string")
+
+        schema = ", ".join(f"`{k}` {sql_type(k)}" for k in keys)
         vals = tuple(
-            row[k] if type(row[k]) in types else str(row[k]) for k in keys
+            row[k] if row[k] is None or type(row[k]) in types else str(row[k])
+            for k in keys
         )
         mdf = fast_local_df(self.spark, [vals], schema)
         if self._iceberg:

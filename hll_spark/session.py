@@ -23,11 +23,37 @@ environment, so ``apply_malloc_tunables()`` sets ``os.environ`` (call
 it before ``SparkSession`` creation); for cluster deployments it also
 tags the builder with ``spark.executorEnv.*`` so executors export the
 same values to their Python workers.
+
+Why a stat-gated ``zipimporter.invalidate_caches``: every sketch is a
+level-0 Python partial per input partition plus a Python merge stage,
+so a query is a chain of short Python tasks and fixed per-task cost
+dominates small ones. At the start of EVERY task PySpark's worker
+calls ``importlib.invalidate_caches()`` (``worker_util.
+setup_spark_files``). Up to CPython 3.12, ``zipimporter.
+invalidate_caches`` eagerly re-reads the archive's whole central
+directory, once per cached zipimporter instance. A reused worker holds
+~16: 13 for ``pyspark.zip`` and its subpackages (1,328 entries each),
+2 for the spark-core jar Spark puts on every worker's ``PYTHONPATH``
+(5,359 entries each) and one for py4j. That is ~27k directory entries
+parsed per task, ~0.2 s of CPU before the UDF runs. CPython 3.13 made
+the invalidation lazy (``zipimporter._get_files``).
+``gate_zip_invalidation()`` applies the staleness rule importlib's
+``FileFinder`` uses for directories: an archive is re-read only when
+its ``(st_mtime_ns, st_size, st_ino)`` changed since this process last
+read it, and instances of one archive share that read. Measured on a
+4-CPU VM (Python 3.11.7, Spark 4.1.2, ``local[4]``): the CPU a reused
+worker spends per task of an empty 4-task ``mapInArrow`` job fell from
+a median of 0.19 s to 0.03 s over 40 tasks.
+
+``tune_worker_process()`` applies both at package import, which every
+worker reaches first when it unpickles any ``hll_spark`` function, so a
+reused worker skips the re-read from its second task on.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 MALLOC_TUNABLES = {
     # keep numpy-sized temporaries on the reusable heap (1 GiB)
@@ -47,9 +73,7 @@ def mallopt_heap_reuse() -> bool:
     before importing this package, so ``spark.executorEnv.*`` was
     never tagged and the env-var route (which only works if set before
     the worker forks) is unavailable. Idempotent; returns True when
-    the thresholds were (or already had been) applied. Imported for
-    side effect by the numpy-hot kernel modules (extractkernel,
-    hashing), which execute on the workers."""
+    the thresholds were (or already had been) applied."""
     global _MALLOPT_DONE
     if _MALLOPT_DONE:
         return True
@@ -66,6 +90,63 @@ def mallopt_heap_reuse() -> bool:
     except (OSError, AttributeError, ValueError):
         return False  # non-glibc platform: nothing to tune
     return _MALLOPT_DONE
+
+
+# archive path -> ((st_mtime_ns, st_size, st_ino), directory) as of
+# this process's last read of that archive
+_ZIP_LISTINGS: dict = {}
+
+
+def gate_zip_invalidation() -> bool:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when its ``(st_mtime_ns, st_size, st_ino)`` changed since this
+    process last read it (see the module docstring). Idempotent; a
+    no-op returning False where the invalidation is already lazy
+    (``zipimporter`` has ``_get_files``). Installing re-reads every
+    cached zipimporter's archive once, so each starts from a listing
+    whose stat is known."""
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if hasattr(cls, "_get_files"):
+        return False
+    if getattr(cls.invalidate_caches, "_stat_gated", False):
+        return True
+    reread = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        seen = _ZIP_LISTINGS.get(self.archive)
+        if seen is not None and seen[0] == key:
+            self._files = seen[1]
+            return
+        # stat BEFORE the read: a rewrite racing the read leaves a
+        # stale key, which only costs one more read next time
+        reread(self)
+        if key is not None and self.archive in zipimport._zip_directory_cache:
+            _ZIP_LISTINGS[self.archive] = (key, self._files)
+        else:
+            _ZIP_LISTINGS.pop(self.archive, None)
+
+    invalidate_caches.__wrapped__ = reread
+    invalidate_caches._stat_gated = True
+    cls.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, cls):
+            finder.invalidate_caches()
+    return True
+
+
+def tune_worker_process() -> None:
+    """All in-process tuning of a process that runs ``hll_spark`` code
+    (Spark's Python workers, and the driver); called once at package
+    import. Idempotent."""
+    mallopt_heap_reuse()
+    gate_zip_invalidation()
 
 
 def apply_malloc_tunables(builder=None):

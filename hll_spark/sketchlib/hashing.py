@@ -27,12 +27,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..session import mallopt_heap_reuse
-
-# this module runs on the workers: apply the heap-reuse allocator
-# policy in-process (see session.py)
-mallopt_heap_reuse()
-
 # NOTE: every scalar operand below is a 0-d uint64 ndarray — numpy's
 # np-scalar and python-int operand paths are 30-60x slower than an
 # array-array ufunc loop on large operands.

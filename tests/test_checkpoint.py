@@ -128,3 +128,21 @@ def test_resume_with_changed_grouping_raises_clearly(spark, store):
         df, "id", spec, store, "jobY", force_recompute=True
     ).collect()
     assert len(out) == 1
+
+
+def test_append_metrics_types_none_and_numpy_scalars(spark, store):
+    """A None metric is a typed null and numpy scalars are unwrapped, so
+    every append under the metrics path has one schema."""
+    store.append_metrics("jobM", "partials", {"rows_seen": None, "wall_ms": 1.5})
+    store.append_metrics(
+        "jobM", "partials", {"rows_seen": np.int64(7), "wall_ms": None}
+    )
+    metrics = store.read_metrics("jobM", "partials")
+    types = dict(metrics.dtypes)
+    assert types["rows_seen"] == "bigint"
+    assert types["wall_ms"] == "double"
+    rows = sorted(
+        metrics.select("rows_seen", "wall_ms").collect(),
+        key=lambda r: r["rows_seen"] is None,
+    )
+    assert [tuple(r) for r in rows] == [(7, None), (None, 1.5)]

@@ -402,3 +402,35 @@ def test_chunk_documents_validation_and_plan(spark):
     out = chunk_documents(df, max_tokens=8, overlap=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan  # zero-shuffle operator
+
+
+class _NoStatsFrame:
+    """Stands in for a DataFrame whose plan-stats probe raises (e.g. a
+    backend without ``_jdf``); counts probe attempts."""
+
+    def __init__(self, rdd_partitions):
+        self.probes = 0
+        self._rdd_partitions = rdd_partitions
+
+    @property
+    def _jdf(self):
+        self.probes += 1
+        raise AttributeError("_jdf")
+
+    @property
+    def rdd(self):
+        if self._rdd_partitions is None:
+            raise AttributeError("rdd")
+        return type("Rdd", (), {"getNumPartitions": lambda s: self._rdd_partitions})()
+
+
+def test_range_partitions_fallback_does_not_recurse():
+    from hll_spark.operators.packing import _range_partitions
+
+    df = _NoStatsFrame(rdd_partitions=3)
+    assert _range_partitions(df) == 3
+    assert df.probes == 1
+    assert _range_partitions(_NoStatsFrame(rdd_partitions=0)) == 1
+    df = _NoStatsFrame(rdd_partitions=None)
+    assert _range_partitions(df) == 200
+    assert df.probes == 1

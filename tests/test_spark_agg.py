@@ -5,6 +5,8 @@ The strict test: exact merge associativity means a distributed sketch
 sketch built over the same hashed values.
 """
 
+import zipimport
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -168,3 +170,57 @@ def test_composite_murmur3_no_separator_aliasing(spark):
         lambda d: hll_distinct(d, ["a", "b"], cfg=cfg, hash_mode="murmur3")
     ).collect()[0][0]
     assert est == 4
+
+
+def _zip_reads_probe(batches):
+    """One row per task: the worker's pid, whether the stat-gated zip
+    invalidation is installed there, and how many archive directory
+    reads the worker made since its previous probe task (-1 on its
+    first, which installs the counter)."""
+    import os
+
+    import pyarrow as pa
+
+    import hll_spark  # noqa: F401  (package import installs the hook)
+
+    reads = getattr(zipimport, "_probe_reads", None)
+    if reads is None:
+        reads = zipimport._probe_reads = []
+        real = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return real(archive)
+
+        zipimport._read_directory = counting
+        since = -1
+    else:
+        since = len(reads)
+        reads.clear()
+    for _ in batches:
+        pass
+    gated = getattr(zipimport.zipimporter.invalidate_caches, "_stat_gated", False)
+    yield pa.RecordBatch.from_pydict(
+        {"pid": [os.getpid()], "gated": [bool(gated)], "reads": [since]}
+    )
+
+
+@pytest.mark.skipif(
+    hasattr(zipimport.zipimporter, "_get_files"),
+    reason="zipimport invalidation is already lazy on this Python",
+)
+def test_reused_worker_skips_zip_directory_reads(spark):
+    """A reused Python worker's later tasks re-read no zip archive
+    (pyspark.zip, py4j, the spark-core jar) at task start."""
+    df = spark.range(0, 4, 1, 4)
+    schema = "pid long, gated boolean, reads long"
+    rows = df.mapInArrow(_zip_reads_probe, schema).collect()
+    # Spark picks which idle worker runs a task, so the second job may
+    # land on workers the first did not use: run more until one repeats
+    for _ in range(5):
+        rows += df.mapInArrow(_zip_reads_probe, schema).collect()
+        if any(r["reads"] >= 0 for r in rows):
+            break
+    assert all(r["gated"] for r in rows)
+    later = [r["reads"] for r in rows if r["reads"] >= 0]
+    assert later and later == [0] * len(later)
