@@ -1150,9 +1150,9 @@ def q_fd_gram_by_label(spark, sf):
     # — identical double arithmetic in Spark and DuckDB — so every
     # per-label 64x64 Gram matrix comes out as exact BIGINTs on both
     # sides. This row exercises the full grouped path (level-0
-    # per-(partition, group) partials -> applyInPandas merge ->
-    # expansion); the global driver-merge path and compressing-regime
-    # spectral bounds are pinned in test_fd.py.
+    # per-(partition, group) partials -> per-group merge -> Gram
+    # expansion); the global path and compressing-regime spectral
+    # bounds are pinned in test_fd.py.
     from hll_spark.operators.matrix import fd_gram_by
 
     emb = _t(spark, sf, "embeddings")

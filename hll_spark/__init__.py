@@ -5,8 +5,9 @@ Kernels (:mod:`hll_spark.sketchlib`): HyperLogLog (AK storage-spec
 v1.0.0 compatible, the semantics of l0vest0rm/hll re-implemented on
 numpy), count-min, Bloom, KLL, t-digest, and vectorized MurmurHash3.
 
-Spark layer (:mod:`hll_spark.operators`): a generic mergeable-aggregator
-scaffold (mapInPandas partial build -> two-level tree merge), plus
+Spark layer (:mod:`hll_spark.operators`): one generic mergeable-aggregator
+scaffold (mapInArrow partial build per input partition and group -> one
+merge stage) under every sketch operator, plus
 HTML -> text extraction (JVM chain + Arrow kernel + fused
 extract-and-sketch), URL canonicalization, dedup (exact / MinHash-LSH /
 SimHash / n-gram Jaccard / embedding), similarity search (brute-force,

@@ -4,12 +4,12 @@ The execution shape (SURVEY.md §3.4, §4.3) is the same for every sketch:
 
   scan (Catalyst prunes columns/filters)
     -> [optional salted repartition for skewed keys]
-    -> mapInPandas: per-input-partition partial sketches   [level 0]
-    -> groupBy(bucket or group keys).applyInPandas(merge)  [level 1]
-    -> single final merge                                  [level 2]
-    -> scalar estimate
+    -> mapInArrow: per-(input partition, group) partial sketches   [level 0]
+    -> [global, optional: merge by bucket]                         [level 1]
+    -> mapInPandas merge on the group keys (global: one task)      [level 2]
+    -> estimate
 
-The level-0 ``mapInPandas`` pre-combine is the load-bearing piece: Spark's
+The level-0 pre-combine is the load-bearing piece: Spark's
 ``applyInPandas`` has no map-side combine, so without it a 10^12-row job
 would shuffle raw rows. With it, only O(partitions x groups) sketch blobs
 ever cross the shuffle (SURVEY.md §4.2, §7.3 risk 4).
@@ -18,11 +18,15 @@ Everything row-wise happens in numpy over Arrow batches; the only Python
 crossing is the sketch kernel itself. Hashing defaults to Spark's built-in
 ``xxhash64`` so the hot path stays inside whole-stage codegen; pass
 ``hash_mode='murmur3'`` for postgresql-hll spec-parity hashing (vectorized
-numpy murmur3 inside the same Arrow batch loop).
+numpy murmur3 inside the same Arrow batch loop), or ``hash_mode='arrow'``
+to hand the spec the batch's Arrow arrays of one or more projected
+Columns (array rows, several inputs per row, a decode of its own).
 
 One generic scaffold (:class:`SketchSpec` + :func:`sketch_partials` +
-:func:`merge_sketch_partials`) serves HLL, CMS, Bloom, KLL and t-digest —
-each sketch only supplies zero/update/merge/serialize.
+:func:`merge_sketch_partials`) serves every sketch operator in the
+package — HLL, CMS, Bloom, KLL, t-digest, theta, Misra-Gries, sliding HLL,
+Frequent Directions and the fused extract-and-sketch flagship — each
+sketch only supplies zero/update/merge/serialize.
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ from pyspark.sql.types import (
 
 from ..sketchlib.hashing import murmur3_x64_128_low64
 from ..sketchlib.hll import HllConfig, HllSketch, hll_union_all
+from .scanutil import plan_stats
 
 DEFAULT_SALT_SEED = 0x5B1FF00D
 
@@ -57,7 +62,8 @@ class SketchSpec:
     """zero/update/merge/serialize contract every sketch satisfies.
 
     update receives a numpy array of the projected value column (already
-    hashed for hash-based sketches, raw doubles for quantile sketches).
+    hashed for hash-based sketches, raw doubles for quantile sketches),
+    or with ``hash_mode='arrow'`` the list of the rows' Arrow arrays.
     States are opaque Python objects; serialize_fn must produce bytes whose
     merge is associative (byte-exact for HLL/CMS/Bloom, bound-preserving
     for KLL/t-digest — SURVEY.md §2.3).
@@ -131,6 +137,27 @@ def _not_null_cond(col):
     return F.col(col).isNotNull()
 
 
+def _project(df: DataFrame, col, by: list[str], hash_mode: str | None) -> DataFrame:
+    """The level-0 input: key columns, then the value column(s).
+
+    ``hash_mode='arrow'`` takes ``col`` as a Column (or list of Columns)
+    projected unchanged, one value column each, and keeps only rows
+    where every value column is non-null; the spec's update then
+    receives the batch's Arrow arrays (array-valued inputs, several
+    inputs per row, or a decode of its own). Every other mode projects
+    one scalar value column through :func:`_value_expr`.
+    """
+    if hash_mode == "arrow":
+        cols = list(col) if isinstance(col, (list, tuple)) else [col]
+        names = [f"__v{i}" for i in range(len(cols))]
+        return df.select(
+            *by, *[c.alias(n) for c, n in zip(cols, names)]
+        ).where(_not_null_cond(names))
+    return df.where(_not_null_cond(col)).select(
+        *by, _value_expr(df, col, hash_mode)
+    )
+
+
 def _arrow_values(arr, hash_mode: str | None) -> np.ndarray:
     """Values for the sketch update straight from one Arrow array.
 
@@ -174,159 +201,144 @@ def _arrow_values(arr, hash_mode: str | None) -> np.ndarray:
             ).view(np.int64)
         return murmur3_x64_128_low64(arr.to_pandas()).view(np.int64)
     if hash_mode == "raw":
-        return arr.to_numpy(zero_copy_only=False)
-    return arr.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-
-
-def _batch_values(pdf: pd.DataFrame, hash_mode: str | None) -> np.ndarray:
-    v = pdf["__v"]
-    if hash_mode == "xxhash64":
-        return v.to_numpy(dtype=np.int64)
-    if hash_mode == "murmur3":
-        return murmur3_x64_128_low64(v).view(np.int64)
-    if hash_mode == "raw":
         # item-identity sketches (Misra-Gries): the summary must carry
         # the values themselves, so ship them untouched
-        return v.to_numpy()
-    return v.to_numpy(dtype=np.float64)
+        return arr.to_numpy(zero_copy_only=False)
+    return arr.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
 
 
 # ---------------------------------------------------------------------------
 # level 0: per-input-partition partial sketches (the map-side combine)
 
+# bound the per-task combine map: beyond this many concurrent groups the
+# build flushes its partials early (the merge unions duplicate blobs per
+# group, so results are unchanged) — worker memory stays
+# O(_MAX_GROUPS * sketch size) at any group cardinality
+_MAX_GROUPS = 65536
+
 
 def sketch_partials(
     df: DataFrame,
-    col: str,
+    col,
     spec: SketchSpec,
     by: list[str] | None = None,
     hash_mode: str | None = "xxhash64",
     merge_buckets: int = 16,
     salt_partitions: int | None = None,
 ) -> DataFrame:
-    """Build one partial sketch per (input partition, group) via mapInPandas.
+    """Build one partial sketch per (input partition, group) via mapInArrow.
 
-    Global (by=None) output: ``bucket int, sketch binary, rows_seen long``
-    — bucket spreads the level-1 merge across ``merge_buckets`` reducers
-    so the tree merge has no single hot reducer (north_rule).
+    Global (by=None) output: ``bucket long, sketch binary, rows_seen long``
+    — bucket spreads the optional level-1 merge across ``merge_buckets``
+    reducers so the tree merge has no single hot reducer (north_rule).
     Grouped output: ``*by, sketch binary, rows_seen long``.
+
+    One build serves both: the global build is the grouped one with no
+    keys (a single state per task, emitted even when the task saw no
+    rows, so a global aggregate always yields one row). Only the key
+    columns go through pandas, for the groupby; each group's emitted
+    keys are an Arrow take of its first row, so key types round-trip
+    untouched, and values come from :func:`_arrow_values` (or, for
+    ``hash_mode='arrow'``, are the batch's Arrow arrays themselves).
     """
+    import pyarrow as pa
+
     by = list(by or [])
-    salt_cols = list(col) if isinstance(col, (list, tuple)) else [col]
     if salt_partitions:
+        salt_cols = list(col) if isinstance(col, (list, tuple)) else [col]
         # explicit salted repartition for skewed keys: spreads one hot key
         # across salt_partitions partitions; partials re-merge in level 1
         df = df.repartition(
             salt_partitions,
             F.xxhash64(*[F.col(c) for c in salt_cols], F.lit(DEFAULT_SALT_SEED)),
         )
-    proj = df.where(_not_null_cond(col)).select(
-        *by, _value_expr(df, col, hash_mode)
-    )
+    proj = _project(df, col, by, hash_mode)
     # NOTE (r6): a fan_out_scan here was A/B-tested and REVERTED —
     # at bench scale the level-0 kernel work per query is tens of ms,
     # so 32-way fan-out just multiplies Python-worker invocations and
     # the number of partials the merge stages must union (KLL/t-digest
     # merges are themselves Python): hll_custkey_by_month 0.64->1.11 s,
     # kll_quantiles_price 0.49->1.22 s. Large inputs already scan wide.
-
-    if not by:
-        out_schema = StructType(
-            [
-                StructField("bucket", LongType()),
-                StructField("sketch", BinaryType()),
-                StructField("rows_seen", LongType()),
-            ]
-        )
-
-        # the global build consumes raw Arrow RecordBatches (mapInArrow):
-        # no Arrow->pandas object conversion, no per-row utf-8 encode —
-        # int64 hashed columns arrive as zero-copy numpy views and
-        # strings are murmur-hashed straight from the Arrow offsets/data
-        # buffers. On the 16M-row flagship this removes the largest
-        # remaining per-doc memory traffic in the Python worker.
-        import pyarrow as pa
-
-        arrow_schema = pa.schema(
-            [
-                ("bucket", pa.int64()),
-                ("sketch", pa.binary()),
-                ("rows_seen", pa.int64()),
-            ]
-        )
-
-        def build_global(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            state = spec.zero_fn()
-            rows = 0
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                vals = _arrow_values(rb.column(0), hash_mode)
-                state = spec.update_fn(state, vals)
-                # count sketched values, not batch rows: the projection
-                # filters nulls JVM-side, but a direct caller may feed
-                # batches with nulls that _arrow_values drops
-                rows += len(vals)
-            tc = TaskContext.get()
-            pid = tc.partitionId() if tc is not None else 0
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "bucket": [pid % merge_buckets],
-                    "sketch": [spec.to_bytes_fn(state)],
-                    "rows_seen": [rows],
-                },
-                schema=arrow_schema,
-            )
-
-        return proj.mapInArrow(build_global, out_schema)
-
-    key_fields = [proj.schema[k] for k in by]
+    key_fields = [proj.schema[k] for k in by] or [StructField("bucket", LongType())]
     out_schema = StructType(
         key_fields
         + [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]
     )
+    nkeys = len(by)
+    arrow_values = hash_mode == "arrow"
+    max_groups = _MAX_GROUPS  # read here: the closure ships the value
 
-    # bound the per-partition combine map: beyond this many concurrent
-    # groups, flush partials early (the merge stage unions duplicates, so
-    # multiple blobs per (partition, group) stay correct) — keeps worker
-    # memory O(max_groups * sketch_size) at any group cardinality
-    max_groups = 65536
-
-    def build_grouped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         states: dict[tuple, Any] = {}
         counts: dict[tuple, int] = {}
+        key_rows: list = []  # first row of each new group, in states order
+        if not nkeys:
+            states[()], counts[()] = spec.zero_fn(), 0
 
-        def flush() -> pd.DataFrame:
-            keys = list(states)
-            data = {k: [key[i] for key in keys] for i, k in enumerate(by)}
-            data["sketch"] = [spec.to_bytes_fn(states[k]) for k in keys]
-            data["rows_seen"] = [counts[k] for k in keys]
+        def flush() -> "pa.Table":
+            if nkeys:
+                keys = pa.Table.from_batches(key_rows).combine_chunks().columns
+                key_rows.clear()
+            else:
+                tc = TaskContext.get()
+                pid = tc.partitionId() if tc is not None else 0
+                keys = [pa.array([pid % merge_buckets], pa.int64())]
+            out = pa.Table.from_arrays(
+                [
+                    *keys,
+                    pa.array([spec.to_bytes_fn(s) for s in states.values()], pa.binary()),
+                    pa.array(list(counts.values()), pa.int64()),
+                ],
+                names=[f.name for f in out_schema],
+            )
             states.clear()
             counts.clear()
-            return pd.DataFrame(data)
+            return out
 
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            # hash/project the whole batch ONCE (one vectorized kernel
-            # call), then slice per group — the per-group work is a
-            # numpy take, not a murmur invocation
-            batch_vals = _batch_values(pdf, hash_mode)
-            for key, idx in pdf.groupby(by, sort=False, dropna=False).indices.items():
+            # decode the whole batch ONCE (one vectorized kernel call),
+            # then slice per group — the per-group work is a take, not a
+            # hash invocation
+            if arrow_values:
+                vals = rb.columns[nkeys:]
+            else:
+                vals = _arrow_values(rb.column(nkeys), hash_mode)
+            if not nkeys:
+                groups = [((), None)]
+            else:
+                key_batch = rb.select(list(range(nkeys)))
+                groups = (
+                    key_batch.to_pandas()
+                    .groupby(by, sort=False, dropna=False)
+                    .indices.items()
+                )
+            new_firsts = []
+            for key, idx in groups:
                 key = key if isinstance(key, tuple) else (key,)
-                vals = batch_vals[idx]
-                if key in states:
-                    states[key] = spec.update_fn(states[key], vals)
-                    counts[key] += len(idx)
+                if idx is None:
+                    v = vals
+                elif arrow_values:
+                    v = [a.take(idx) for a in vals]
                 else:
-                    states[key] = spec.update_fn(spec.zero_fn(), vals)
-                    counts[key] = len(idx)
+                    v = vals[idx]
+                n = len(v[0]) if arrow_values else len(v)
+                if key in states:
+                    states[key] = spec.update_fn(states[key], v)
+                    counts[key] += n
+                else:
+                    states[key] = spec.update_fn(spec.zero_fn(), v)
+                    counts[key] = n
+                    new_firsts.append(idx[0])
+            if new_firsts:
+                key_rows.append(key_batch.take(new_firsts))
             if len(states) > max_groups:
-                yield flush()
+                yield from flush().to_batches()
         if states:
-            yield flush()
+            yield from flush().to_batches()
 
-    return proj.mapInPandas(build_grouped, out_schema)
+    return proj.mapInArrow(build, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -345,29 +357,70 @@ def _estimate_partials_partitions(partials: DataFrame) -> int:
     picks a merge topology — both topologies are value-identical, so an
     estimate is sufficient. Falls back to the exact probe when stats
     are unavailable (non-classic backends)."""
+    stats = plan_stats(partials)
+    if stats is not None:
+        return stats[1]
     try:
-        size = int(
-            partials._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        max_pb = int(
-            partials.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .filesMaxPartitionBytes()
-        )
-        return max(1, -(-size // max(max_pb, 1)))
+        return partials.rdd.getNumPartitions()
     except Exception:
-        try:
-            return partials.rdd.getNumPartitions()
-        except Exception:
-            return 1 << 20  # unknown: choose the scale-safe topology
+        return 1 << 20  # unknown: choose the scale-safe topology
 
 
-def _merge_blobs(spec: SketchSpec, blobs: pd.Series) -> bytes:
+def _fold(spec: SketchSpec, blobs) -> Any:
+    """from_bytes -> merge over serialized sketches; zero when empty."""
     acc = None
     for blob in blobs:
         s = spec.from_bytes_fn(bytes(blob))
         acc = s if acc is None else spec.merge_fn(acc, s)
-    return spec.to_bytes_fn(acc if acc is not None else spec.zero_fn())
+    return acc if acc is not None else spec.zero_fn()
+
+
+def _merge(partials: DataFrame, spec: SketchSpec, by: list[str]) -> DataFrame:
+    """One merge stage: co-locate every group's blobs and fold them.
+
+    Grouped: hash-repartition on the keys + ONE mapInPandas call per
+    partition, instead of groupBy().applyInPandas — the latter ships
+    each group as its own Arrow batch and invokes the UDF per group,
+    whose per-call overhead dominates when groups are small (r6: 0.68s
+    -> 0.54s on the 80-group month query). The in-task pandas groupby
+    keeps null keys (dropna=False), like applyInPandas. Global (no
+    keys): the same function over ``repartition(1)``, emitting a zero
+    sketch if no partial arrives.
+    """
+    out_schema = StructType(
+        [partials.schema[k] for k in by]
+        + [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]
+    )
+
+    def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = [pdf for pdf in batches if len(pdf)]
+        if not frames:
+            if not by:
+                yield pd.DataFrame(
+                    {"sketch": [spec.to_bytes_fn(spec.zero_fn())], "rows_seen": [0]}
+                )
+            return
+        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+        if by:
+            groups = pdf.groupby(by, sort=False, dropna=False).indices.items()
+        else:
+            groups = [((), slice(None))]
+        rows: dict[str, list] = {k: [] for k in by}
+        rows["sketch"] = []
+        rows["rows_seen"] = []
+        for key, idx in groups:
+            key = key if isinstance(key, tuple) else (key,)
+            for i, k in enumerate(by):
+                rows[k].append(key[i])
+            rows["sketch"].append(spec.to_bytes_fn(_fold(spec, pdf["sketch"].iloc[idx])))
+            rows["rows_seen"].append(int(pdf["rows_seen"].iloc[idx].sum()))
+        yield pd.DataFrame(rows)
+
+    if by:
+        stage = partials.repartition(*[F.col(k) for k in by])
+    else:
+        stage = partials.repartition(1)
+    return stage.mapInPandas(merge_partition, out_schema)
 
 
 def merge_sketch_partials(
@@ -382,85 +435,21 @@ def merge_sketch_partials(
     pre-combine there is exactly ONE blob per input partition, so even a
     100k-partition scan yields only ~1 GB of sketch bytes at one reducer's
     input, and each extra merge level costs a full exchange+Python stage
-    of latency. ``two_level=True`` (or auto, above 4096 partials) inserts
-    the bucketed level-1 merge so no single reducer ever sees more than
+    of latency. ``two_level=True`` (or auto, above 4096 partials) first
+    merges by ``bucket``, so no single reducer ever sees more than
     max(#partials/K, K) blobs — the shape to use when partials are huge
     (EXPLICIT-tier sketches) or the scan has >10^4 partitions.
     Grouped: one shuffle on the group keys — level 0 already collapsed
-    each group to at most one blob per input partition.
+    each group to at most one blob per input partition (per flush).
     """
     by = list(by or [])
-    if two_level is None and not by:
-        two_level = _estimate_partials_partitions(partials) > 4096
-    out_schema = StructType(
-        ([partials.schema[k] for k in by] if by else [])
-        + [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = _merge_blobs(spec, pdf["sketch"])
-        row = {k: [pdf[k].iloc[0]] for k in by}
-        row["sketch"] = [merged]
-        row["rows_seen"] = [int(pdf["rows_seen"].sum())]
-        return pd.DataFrame(row)
-
     if by:
-        # hash-repartition on the group keys + ONE mapInPandas call per
-        # partition, instead of groupBy().applyInPandas: the latter
-        # ships each group as its own Arrow batch and invokes the UDF
-        # per group, whose per-call overhead dominates when groups are
-        # small (r6: 0.68s -> 0.54s on the 80-group month query). Same
-        # shuffle (AQE still coalesces the keyless-size repartition),
-        # same result: every group's blobs co-locate, and the in-task
-        # pandas groupby merges them with identical semantics
-        # (dropna=False keeps null group keys, like applyInPandas).
-        def merge_partition(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            frames = [pdf for pdf in batches if len(pdf)]
-            if not frames:
-                return
-            pdf = (
-                pd.concat(frames, ignore_index=True)
-                if len(frames) > 1
-                else frames[0]
-            )
-            rows: dict[str, list] = {k: [] for k in by}
-            rows["sketch"] = []
-            rows["rows_seen"] = []
-            for key, idx in pdf.groupby(by, sort=False, dropna=False).indices.items():
-                key = key if isinstance(key, tuple) else (key,)
-                for i, k in enumerate(by):
-                    rows[k].append(key[i])
-                rows["sketch"].append(_merge_blobs(spec, pdf["sketch"].iloc[idx]))
-                rows["rows_seen"].append(int(pdf["rows_seen"].iloc[idx].sum()))
-            yield pd.DataFrame(rows)
-
-        return partials.repartition(*[F.col(k) for k in by]).mapInPandas(
-            merge_partition, out_schema
-        )
-
-    stage = partials
+        return _merge(partials, spec, by)
+    if two_level is None:
+        two_level = _estimate_partials_partitions(partials) > 4096
     if two_level:
-        stage = partials.groupBy("bucket").applyInPandas(
-            lambda pdf: pd.DataFrame(
-                {
-                    "sketch": [_merge_blobs(spec, pdf["sketch"])],
-                    "rows_seen": [int(pdf["rows_seen"].sum())],
-                }
-            ),
-            StructType(
-                [
-                    StructField("sketch", BinaryType()),
-                    StructField("rows_seen", LongType()),
-                ]
-            ),
-        )
-    return (
-        stage.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(merge_group, out_schema)
-    )
+        partials = _merge(partials, spec, ["bucket"])
+    return _merge(partials, spec, [])
 
 
 def sketch_aggregate(
@@ -570,91 +559,60 @@ def hll_intersect_udf():
     return hll_intersect
 
 
-def hll_overlap_matrix(
+def _overlap_matrix(
     df: DataFrame,
     col: str,
     group_col: str,
-    cfg: HllConfig | None = None,
-    hash_mode: str = "xxhash64",
-    merge_buckets: int = 16,
+    spec: SketchSpec,
+    estimate: Callable[[Any], Any],
+    pair_fn: Callable[[Any, Any], tuple],
+    est_type,
+    hash_mode: str,
 ) -> DataFrame:
-    """All-pairs audience overlap from ONE scan of the base table.
+    """All-pairs overlap from ONE scan of the base table, for any
+    distinct-count sketch.
 
-    Builds one HLL sketch per ``group_col`` cell (the usual two-level
-    blob build), then answers every pairwise
-    union / intersection / Jaccard estimate from the k sketch blobs
-    alone — the second-order query sketches exist for: re-running
-    COUNT(DISTINCT) per pair needs O(k^2) passes or a k-way expansion
-    of the base table, this needs the one grouped build plus a k-row
-    self-join (broadcast by construction; k = group count).
-
-    Output, one row per unordered pair (g_a < g_b):
-    (g_a, g_b, distinct_a, distinct_b, union_est, intersect_est,
-    jaccard_est). Intersection is inclusion-exclusion, so its error
-    compounds both sketches' errors (small-overlap caveat,
-    README.md:74-81); everything is EXACT while every group and every
-    pairwise union stays within the EXPLICIT tier — the regime the
-    oracle tests pin.
+    ``estimate(sketch)`` is a group's distinct estimate and
+    ``pair_fn(a, b)`` returns ``(union_est, intersect_est)`` without
+    mutating either side. Output, one row per unordered pair
+    (g_a < g_b): (g_a, g_b, distinct_a, distinct_b, union_est,
+    intersect_est, jaccard_est), the first three estimates as
+    ``est_type``, the last two as doubles. NULL group keys form no pair.
 
     Plan shape: the base table is scanned exactly ONCE (a self-join on
     the grouped agg would recompute the whole build — Spark does not
-    reuse the exchange across the broadcast/probe sides). The g-row
-    blob frame is gathered into a single ``applyInPandas`` task (same
-    data volume a broadcast would move) which emits the full matrix;
-    the pair arithmetic is O(groups^2) over KB blobs, trivially small
-    wherever an all-pairs matrix is a sensible ask.
+    reuse the exchange across the broadcast/probe sides). Only the
+    level-0 partials are built: the per-group merge would add a keyed
+    shuffle + Python stage whose whole output funnels into the ONE
+    matrix-emit task anyway, so that task folds the
+    (partition x group) blobs per group itself (same data volume a
+    broadcast would move), then answers every pair — O(groups^2)
+    arithmetic over KB blobs, trivially small wherever an all-pairs
+    matrix is a sensible ask.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import DoubleType
 
-    from ..sketchlib.hll import HllSketch, hll_intersect_estimate
-
-    # level-0 partials only: the per-group tree merge would add a
-    # keyed shuffle + a Python merge stage whose entire output is
-    # immediately funneled into the ONE matrix-emit task below — merge
-    # the (partition x group) blobs there instead (same single-reducer
-    # funnel either way; union order is irrelevant, HLL union is
-    # byte-canonical)
-    sk = sketch_partials(df, col, hll_spec(cfg), [group_col], hash_mode)
+    sk = sketch_partials(df, col, spec, [group_col], hash_mode)
     gtype = sk.schema[group_col].dataType
     out_schema = StructType(
-        [
-            StructField("g_a", gtype),
-            StructField("g_b", gtype),
-            StructField("distinct_a", LongType()),
-            StructField("distinct_b", LongType()),
-            StructField("union_est", LongType()),
-            StructField("intersect_est", DoubleType()),
-            StructField("jaccard_est", DoubleType()),
-        ]
+        [StructField("g_a", gtype), StructField("g_b", gtype)]
+        + [StructField(n, est_type) for n in ("distinct_a", "distinct_b", "union_est")]
+        + [StructField(n, DoubleType()) for n in ("intersect_est", "jaccard_est")]
     )
 
     def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # a NULL group key never joins under the former g_a < g_b
-        # condition; keep that contract
         pdf = pdf[pdf[group_col].notna()]
-        # merge the level-0 partial blobs per group (moved here from
-        # the former per-group merge stage; see the build note above)
-        merged: dict = {}
-        for g, blob in zip(pdf[group_col], pdf["sketch"]):
-            s = HllSketch.from_bytes(bytes(blob))
-            if g in merged:
-                merged[g] = merged[g].union(s)
-            else:
-                merged[g] = s
+        merged = {
+            g: _fold(spec, pdf["sketch"].iloc[idx])
+            for g, idx in pdf.groupby(group_col, sort=False).indices.items()
+        }
         groups = sorted(merged)
         sketches = [merged[g] for g in groups]
-        blobs = [s.to_bytes() for s in sketches]
-        ests = [s.estimate() for s in sketches]
+        ests = [estimate(s) for s in sketches]
         rows = []
         for i in range(len(groups)):
             for j in range(i + 1, len(groups)):
-                union = sketches[i].clone().union(sketches[j]).estimate()
-                inter = hll_intersect_estimate(blobs[i], blobs[j])
+                union, inter = pair_fn(sketches[i], sketches[j])
                 rows.append(
                     (
                         groups[i],
@@ -671,4 +629,39 @@ def hll_overlap_matrix(
     return (
         sk.groupBy(F.lit(0).alias("__all"))
         .applyInPandas(lambda _, pdf: emit_pairs(pdf), out_schema)
+    )
+
+
+def hll_overlap_matrix(
+    df: DataFrame,
+    col: str,
+    group_col: str,
+    cfg: HllConfig | None = None,
+    hash_mode: str = "xxhash64",
+    merge_buckets: int = 16,
+) -> DataFrame:
+    """All-pairs audience overlap from ONE scan of the base table.
+
+    Builds one HLL sketch per ``group_col`` cell, then answers every
+    pairwise union / intersection / Jaccard estimate from the k sketch
+    blobs alone — the second-order query sketches exist for: re-running
+    COUNT(DISTINCT) per pair needs O(k^2) passes or a k-way expansion
+    of the base table, this needs the one grouped build plus a single
+    emit task (k = group count; plan shape in :func:`_overlap_matrix`).
+
+    Output, one row per unordered pair (g_a < g_b):
+    (g_a, g_b, distinct_a, distinct_b, union_est, intersect_est,
+    jaccard_est), distinct/union estimates as longs. Intersection is
+    inclusion-exclusion, so its error compounds both sketches' errors
+    (small-overlap caveat, README.md:74-81); everything is EXACT while
+    every group and every pairwise union stays within the EXPLICIT
+    tier — the regime the oracle tests pin.
+    """
+
+    def pair(a: HllSketch, b: HllSketch) -> tuple:
+        u = a.clone().union(b)
+        return u.estimate(), a.estimate_float() + b.estimate_float() - u.estimate_float()
+
+    return _overlap_matrix(
+        df, col, group_col, hll_spec(cfg), HllSketch.estimate, pair, LongType(), hash_mode
     )

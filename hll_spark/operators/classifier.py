@@ -184,11 +184,15 @@ def fit_quality_classifier(
     # separate bias frame, but each GD iteration drops the second
     # error-aggregate subtree (the per-iteration err recompute +
     # broadcast + crossJoin) and the scoring join needs no left-join
-    # fallback, since every doc carries at least the bias row.
+    # fallback, since every doc carries at least the bias row. Feature
+    # rows are distinct per doc, so the bias row must be too (a
+    # duplicated training row would otherwise count the bias twice).
     feats = (
         hashed_features(train, text_col, id_col, n_features, bigrams, seed)
         .unionByName(
-            labels.select(id_col, F.lit(-1).cast("long").alias("feat"))
+            labels.select(id_col)
+            .distinct()
+            .select(id_col, F.lit(-1).cast("long").alias("feat"))
         )
         .persist()
     )

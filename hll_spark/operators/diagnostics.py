@@ -509,6 +509,27 @@ def _multi_theta_sketches(
     )
 
 
+def _plan_hash(df: DataFrame):
+    return df._jdf.queryExecution().analyzed().semanticHash()
+
+
+def _same_source(a: DataFrame, b: DataFrame) -> bool:
+    """Whether two frames compute the same result: the analyzed plans'
+    32-bit semantic hashes match AND ``sameResult`` confirms it (a hash
+    collision must not merge two tables' scans). Object identity where
+    the plans are unavailable (non-JVM backends)."""
+    if a is b:
+        return True
+    try:
+        return _plan_hash(a) == _plan_hash(b) and bool(
+            a._jdf.queryExecution().analyzed().sameResult(
+                b._jdf.queryExecution().analyzed()
+            )
+        )
+    except Exception:
+        return False
+
+
 def fk_containment_report(
     columns,
     k: int = 65536,
@@ -569,20 +590,17 @@ def fk_containment_report(
     # group the requested columns by their source plan so one TABLE is
     # scanned once however many of its columns are profiled (the TPC-H
     # driver query reads two orders columns — previously two full
-    # scans; at 100 TB each duplicate scan is a full pass). Grouping
-    # key: the analyzed plan's semantic hash, object identity as the
-    # fallback for non-JVM backends.
-    def _pkey(df: DataFrame):
-        try:
-            return df._jdf.queryExecution().analyzed().semanticHash()
-        except Exception:
-            return id(df)
-
-    by_src: dict = {}
+    # scans; at 100 TB each duplicate scan is a full pass).
+    by_src: list = []  # (df, [(col, lbl), ...]) per distinct source plan
     for df, col, lbl in cols:
-        by_src.setdefault(_pkey(df), (df, []))[1].append((col, lbl))
+        for src, col_lbls in by_src:
+            if _same_source(src, df):
+                col_lbls.append((col, lbl))
+                break
+        else:
+            by_src.append((df, [(col, lbl)]))
     frames = []
-    for _, (df, col_lbls) in by_src.items():
+    for df, col_lbls in by_src:
         if len(col_lbls) == 1:
             col, lbl = col_lbls[0]
             sk = theta_sketch_agg(

@@ -231,128 +231,85 @@ def extract_sketch_agg(
 
     Composing ``extract_pages(engine='arrow')`` with ``hll_sketch_agg``
     would ship every extracted string back to the JVM and (for
-    murmur3) out to Python again. This operator extracts, hashes
-    (murmur3_x64_128 low64, the reference's hash — hll.go:41) and
-    updates the HLL register state inside the same Arrow batch, so the
-    only bytes that ever leave a worker are the per-partition sketch
-    blobs (~KB) — the two-level tree merge then proceeds exactly as in
-    ``sketch_aggregate``. Returns the standard one-row sketch frame
-    (``sketch binary, rows_seen long``).
+    murmur3) out to Python again. This operator is the shared
+    partial -> merge scaffold (agg.py) with an HLL spec whose update
+    extracts, hashes (murmur3_x64_128 low64, the reference's hash —
+    hll.go:41) and inserts inside the same Arrow batch, so the only
+    bytes that ever leave a worker are the per-partition sketch blobs
+    (~KB). Null pages contribute no text. Returns the standard one-row
+    sketch frame (``sketch binary, rows_seen long``).
     """
+    import dataclasses
+
     import numpy as np
     import pandas as pd
     import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-    from pyspark import TaskContext
 
-    from .agg import hll_spec, merge_sketch_partials
+    from .agg import hll_spec, sketch_aggregate
     from .extractkernel import _DECODE_PASSES, extract_text_spans
     from ..sketchlib.hashing import (
         murmur3_low64_from_buffers,
         murmur3_x64_128_low64,
     )
 
-    spec = hll_spec(cfg)
-    out_schema = StructType(
-        [
-            StructField("bucket", LongType()),
-            StructField("sketch", BinaryType()),
-            StructField("rows_seen", LongType()),
-        ]
-    )
-    arrow_out = pa.schema(
-        [
-            ("bucket", pa.int64()),
-            ("sketch", pa.binary()),
-            ("rows_seen", pa.int64()),
-        ]
-    )
+    hll = hll_spec(cfg)
 
-    def build(batches):
-        # mapInArrow: the html bytes feed the extraction kernel ZERO-
-        # COPY from the Arrow binary buffers (the kernel's flat layout
-        # IS Arrow's data+offsets layout and it never writes to the
-        # input), and the extracted texts are hashed as utf-8 bytes
-        # without ever decoding to str — no pandas objects anywhere.
+    def update(state, arrays):
+        # the html bytes feed the extraction kernel ZERO-COPY from the
+        # Arrow binary buffers (the kernel's flat layout IS Arrow's
+        # data+offsets layout and it never writes to the input), and
+        # the extracted texts are hashed as utf-8 bytes without ever
+        # decoding to str — no pandas objects on the common path.
         # SEMANTICS: distinctness is over the extracted BYTES (the
         # input-hint's byte-identity invariant). On malformed-UTF-8
         # documents this differs from a decode-then-hash engine, where
         # distinct byte sequences can collapse into the same U+FFFD-
         # replaced string — byte distinctness is the intended contract.
-        state = spec.zero_fn()
-        rows = 0
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            arr = rb.column(0)
-            if pa.types.is_large_binary(arr.type) or pa.types.is_large_string(
-                arr.type
-            ):
-                off_dtype = np.int64
-            else:
-                off_dtype = np.int32
-            bufs = arr.buffers()
-            raw_off = np.frombuffer(bufs[1], dtype=off_dtype)[
-                arr.offset : arr.offset + len(arr) + 1
-            ].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            base = int(raw_off[0])
-            flat = data[base : int(raw_off[-1])]
-            offs = raw_off - base
-            null_mask = (
-                np.asarray(arr.is_null())
-                if arr.null_count
-                else np.zeros(len(arr), dtype=bool)
+        arr = arrays[0]
+        if pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type):
+            off_dtype = np.int64
+        else:
+            off_dtype = np.int32
+        bufs = arr.buffers()
+        raw_off = np.frombuffer(bufs[1], dtype=off_dtype)[
+            arr.offset : arr.offset + len(arr) + 1
+        ].astype(np.int64)
+        data = np.frombuffer(bufs[2], dtype=np.uint8)
+        base = int(raw_off[0])
+        flat = data[base : int(raw_off[-1])]
+        out, s_fin, e_fin, _, has_amp = extract_text_spans(flat, raw_off - base)
+        # span fast path: every doc WITHOUT an '&' in its extracted span
+        # (entity decode is a provable no-op) hashes straight from the
+        # kernel's collapsed buffer — zero per-doc Python objects; empty
+        # docs ride along as zero-length spans
+        plain = ~has_amp
+        if plain.any():
+            hashes = murmur3_low64_from_buffers(
+                out, s_fin[plain], (e_fin - s_fin)[plain]
             )
-            out, s_fin, e_fin, empty, has_amp = extract_text_spans(flat, offs)
-            nonnull = ~null_mask
-            # span fast path: every non-null doc WITHOUT an '&' in its
-            # extracted span (entity decode is a provable no-op) hashes
-            # straight from the kernel's collapsed buffer — zero per-doc
-            # Python objects; empty docs ride along as zero-length spans
-            plain = nonnull & ~has_amp
-            if plain.any():
-                hashes = murmur3_low64_from_buffers(
-                    out, s_fin[plain], (e_fin - s_fin)[plain]
-                )
-                state = spec.update_fn(state, hashes.view("int64"))
-            # entity-bearing minority: per-doc decode passes, then the
-            # object-Series hash kernel (same bytes the flat path emits)
-            amp_docs = np.nonzero(nonnull & has_amp)[0]
-            if len(amp_docs):
-                big = out.tobytes()
-                decoded = []
-                for d in amp_docs:
-                    b = big[s_fin[d]:e_fin[d]]
-                    for pat, rep in _DECODE_PASSES:
-                        if pat in b:
-                            b = b.replace(pat, rep)
-                    decoded.append(b)
-                state = spec.update_fn(
-                    state,
-                    murmur3_x64_128_low64(pd.Series(decoded)).view("int64"),
-                )
-            # null html rows don't contribute a text; rows_seen counts
-            # sketched values, matching sketch_partials' null filter
-            rows += int(nonnull.sum())
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "bucket": [pid % merge_buckets],
-                "sketch": [spec.to_bytes_fn(state)],
-                "rows_seen": [rows],
-            },
-            schema=arrow_out,
-        )
+            state = hll.update_fn(state, hashes.view("int64"))
+        # entity-bearing minority: per-doc decode passes, then the
+        # object-Series hash kernel (same bytes the flat path emits)
+        amp_docs = np.nonzero(has_amp)[0]
+        if len(amp_docs):
+            big = out.tobytes()
+            decoded = []
+            for d in amp_docs:
+                b = big[s_fin[d]:e_fin[d]]
+                for pat, rep in _DECODE_PASSES:
+                    if pat in b:
+                        b = b.replace(pat, rep)
+                decoded.append(b)
+            state = hll.update_fn(
+                state,
+                murmur3_x64_128_low64(pd.Series(decoded)).view("int64"),
+            )
+        return state
 
-    partials = df.select(html_col).mapInArrow(build, out_schema)
-    return merge_sketch_partials(partials, spec, by=None)
+    spec = dataclasses.replace(hll, name="extract_hll", update_fn=update)
+    return sketch_aggregate(
+        df, F.col(html_col), spec, hash_mode="arrow", merge_buckets=merge_buckets
+    )
 
 
 # -- page metadata extraction ------------------------------------------------

@@ -39,22 +39,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 BOS = "<s>"
 UNK = "<unk>"
 
-# training inputs estimated above this (logical-plan stats) get the
-# fitted model cached so its two broadcast consumers share one
-# aggregation; below it the duplicate tiny aggregates overlap on idle
-# cores and the cache costs more than it saves (see fit_bigram_lm)
-_LM_CKPT_MIN_BYTES = int(
-    __import__("os").environ.get("HLL_SPARK_LM_CKPT_MIN_BYTES", str(1 << 30))
-)
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Optimized-logical-plan size estimate in bytes (0 when stats are
-    unavailable — callers treat that as 'small')."""
-    from .scanutil import plan_bytes
-
-    return plan_bytes(df)
-
 # Java's \s byte set, pinned explicitly so the SQL mirror can use the
 # identical class (RE2's \s lacks \x0B)
 _WS = "[ \\t\\n\\x0B\\f\\r]+"
@@ -184,7 +168,9 @@ def fit_bigram_lm(
     # pure overhead (interleaved A/B, r6: +0.2 s at sf0.1), so the cut
     # is gated on the plan-stats size of the training input — a scale
     # decision from input statistics, not a local-mode constant.
-    if _plan_bytes(train) > _LM_CKPT_MIN_BYTES:
+    from .scanutil import LINEAGE_CUT_MIN_BYTES, plan_bytes
+
+    if plan_bytes(train) > LINEAGE_CUT_MIN_BYTES:
         model = model.localCheckpoint(eager=False)
     contexts = model.groupBy("w_prev").agg(F.sum("cnt").alias("ctx"))
     return vocab, model, contexts, v_eff

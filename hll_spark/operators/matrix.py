@@ -1,13 +1,12 @@
 """Distributed Frequent Directions over an embedding column.
 
-Same two-level build shape as every sketch in this package
-(SURVEY.md §3.4: level-0 mapInPandas partials per input partition,
-level-1 bucketed applyInPandas tree merge, level-2 driver merge of
-<= merge_buckets KB..MB blobs) — only sketch blobs ever cross the
-shuffle, never embedding rows, so the plan is the one a 10^12-row
-covariance job wants. The kernel is sketchlib/fd.py (Liberty KDD'13);
-see that module for the spectral guarantee and the exact regime the
-driver oracle pins.
+The build is the shared partial -> merge scaffold (agg.py) with an FD
+spec over the ``array`` column (``hash_mode='arrow'``): level-0 partials
+per (input partition, group), then one merge stage — only sketch blobs
+ever cross the shuffle, never embedding rows, so the plan is the one a
+10^12-row covariance job wants. The kernel is sketchlib/fd.py (Liberty
+KDD'13); see that module for the spectral guarantee and the exact
+regime the driver oracle pins.
 """
 
 from __future__ import annotations
@@ -17,85 +16,46 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
-    LongType,
     StructField,
     StructType,
 )
 
 from ..sketchlib.fd import FDSketch
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("bucket", LongType()),
-        StructField("sketch", BinaryType()),
-        StructField("rows_seen", LongType()),
-    ]
-)
+from .agg import SketchSpec, sketch_aggregate
 
 
-def _stack(series: pd.Series) -> np.ndarray:
-    """(n, dim) float64 from an Arrow list column's pandas form,
-    nulls dropped."""
-    vals = [v for v in series if v is not None]
-    if not vals:
-        return np.empty((0, 0))
-    return np.stack([np.asarray(v, dtype=np.float64) for v in vals])
+def _block(arr) -> np.ndarray:
+    """(n, dim) float64 from an Arrow list array of non-null rows."""
+    lengths = arr.value_lengths().to_numpy(zero_copy_only=False)
+    dim = int(lengths[0]) if len(lengths) else 0
+    if (lengths != dim).any():
+        raise ValueError("embedding rows must all have the same width")
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(arr), dim)
 
 
-def fd_partials(
-    df: DataFrame,
-    col: str,
-    ell: int,
-    merge_buckets: int = 16,
-) -> DataFrame:
-    """One FD partial per input partition: (bucket, sketch, rows_seen)."""
+def fd_spec(ell: int) -> SketchSpec:
+    """FD spec over one array column (the scaffold's
+    ``hash_mode='arrow'``); the zero state takes its width from the
+    first non-empty block, and zero-width rows are skipped."""
     if ell < 1:
         raise ValueError("ell must be >= 1")
-    proj = df.where(F.col(col).isNotNull()).select(F.col(col).alias("v"))
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: FDSketch | None = None
-        for b in batches:
-            if not len(b):
-                continue
-            block = _stack(b["v"])
-            if not block.size:
-                continue
-            if state is None:
-                state = FDSketch(ell, block.shape[1])
-            state.update(block)
-        if state is None:
-            return
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        yield pd.DataFrame(
-            {
-                "bucket": [pid % merge_buckets],
-                "sketch": [state.to_bytes()],
-                "rows_seen": [state.rows_seen],
-            }
-        )
+    def update(state: FDSketch, arrays) -> FDSketch:
+        block = _block(arrays[0])
+        return state.update(block) if block.size else state
 
-    return proj.mapInPandas(build, _PARTIAL_SCHEMA)
-
-
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    acc: FDSketch | None = None
-    for blob in pdf["sketch"]:
-        sk = FDSketch.from_bytes(bytes(blob))
-        acc = sk if acc is None else acc.merge(sk)
-    return pd.DataFrame(
-        {
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "sketch": [acc.to_bytes()],
-            "rows_seen": [int(pdf["rows_seen"].sum())],
-        }
+    return SketchSpec(
+        name="fd",
+        zero_fn=lambda: FDSketch(ell, None),
+        update_fn=update,
+        merge_fn=lambda a, b: a.merge(b),
+        to_bytes_fn=lambda s: s.to_bytes(),
+        from_bytes_fn=FDSketch.from_bytes,
     )
 
 
@@ -105,21 +65,15 @@ def fd_sketch(
     ell: int,
     merge_buckets: int = 16,
 ) -> FDSketch:
-    """Build and fully merge the distributed FD sketch.
-
-    The driver touches only the <= merge_buckets level-1 blobs."""
-    partials = fd_partials(df, col, ell, merge_buckets)
-    level1 = partials.groupBy("bucket").applyInPandas(
-        _merge_group, _PARTIAL_SCHEMA
-    )
-    rows = level1.collect()
-    if not rows:
+    """Build and fully merge the distributed FD sketch; the driver
+    receives the one merged blob."""
+    row = sketch_aggregate(
+        df, F.col(col), fd_spec(ell), hash_mode="arrow", merge_buckets=merge_buckets
+    ).first()
+    sk = FDSketch.from_bytes(bytes(row["sketch"]))
+    if not sk.rows_seen:
         raise ValueError(f"no non-null rows in column {col!r}")
-    acc: FDSketch | None = None
-    for r in sorted(rows, key=lambda r: r["bucket"]):
-        sk = FDSketch.from_bytes(bytes(r["sketch"]))
-        acc = sk if acc is None else acc.merge(sk)
-    return acc
+    return sk
 
 
 def fd_gram_by(
@@ -127,112 +81,40 @@ def fd_gram_by(
     col: str,
     by: list[str],
     ell: int,
-    max_groups: int = 4096,
 ) -> DataFrame:
     """Per-group FD: one sketch per ``by`` cell, fully distributed.
 
-    Level 0 emits one partial per (input partition, group) — the
-    map-side combine that keeps a 10^12-row grouped covariance job
-    from shuffling embedding rows; level 1 merges per group under
-    ``groupBy(*by).applyInPandas`` and expands each group's sketched
-    Gram matrix to (by..., i, j, gram) rows (dim^2 per group).
-    ``max_groups`` caps level-0 worker memory on high-cardinality
-    keys (same early-flush rule as agg.py's grouped build: duplicate
-    partials per group are fine, level 1 merges them).
-
-    (Deliberately NOT folded into agg.py's SketchSpec scaffold: that
-    path projects one scalar/hashed value column through
-    _value_expr/_arrow_values; FD consumes array rows, so sharing the
-    scaffold would mean teaching the scalar hot path about arrays.)"""
-    if ell < 1:
-        raise ValueError("ell must be >= 1")
+    The scaffold's grouped build (per-(input partition, group)
+    partials, merged on the group keys) yields one sketch per group;
+    each group's sketched Gram matrix then expands JVM-side to
+    (by..., i, j, gram) rows (dim^2 per group)."""
     if not by:
         raise ValueError("by must name at least one grouping column")
-    if max_groups < 1:
-        raise ValueError("max_groups must be >= 1")
-    reserved = {"__fd_v", "i", "j", "gram", "sketch", "rows_seen"}
+    reserved = {"__v0", "__g", "__dim", "__p", "i", "j", "gram", "sketch", "rows_seen"}
     clash = reserved.intersection(by)
     if clash:
         raise ValueError(
             f"grouping column(s) {sorted(clash)} collide with the "
             "operator's output/internal names; rename them first"
         )
-    proj = df.where(F.col(col).isNotNull()).select(
-        *by, F.col(col).alias("__fd_v")
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(ArrayType(DoubleType()))
+    def gram(blobs: pd.Series) -> pd.Series:
+        return blobs.map(lambda b: FDSketch.from_bytes(bytes(b)).gram().ravel())
+
+    merged = sketch_aggregate(
+        df, F.col(col), fd_spec(ell), by, hash_mode="arrow"
+    ).select(*by, gram("sketch").alias("__g"))
+    dim = F.sqrt(F.size("__g")).cast("long")
+    return merged.select(
+        *by, dim.alias("__dim"), F.posexplode("__g").alias("__p", "gram")
+    ).select(
+        *by,
+        F.expr("__p div __dim").alias("i"),
+        (F.col("__p") % F.col("__dim")).alias("j"),
+        "gram",
     )
-    by_fields = [proj.schema[b] for b in by]
-    partial_schema = StructType(
-        by_fields
-        + [
-            StructField("sketch", BinaryType()),
-            StructField("rows_seen", LongType()),
-        ]
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict = {}
-
-        def flush():
-            keys = list(states)
-            out = pd.DataFrame(
-                {
-                    **{
-                        b: [k[i] for k in keys]
-                        for i, b in enumerate(by)
-                    },
-                    "sketch": [states[k].to_bytes() for k in keys],
-                    "rows_seen": [states[k].rows_seen for k in keys],
-                }
-            )
-            states.clear()
-            return out
-
-        for b in batches:
-            if not len(b):
-                continue
-            for key, grp in b.groupby(by, sort=False, dropna=False):
-                block = _stack(grp["__fd_v"])
-                if not block.size:
-                    continue
-                key = key if isinstance(key, tuple) else (key,)
-                st = states.get(key)
-                if st is None:
-                    st = states[key] = FDSketch(ell, block.shape[1])
-                st.update(block)
-            if len(states) >= max_groups:
-                yield flush()
-        if states:
-            yield flush()
-
-    partials = proj.mapInPandas(build, partial_schema)
-    out_schema = StructType(
-        by_fields
-        + [
-            StructField("i", LongType()),
-            StructField("j", LongType()),
-            StructField("gram", DoubleType()),
-        ]
-    )
-
-    def merge_expand(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: FDSketch | None = None
-        for blob in pdf["sketch"]:
-            sk = FDSketch.from_bytes(bytes(blob))
-            acc = sk if acc is None else acc.merge(sk)
-        g = acc.gram()
-        dim = g.shape[0]
-        ii, jj = np.meshgrid(
-            np.arange(dim), np.arange(dim), indexing="ij"
-        )
-        out = {
-            b: np.repeat(pdf[b].iloc[0], dim * dim) for b in by
-        }
-        out["i"] = ii.ravel().astype(np.int64)
-        out["j"] = jj.ravel().astype(np.int64)
-        out["gram"] = g.ravel()
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*by).applyInPandas(merge_expand, out_schema)
 
 
 def project_embeddings(

@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .scanutil import plan_stats
+
 
 def _range_partitions(df: DataFrame) -> int:
     """Partition count for the phase-1 range shuffle, from logical-plan
@@ -55,21 +57,14 @@ def _range_partitions(df: DataFrame) -> int:
     count is CORRECT here (phases 2-3 derive per-partition totals from
     whatever layout phase 1 produced); the estimate only sizes the
     shuffle."""
+    stats = plan_stats(df)
+    if stats is not None:
+        return min(stats[1], 100_000)
     try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        max_pb = int(
-            df.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .filesMaxPartitionBytes()
-        )
-        return max(1, min(-(-size // max(max_pb, 1)), 100_000))
+        return max(df.rdd.getNumPartitions(), 1)
     except Exception:
-        try:
-            return max(df.rdd.getNumPartitions(), 1)
-        except Exception:
-            return 200
+        return 200
+
 
 _MANIFEST_SCHEMA = StructType(
     [

@@ -76,7 +76,7 @@ def clean_corpus(
                 f"is {id_type or 'missing'} — string ids would cast "
                 "to null and silently empty the corpus"
             )
-    from .scanutil import plan_bytes
+    from .scanutil import LINEAGE_CUT_MIN_BYTES, plan_bytes
 
     kept = exact_dedup(df, [text_col], id_col)
     kept = (
@@ -85,7 +85,7 @@ def clean_corpus(
         .where(mean_word_length(text_col).between(lo, hi))
         .where(quality_score(text_col) >= min_quality)
     )
-    if plan_bytes(df) > (1 << 30):
+    if plan_bytes(df) > LINEAGE_CUT_MIN_BYTES:
         # ``kept`` feeds BOTH the near-dup pair finder and the
         # survivor join below; on a LARGE corpus cut the lineage once
         # so the exact dedup + gate filters do not execute per

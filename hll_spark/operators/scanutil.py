@@ -31,28 +31,37 @@ FAN_OUT_MAX_BYTES = int(
 )
 
 
-def _estimated_scan_partitions(df: DataFrame) -> tuple[int, int]:
-    """(estimated split count, estimated bytes) from logical-plan
-    statistics — no job, no physical planning beyond what the coming
-    action does anyway."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    max_pb = int(
-        df.sparkSession._jsparkSession.sessionState()
-        .conf()
-        .filesMaxPartitionBytes()
-    )
-    return max(1, -(-size // max(max_pb, 1))), size
+# training/corpus inputs estimated above this (logical-plan stats) get
+# a lineage cut where a frame feeds several consumers: below it the
+# duplicate subtrees overlap on idle cores and the materialization costs
+# more than it saves (interleaved A/B, r6; re-checked at 10x scale)
+LINEAGE_CUT_MIN_BYTES = 1 << 30
+
+
+def plan_stats(df: DataFrame) -> tuple[int, int] | None:
+    """(estimated bytes, estimated split count) from the optimized
+    logical plan's statistics — no job, no physical planning beyond
+    what the coming action does anyway. The split count is the byte
+    estimate over ``files.maxPartitionBytes``. None when statistics are
+    unavailable (a backend without ``_jdf``, e.g. Spark Connect); every
+    caller owns its fallback."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        max_pb = int(
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .filesMaxPartitionBytes()
+        )
+    except Exception:
+        return None
+    return size, max(1, -(-size // max(max_pb, 1)))
 
 
 def plan_bytes(df: DataFrame) -> int:
     """Optimized-logical-plan size estimate in bytes; 0 when stats are
     unavailable (callers treat that as 'not provably large')."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
+    stats = plan_stats(df)
+    return stats[0] if stats is not None else 0
 
 
 def plan_is_small(df: DataFrame, max_bytes: int | None = None) -> bool:
@@ -70,13 +79,8 @@ def plan_is_small(df: DataFrame, max_bytes: int | None = None) -> bool:
     the caller leaves the plan alone."""
     if max_bytes is None:
         max_bytes = FAN_OUT_MAX_BYTES
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return False
-    return size <= max_bytes
+    stats = plan_stats(df)
+    return stats is not None and stats[0] <= max_bytes
 
 
 def fan_out_scan(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
@@ -92,11 +96,11 @@ def fan_out_scan(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
     """
     if max_bytes is None:
         max_bytes = FAN_OUT_MAX_BYTES
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        parts, size = _estimated_scan_partitions(df)
-    except Exception:  # non-classic backend — leave the plan alone
+    stats = plan_stats(df)
+    if stats is None:  # non-classic backend — leave the plan alone
         return df
+    size, parts = stats
+    target = df.sparkSession.sparkContext.defaultParallelism
     if size > max_bytes or parts * 2 >= target:
         return df
     return df.repartition(target)

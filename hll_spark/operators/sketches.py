@@ -812,90 +812,34 @@ def theta_overlap_matrix(
 ) -> DataFrame:
     """All-pairs set overlap from ONE scan, theta edition.
 
-    Same shape as ``agg.hll_overlap_matrix`` — one grouped sketch
-    build, then every unordered pair answered from the k-row blob
-    frame via a broadcast self-join — but the intersection is the
-    theta sketch's DIRECT common-theta estimate, so its error scales
-    with the intersection instead of compounding three
+    Same shape as ``agg.hll_overlap_matrix`` (one grouped sketch build,
+    then every unordered pair answered in a single emit task), but the
+    intersection is the theta sketch's DIRECT common-theta estimate, so
+    its error scales with the intersection instead of compounding three
     inclusion-exclusion terms (the analytical reason to reach for
     theta when overlaps are small relative to the unions). Exact
     whenever every group and every pairwise union stay within k.
 
     Output per pair (g_a < g_b): (g_a, g_b, distinct_a, distinct_b,
     union_est, intersect_est, jaccard_est), estimates as doubles.
-
-    Plan shape: the base table is scanned exactly ONCE (a self-join on
-    the grouped agg would recompute the whole build); the g-row blob
-    frame lands in a single ``applyInPandas`` task that emits the full
-    matrix — O(groups^2) arithmetic over KB blobs.
     """
-    from pyspark.sql.types import StructField, StructType
+    import dataclasses
 
     from ..sketchlib.theta import ThetaSketch
+    from .agg import _overlap_matrix
 
-    # level-0 partials only — the per-group merge stage's whole output
-    # funnels into the ONE matrix-emit task below anyway, so merge the
-    # (partition x group) blobs there (same rationale as
-    # agg.hll_overlap_matrix; theta union is order-insensitive)
-    from .agg import sketch_partials
+    def pair(a: ThetaSketch, b: ThetaSketch) -> tuple:
+        # union() replaces its own values array: give it a throwaway copy
+        union = dataclasses.replace(a).union(b).estimate_float()
+        return union, a.intersect_estimate(b)
 
-    sk = sketch_partials(df, col, theta_spec(k), [group_col], hash_mode)
-    gtype = sk.schema[group_col].dataType
-    out_schema = StructType(
-        [StructField("g_a", gtype), StructField("g_b", gtype)]
-        + [
-            StructField(name, DoubleType())
-            for name in (
-                "distinct_a",
-                "distinct_b",
-                "union_est",
-                "intersect_est",
-                "jaccard_est",
-            )
-        ]
-    )
-
-    def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL group keys never join under the former g_a < g_b
-        # condition; keep that contract
-        pdf = pdf[pdf[group_col].notna()]
-        # merge the level-0 partial blobs per group (moved here from
-        # the former per-group merge stage; see the build note above)
-        merged: dict = {}
-        for g, blob in zip(pdf[group_col], pdf["sketch"]):
-            s = ThetaSketch.from_bytes(bytes(blob))
-            if g in merged:
-                merged[g] = merged[g].union(s)
-            else:
-                merged[g] = s
-        groups = sorted(merged)
-        sketches = [merged[g] for g in groups]
-        blobs = [s.to_bytes() for s in sketches]
-        ests = [s.estimate_float() for s in sketches]
-        rows = []
-        for i in range(len(groups)):
-            for j in range(i + 1, len(groups)):
-                # union() mutates self: give it a throwaway copy
-                union = (
-                    ThetaSketch.from_bytes(blobs[i])
-                    .union(sketches[j])
-                    .estimate_float()
-                )
-                inter = sketches[i].intersect_estimate(sketches[j])
-                rows.append(
-                    (
-                        groups[i],
-                        groups[j],
-                        ests[i],
-                        ests[j],
-                        union,
-                        inter,
-                        inter / union if union > 0 else 0.0,
-                    )
-                )
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return (
-        sk.groupBy(F.lit(0).alias("__all"))
-        .applyInPandas(lambda _, pdf: emit_pairs(pdf), out_schema)
+    return _overlap_matrix(
+        df,
+        col,
+        group_col,
+        theta_spec(k),
+        ThetaSketch.estimate_float,
+        pair,
+        DoubleType(),
+        hash_mode,
     )

@@ -2,31 +2,27 @@
 Chabchoub-Hebrail sliding-HLL sketch in one pass, then answer ANY
 trailing time window from the final blob.
 
-Execution shape is the standard two-level sketch tree (SURVEY.md §3.4):
+The build is the shared partial -> merge scaffold (agg.py) with a
+sliding-HLL spec over two JVM-side inputs per row:
 
   scan (Catalyst prunes to [col, ts])
-    -> JVM-side xxhash64 + unix_micros projection (whole-stage codegen)
-    -> mapInArrow: one partial sliding sketch per input partition
-    -> groupBy(bucket).applyInPandas: level-1 merges
-    -> single final merge -> per-window estimates exploded from 1 row
+    -> xxhash64(col) + unix_micros(ts) (whole-stage codegen)
+    -> mapInArrow: one partial sliding sketch per (input partition, group)
+    -> merge stage (global or per group) -> per-window estimates
 
-Only O(partitions) sketch blobs (each O(m ln n)) ever cross the
-shuffle, independent of input size — the same property as the base HLL
-scaffold (agg.py), so the plan survives a 10^12-row scan. The window
-answers come AFTER the scan: one pass serves every window, where naive
-per-window COUNT(DISTINCT) would rescan per window.
+Only O(partitions x groups) sketch blobs (each O(m ln n)) ever cross
+the shuffle, independent of input size, so the plan survives a
+10^12-row scan. The window answers come AFTER the scan: one pass
+serves every window, where naive per-window COUNT(DISTINCT) would
+rescan per window.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -35,18 +31,43 @@ from pyspark.sql.types import (
 
 from ..sketchlib.hll import HllConfig
 from ..sketchlib.slidinghll import SlidingHll
+from .agg import SketchSpec, sketch_aggregate
 
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("bucket", LongType()),
-        StructField("sketch", BinaryType()),
+
+def sliding_spec(cfg: HllConfig | None, explicit_threshold: int) -> SketchSpec:
+    """Sliding-HLL spec over ``[xxhash64(col), unix_micros(ts)]`` Arrow
+    inputs (the scaffold's ``hash_mode='arrow'``)."""
+    cfg = cfg or HllConfig()
+
+    def update(state: SlidingHll, arrays) -> SlidingHll:
+        h, t = (a.to_numpy(zero_copy_only=False) for a in arrays)
+        return state.add_hashed(h, t)
+
+    return SketchSpec(
+        name="sliding_hll",
+        zero_fn=lambda: SlidingHll(cfg, explicit_threshold),
+        update_fn=update,
+        merge_fn=lambda a, b: a.merge(b),
+        to_bytes_fn=lambda s: s.to_bytes(),
+        from_bytes_fn=SlidingHll.from_bytes,
+    )
+
+
+def _sliding_sketches(df, col, ts_col, by, cfg, explicit_threshold, merge_buckets=16):
+    # the hash is never NULL, so the null filter on col happens here; the
+    # scaffold's filter covers the timestamp input
+    inputs = [
+        F.xxhash64(F.col(col)),
+        F.unix_micros(F.col(ts_col).cast("timestamp")),
     ]
-)
-
-# bound the per-partition combine map (same contract as agg.py's grouped
-# scaffold): beyond this many concurrent groups flush partials early —
-# the merge stage unions duplicate blobs, so correctness is unaffected
-_MAX_GROUPS = 65536
+    return sketch_aggregate(
+        df.where(F.col(col).isNotNull()),
+        inputs,
+        sliding_spec(cfg, explicit_threshold),
+        by,
+        hash_mode="arrow",
+        merge_buckets=merge_buckets,
+    ).select(*(by or []), "sketch")
 
 
 def sliding_hll_sketch(
@@ -59,50 +80,9 @@ def sliding_hll_sketch(
 ) -> DataFrame:
     """One-row DataFrame ``(sketch binary)`` holding the merged sliding
     sketch of ``col`` distincts with ``ts_col`` event times (micros)."""
-    cfg = cfg or HllConfig()
-    proj = df.where(F.col(col).isNotNull() & F.col(ts_col).isNotNull()).select(
-        F.xxhash64(F.col(col)).alias("__v"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__t"),
+    return _sliding_sketches(
+        df, col, ts_col, None, cfg, explicit_threshold, merge_buckets
     )
-
-    import pyarrow as pa
-
-    arrow_schema = pa.schema([("bucket", pa.int64()), ("sketch", pa.binary())])
-    nbuckets = max(1, merge_buckets)
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from pyspark import TaskContext
-
-        state = SlidingHll(cfg, explicit_threshold)
-        seen = False
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            seen = True
-            h = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            t = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            state.add_hashed(h, t)
-        if seen:
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            yield pa.RecordBatch.from_pydict(
-                {"bucket": [pid % nbuckets], "sketch": [state.to_bytes()]},
-                schema=arrow_schema,
-            )
-
-    partials = proj.mapInArrow(build, _PARTIAL_SCHEMA)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf["sketch"]:
-            s = SlidingHll.from_bytes(bytes(blob))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({"bucket": [0], "sketch": [acc.to_bytes()]})
-
-    level1 = partials.groupBy("bucket").applyInPandas(merge_group, _PARTIAL_SCHEMA)
-    final = level1.groupBy(F.lit(0).alias("bucket")).applyInPandas(
-        merge_group, _PARTIAL_SCHEMA
-    )
-    return final.select("sketch")
 
 
 def sliding_hll_sketch_by(
@@ -113,67 +93,10 @@ def sliding_hll_sketch_by(
     cfg: HllConfig | None = None,
     explicit_threshold: int = 0,
 ) -> DataFrame:
-    """Per-group sliding sketches: ``(by..., sketch, max_ts)`` — one
-    blob per group. Same two-level shape as the grouped scaffold
-    (agg.py): mapInPandas builds per-(input partition, group) partials
-    with a bounded combine map, then groupBy(by).applyInPandas merges —
-    only blobs shuffle, O(groups) final rows."""
-    cfg = cfg or HllConfig()
-    not_null = F.col(col).isNotNull() & F.col(ts_col).isNotNull()
-    proj = df.where(not_null).select(
-        *by,
-        F.xxhash64(F.col(col)).alias("__v"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__t"),
-    )
-    key_fields = [proj.schema[k] for k in by]
-    partial_schema = StructType(
-        key_fields + [StructField("sketch", BinaryType())]
-    )
-
-    def build_grouped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, SlidingHll] = {}
-
-        def flush():
-            rows = [
-                k + (s.to_bytes(),) for k, s in states.items()
-            ]
-            return pd.DataFrame(rows, columns=list(by) + ["sketch"])
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for key, grp in pdf.groupby(by, dropna=False, sort=False):
-                k = key if isinstance(key, tuple) else (key,)
-                st = states.get(k)
-                if st is None:
-                    st = states[k] = SlidingHll(cfg, explicit_threshold)
-                st.add_hashed(
-                    grp["__v"].to_numpy(dtype=np.int64),
-                    grp["__t"].to_numpy(dtype=np.int64),
-                )
-            if len(states) > _MAX_GROUPS:
-                yield flush()
-                states = {}
-        if states:
-            yield flush()
-
-    partials = proj.mapInPandas(build_grouped, partial_schema)
-    out_schema = StructType(
-        key_fields
-        + [StructField("sketch", BinaryType()), StructField("max_ts", LongType())]
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf["sketch"]:
-            s = SlidingHll.from_bytes(bytes(blob))
-            acc = s if acc is None else acc.merge(s)
-        head = pdf.iloc[[0]][by].reset_index(drop=True)
-        head["sketch"] = [acc.to_bytes()]
-        head["max_ts"] = [acc.max_ts if acc.max_ts is not None else -1]
-        return head
-
-    return partials.groupBy(*by).applyInPandas(merge_group, out_schema)
+    """Per-group sliding sketches: ``(by..., sketch)`` — one blob per
+    group, from per-(input partition, group) partials merged on the
+    group keys."""
+    return _sliding_sketches(df, col, ts_col, by, cfg, explicit_threshold)
 
 
 def sliding_distinct_windows(
@@ -262,11 +185,12 @@ def sliding_distinct_windows(
 
     def answer(pdf: pd.DataFrame) -> pd.DataFrame:
         s = SlidingHll.from_bytes(bytes(pdf["sketch"].iloc[0]))
-        anchor = s.max_ts if s.max_ts is not None else 0
         rows = []
-        for name, span_s in wins:
-            start = anchor - int(span_s) * 1_000_000
-            rows.append((name, s.estimate(start)))
+        # an empty input has no anchor and answers no window
+        if s.max_ts is not None:
+            for name, span_s in wins:
+                start = s.max_ts - int(span_s) * 1_000_000
+                rows.append((name, s.estimate(start)))
         return pd.DataFrame(rows, columns=["window", "distinct"])
 
     return (

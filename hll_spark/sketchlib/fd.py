@@ -41,26 +41,31 @@ _MAGIC = b"FD1"
 class FDSketch:
     """Frequent Directions over rows of width ``dim`` with ``ell``
     retained directions (buffer holds ``2*ell`` rows; shrink keeps the
-    top ``ell`` when full)."""
+    top ``ell`` when full). ``dim=None`` leaves the sketch unsized until
+    its first block or merge — the zero state of a distributed build,
+    where the width is only known from the data."""
 
     __slots__ = ("ell", "dim", "buf", "filled", "rows_seen", "shrunk")
 
-    def __init__(self, ell: int, dim: int):
+    def __init__(self, ell: int, dim: int | None):
         if ell < 1:
             raise ValueError("ell must be >= 1")
-        if dim < 1:
+        if dim is not None and dim < 1:
             raise ValueError("dim must be >= 1")
         self.ell = int(ell)
+        self._size(dim or 0)
+        self.filled = 0  # rows of buf currently occupied
+        self.rows_seen = 0
+        self.shrunk = False  # True once any shrink fired (exact bit)
+
+    def _size(self, dim: int) -> None:
         self.dim = int(dim)
         # capacity grows geometrically toward the logical 2*ell cap, so
         # a barely-filled sketch (the exact-regime / many-groups case)
         # never pays the full 2*ell x dim allocation up front
         self.buf = np.zeros(
-            (min(2 * self.ell, 64), self.dim), dtype=np.float64
+            (min(2 * self.ell, 64) if dim else 0, self.dim), dtype=np.float64
         )
-        self.filled = 0  # rows of buf currently occupied
-        self.rows_seen = 0
-        self.shrunk = False  # True once any shrink fired (exact bit)
 
     def _reserve(self, want: int) -> int:
         """Grow capacity toward min(2*ell, want); return capacity."""
@@ -83,6 +88,8 @@ class FDSketch:
         rows = np.asarray(rows, dtype=np.float64)
         if rows.ndim == 1:
             rows = rows[None, :]
+        if not self.dim:
+            self._size(rows.shape[1])
         if rows.shape[1] != self.dim:
             raise ValueError(
                 f"row width {rows.shape[1]} != sketch dim {self.dim}"
@@ -163,6 +170,10 @@ class FDSketch:
         exactly 'treat the other sketch's rows as input'); the bound
         composes because each side's B^T B already underestimates its
         own A^T A by at most its deficit."""
+        if not other.dim:  # unsized: it has absorbed nothing
+            return self
+        if not self.dim:
+            self._size(other.dim)
         if (self.ell, self.dim) != (other.ell, other.dim):
             raise ValueError("cannot merge FD sketches with different params")
         seen = self.rows_seen + other.rows_seen
@@ -192,7 +203,7 @@ class FDSketch:
         ell, dim, filled, rows_seen, shrunk = struct.unpack(
             ">IIQQB", data[3 : 3 + 25]
         )
-        sk = cls(ell, dim)
+        sk = cls(ell, dim or None)
         body = np.frombuffer(data[3 + 25 :], dtype=np.float64)
         if body.shape[0] != filled * dim:
             raise ValueError("FD blob length mismatch")

@@ -257,3 +257,20 @@ def test_property_matches_reference(spark, texts, labels, iters):
         13,
     )
     assert got == ref
+
+
+def test_duplicated_training_row_keeps_one_bias_row(spark):
+    # a training row listed twice must weigh like two docs with the same
+    # text — its feature rows are distinct per doc, so its bias row must
+    # be too; a doubled bias row would double its bias gradient
+    def fit(rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string, y int")
+        model = fit_quality_classifier(df, "y", "text", "doc_id", n_features=256)
+        return (
+            sorted((r.feat, r.w) for r in model.weights.collect()),
+            model.bias.collect()[0].b,
+        )
+
+    dup = fit(CORPUS + [CORPUS[1]])
+    renamed = fit(CORPUS + [(100,) + CORPUS[1][1:]])
+    assert dup == renamed

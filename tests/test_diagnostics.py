@@ -236,3 +236,25 @@ def test_corpus_diff_validation(diff_frames):
         corpus_diff(old, new, "id", [])
     with pytest.raises(ValueError, match="missing columns"):
         corpus_diff(old.drop("v"), new, "id", ["v"])
+
+
+def test_fk_report_semantic_hash_collision_keeps_tables_apart(spark, monkeypatch):
+    # two different tables whose analyzed plans share a 32-bit semantic
+    # hash must still be scanned separately: sameResult confirms a match
+    from pyspark.sql import functions as F
+
+    from hll_spark.operators import diagnostics
+
+    a = spark.range(10).select(F.col("id").alias("k"))
+    b = spark.range(5, 25).select(F.col("id").alias("k"))
+    monkeypatch.setattr(diagnostics, "_plan_hash", lambda df: 0)
+    out = {
+        (r["child_label"], r["parent_label"]): r.asDict()
+        for r in diagnostics.fk_containment_report(
+            [(a, "k", "a"), (b, "k", "b")], k=1024
+        ).collect()
+    }
+    assert out[("a", "b")]["distinct_child"] == 10
+    assert out[("b", "a")]["distinct_child"] == 20
+    assert out[("a", "b")]["intersect_est"] == 5
+    assert out[("a", "b")]["containment"] == 0.5

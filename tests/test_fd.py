@@ -258,8 +258,6 @@ def test_fd_gram_by_validation(spark):
         fd_gram_by(df, "embedding", [], ell=4)
     with pytest.raises(ValueError, match="ell"):
         fd_gram_by(df, "embedding", ["grp"], ell=0)
-    with pytest.raises(ValueError, match="max_groups"):
-        fd_gram_by(df, "embedding", ["grp"], ell=4, max_groups=0)
     bad = spark.createDataFrame(
         [(0, "a", [1.0])], "vec_id long, i string, embedding array<double>"
     )
@@ -284,31 +282,6 @@ def test_fd_gram_by_null_group_key_kept(spark):
     assert set(cells) == {None, "g"}
     assert cells[None][(0, 1)] == 6.0
     assert cells["g"][(0, 0)] == 26.0
-
-
-def test_fd_gram_by_max_groups_flush_is_invisible(spark):
-    # tiny flush threshold forces many duplicate partials per group;
-    # level 1 must merge them back to the same exact answer
-    from hll_spark.operators.matrix import fd_gram_by
-
-    rng = np.random.default_rng(23)
-    mats = {g: rng.integers(-20, 20, size=(30, 3)).astype(np.float64)
-            for g in "abcde"}
-    rows = [
-        (g, m[r].tolist()) for g, m in mats.items() for r in range(30)
-    ]
-    df = spark.createDataFrame(
-        rows, "grp string, embedding array<double>"
-    ).repartition(3)
-    got = fd_gram_by(df, "embedding", ["grp"], ell=64, max_groups=2)
-    by_grp = {}
-    for r in got.collect():
-        by_grp.setdefault(r.grp, {})[(r.i, r.j)] = r.gram
-    assert set(by_grp) == set(mats)
-    for g, A in mats.items():
-        want = A.T @ A
-        for (i, j), v in by_grp[g].items():
-            assert v == want[i, j]
 
 
 def test_fd_sketch_empty_column_raises(spark):

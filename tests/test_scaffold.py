@@ -1,0 +1,249 @@
+"""The partial -> merge scaffold (operators/agg.py), pinned at the level
+every sketch operator shares: grouped key types survive the level-0 build
+and the merge byte-for-byte at any partition count, both global merge
+topologies give the same bytes, the early flush of the level-0 combine
+map is invisible, and the sliding-HLL / Frequent Directions operators
+keep their outputs (including on empty input)."""
+
+import datetime
+import decimal
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from hll_spark.operators import agg
+from hll_spark.operators.agg import (
+    hll_sketch_agg,
+    hll_spec,
+    merge_sketch_partials,
+    sketch_partials,
+)
+from hll_spark.operators.sketches import bloom_spec, cms_spec, mg_sketch_agg
+from hll_spark.sketchlib.hll import HllConfig, HllSketch
+from hll_spark.sketchlib.slidinghll import SlidingHll
+
+CFG = HllConfig(log2m=10, regwidth=5)
+N = 700
+# 2021-11-07 05:30 UTC = 01:30 EDT; +60 min = 01:30 EST in New York
+DST_EDGE_MICROS = 1636263000 * 1_000_000
+
+
+def _key_columns(kind):
+    k = F.col("id") % 7
+    if kind == "string_null":
+        return {"k": F.when(k == 0, F.lit(None)).otherwise(F.concat(F.lit("s"), k.cast("string")))}
+    if kind == "date":
+        return {"k": F.date_add(F.lit("2020-02-27").cast("date"), k.cast("int"))}
+    if kind == "timestamp_dst":
+        return {"k": F.timestamp_micros(F.lit(DST_EDGE_MICROS) + k * 1_800_000_000)}
+    if kind == "decimal":
+        return {"k": (k.cast("decimal(10,2)") / F.lit(4)).cast("decimal(10,2)")}
+    if kind == "nan_double":
+        return {"k": F.when(k == 0, F.lit(float("nan"))).otherwise(k * 0.5)}
+    if kind == "composite":
+        return {
+            "k": F.when(k == 0, F.lit(None)).otherwise(F.concat(F.lit("s"), (k % 3).cast("string"))),
+            "k2": F.date_add(F.lit("2021-03-14").cast("date"), (F.col("id") % 2).cast("int")),
+        }
+    raise AssertionError(kind)
+
+
+def _as_text(by):
+    """Keys rendered JVM-side in the session time zone. The scaffold groups
+    a NaN double key with NULL and a timestamp key by its session-local
+    wall time (the merge stage's pandas conversion), so the reference
+    build groups by the same rendering."""
+    return [
+        F.when(F.col(k).cast("string") != "NaN", F.col(k).cast("string")).alias(k)
+        for k in by
+    ]
+
+
+@pytest.fixture
+def new_york(spark):
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    yield
+    spark.conf.set("spark.sql.session.timeZone", old)
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["string_null", "date", "timestamp_dst", "decimal", "nan_double", "composite"],
+)
+def test_grouped_key_types_byte_equal_across_partitions(spark, new_york, kind):
+    keys = _key_columns(kind)
+    by = list(keys)
+    base = spark.range(N).withColumns(keys).withColumn("v", F.col("id") * 31 % 211)
+    rows = base.select(*_as_text(by), F.xxhash64("v").alias("h")).collect()
+    want: dict = {}
+    for r in rows:
+        want.setdefault(tuple(r[k] for k in by), []).append(r["h"])
+    for key, hs in want.items():
+        s = HllSketch.empty(CFG)
+        s.add_hashed(np.asarray(hs, dtype=np.int64))
+        want[key] = s.to_bytes()
+    for n_parts in (1, 3, 7):
+        out = hll_sketch_agg(base.repartition(n_parts), "v", by=by, cfg=CFG)
+        got = {
+            tuple(r[k] for k in by): bytes(r["sketch"])
+            for r in out.select(*_as_text(by), "sketch").collect()
+        }
+        assert got == want, (kind, n_parts)
+
+
+def test_grouped_mg_bytes_equal_across_partitions(spark):
+    keys = _key_columns("composite")
+    base = (
+        spark.range(N)
+        .withColumns(keys)
+        .withColumn("item", F.concat(F.lit("i"), (F.col("id") % 13).cast("string")))
+    )
+    outs = [
+        {
+            (r["k"], r["k2"]): (bytes(r["sketch"]), r["rows_seen"])
+            for r in mg_sketch_agg(base.repartition(n), "item", k=32, by=["k", "k2"]).collect()
+        }
+        for n in (1, 3, 7)
+    ]
+    assert outs[0] == outs[1] == outs[2]
+    assert sum(v[1] for v in outs[0].values()) == N
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [hll_spec(CFG), cms_spec(4, 256), bloom_spec(1 << 12, 3)],
+    ids=["hll", "cms", "bloom"],
+)
+def test_two_level_merge_byte_equals_single_level(spark, spec):
+    df = spark.range(5000).select((F.col("id") * 7919 % 3001).alias("v")).repartition(9)
+    partials = sketch_partials(df, "v", spec, merge_buckets=4)
+    one = merge_sketch_partials(partials, spec, two_level=False).collect()
+    two = merge_sketch_partials(partials, spec, two_level=True).collect()
+    assert len(one) == len(two) == 1
+    assert bytes(one[0]["sketch"]) == bytes(two[0]["sketch"])
+    assert one[0]["rows_seen"] == two[0]["rows_seen"] == 5000
+
+
+@pytest.fixture
+def small_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    yield
+    spark.conf.set(key, old)
+
+
+def test_early_flush_is_invisible(spark, monkeypatch, small_batches):
+    # a flush threshold of 2 groups forces several partials per
+    # (partition, group) once a task sees several batches; the merge must
+    # fold them back to the same bytes
+    df = spark.range(3000).select(
+        (F.col("id") % 11).alias("g"), (F.col("id") * 13 % 977).alias("v")
+    ).repartition(3)
+    want = {
+        r["g"]: (bytes(r["sketch"]), r["rows_seen"])
+        for r in hll_sketch_agg(df, "v", by=["g"], cfg=CFG).collect()
+    }
+    monkeypatch.setattr(agg, "_MAX_GROUPS", 2)
+    partials = sketch_partials(df, "v", hll_spec(CFG), by=["g"])
+    assert partials.count() > 3 * 11  # the flush really fired
+    got = {
+        r["g"]: (bytes(r["sketch"]), r["rows_seen"])
+        for r in merge_sketch_partials(partials, hll_spec(CFG), by=["g"]).collect()
+    }
+    assert got == want
+
+
+# ---------------------------------------------------------------- sliding
+
+
+def _events(spark, n=900):
+    return spark.range(n).select(
+        (F.col("id") % 4).alias("grp"),
+        (F.col("id") * 37 % 409).alias("user_id"),
+        F.timestamp_micros(
+            F.lit(1_600_000_000_000_000) + (F.col("id") * 7919 % 5000) * 60_000_000
+        ).alias("ts"),
+    )
+
+
+@pytest.mark.parametrize("explicit_threshold", [0, 1 << 12])
+def test_sliding_sketch_bytes_equal_local_build(spark, explicit_threshold):
+    from hll_spark.operators.sliding import sliding_hll_sketch, sliding_hll_sketch_by
+
+    ev = _events(spark)
+    rows = ev.select(
+        "grp", F.xxhash64("user_id").alias("h"), F.unix_micros("ts").alias("t")
+    ).collect()
+
+    def local(rs):
+        s = SlidingHll(CFG, explicit_threshold)
+        s.add_hashed(
+            np.asarray([r["h"] for r in rs], dtype=np.int64),
+            np.asarray([r["t"] for r in rs], dtype=np.int64),
+        )
+        return s.to_bytes()
+
+    want_by = {g: local([r for r in rows if r["grp"] == g]) for g in range(4)}
+    for n_parts in (1, 3, 7):
+        df = ev.repartition(n_parts)
+        got = sliding_hll_sketch(df, "user_id", "ts", CFG, explicit_threshold).collect()
+        assert [bytes(r["sketch"]) for r in got] == [local(rows)]
+        got_by = {
+            r["grp"]: bytes(r["sketch"])
+            for r in sliding_hll_sketch_by(
+                df, "user_id", "ts", ["grp"], CFG, explicit_threshold
+            ).collect()
+        }
+        assert got_by == want_by
+
+
+def test_sliding_windows_on_empty_input(spark):
+    from hll_spark.operators.sliding import sliding_distinct_windows
+
+    ev = _events(spark).where(F.lit(False))
+    wins = {"d1": 86400, "d7": 7 * 86400}
+    assert sliding_distinct_windows(ev, "user_id", "ts", wins, CFG).collect() == []
+    assert (
+        sliding_distinct_windows(ev, "user_id", "ts", wins, CFG, by=["grp"]).collect()
+        == []
+    )
+
+
+# -------------------------------------------------------- frequent directions
+
+
+def test_fd_sketch_on_zero_rows_raises(spark):
+    from hll_spark.operators.matrix import fd_sketch
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="no non-null"):
+        fd_sketch(df, "embedding", ell=8)
+
+
+def test_fd_gram_by_keeps_typed_keys_and_skips_empty_rows(spark):
+    from hll_spark.operators.matrix import fd_gram_by
+
+    rows = [
+        (decimal.Decimal("1.50"), datetime.date(2020, 2, 29), [1.0, 2.0]),
+        (decimal.Decimal("1.50"), datetime.date(2020, 2, 29), [3.0, -1.0]),
+        (decimal.Decimal("2.00"), datetime.date(2021, 1, 1), [0.5, 0.5]),
+        (decimal.Decimal("2.00"), datetime.date(2021, 1, 1), None),
+    ]
+    df = spark.createDataFrame(
+        rows, "d decimal(10,2), day date, embedding array<double>"
+    ).repartition(2)
+    got = {}
+    for r in fd_gram_by(df, "embedding", ["d", "day"], ell=8).collect():
+        got.setdefault((r["d"], r["day"]), {})[(r["i"], r["j"])] = r["gram"]
+    A = np.array([[1.0, 2.0], [3.0, -1.0]])
+    B = np.array([[0.5, 0.5]])
+    assert set(got) == {
+        (decimal.Decimal("1.50"), datetime.date(2020, 2, 29)),
+        (decimal.Decimal("2.00"), datetime.date(2021, 1, 1)),
+    }
+    for key, M in zip(sorted(got), (A, B)):
+        G = M.T @ M
+        assert got[key] == {(i, j): G[i, j] for i in range(2) for j in range(2)}
