@@ -6,11 +6,11 @@ The execution shape (SURVEY.md §3.4, §4.3) is the same for every sketch:
     -> [optional salted repartition for skewed keys]
     -> mapInArrow: per-(input partition, group) partial sketches   [level 0]
     -> [global, optional: merge by bucket]                         [level 1]
-    -> mapInPandas merge on the group keys (global: one task)      [level 2]
+    -> mapInArrow merge on the group keys (global: one task)       [level 2]
     -> estimate
 
-The level-0 pre-combine is the load-bearing piece: Spark's
-``applyInPandas`` has no map-side combine, so without it a 10^12-row job
+The level-0 pre-combine is the load-bearing piece: Spark's grouped-map
+Python API has no map-side combine, so without it a 10^12-row job
 would shuffle raw rows. With it, only O(partitions x groups) sketch blobs
 ever cross the shuffle (SURVEY.md §4.2, §7.3 risk 4).
 
@@ -21,6 +21,10 @@ crossing is the sketch kernel itself. Hashing defaults to Spark's built-in
 numpy murmur3 inside the same Arrow batch loop), or ``hash_mode='arrow'``
 to hand the spec the batch's Arrow arrays of one or more projected
 Columns (array rows, several inputs per row, a decode of its own).
+
+Rows group on their keys in one Arrow helper, :func:`_group_rows`, run
+by one combine loop, :func:`_combine`, that level 0, the merge and the
+overlap emit share.
 
 One generic scaffold (:class:`SketchSpec` + :func:`sketch_partials` +
 :func:`merge_sketch_partials`) serves every sketch operator in the
@@ -36,11 +40,15 @@ from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
+    FloatType,
     LongType,
     StructField,
     StructType,
@@ -146,15 +154,24 @@ def _project(df: DataFrame, col, by: list[str], hash_mode: str | None) -> DataFr
     receives the batch's Arrow arrays (array-valued inputs, several
     inputs per row, or a decode of its own). Every other mode projects
     one scalar value column through :func:`_value_expr`.
+
+    Float keys are normalized as Spark's GROUP BY does (every NaN one
+    NaN, -0.0 as 0.0): Arrow groups floats by bit pattern.
     """
+    keys = []
+    for k in by:
+        t, c = df.schema[k].dataType, F.col(k)
+        if isinstance(t, (FloatType, DoubleType)):
+            k = F.when(F.isnan(c), float("nan")).when(c == 0, 0.0).otherwise(c).cast(t).alias(k)
+        keys.append(k)
     if hash_mode == "arrow":
         cols = list(col) if isinstance(col, (list, tuple)) else [col]
         names = [f"__v{i}" for i in range(len(cols))]
         return df.select(
-            *by, *[c.alias(n) for c, n in zip(cols, names)]
+            *keys, *[c.alias(n) for c, n in zip(cols, names)]
         ).where(_not_null_cond(names))
     return df.where(_not_null_cond(col)).select(
-        *by, _value_expr(df, col, hash_mode)
+        *keys, _value_expr(df, col, hash_mode)
     )
 
 
@@ -166,8 +183,6 @@ def _arrow_values(arr, hash_mode: str | None) -> np.ndarray:
     PyObjects). Falls back to the pandas-equivalent materialization for
     anything else (raw item sketches, float quantile inputs).
     """
-    import pyarrow as pa
-
     from ..sketchlib.hashing import murmur3_low64_from_buffers
 
     if arr.null_count:
@@ -208,6 +223,106 @@ def _arrow_values(arr, hash_mode: str | None) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
+# the one grouping and the one combine loop
+
+
+def _group_rows(keys: pa.Table, since: int = 0) -> list[np.ndarray]:
+    """Row indices of each distinct key of ``keys`` with a row at or after
+    ``since``: ascending within a group, groups in no particular order.
+    NULL is a key of its own, NaN one key apart from NULL, a timestamp
+    its instant. Columns are dictionary-encoded (NULL as a value) before
+    the ``group_by``: on pyarrow 16 a multi-column ``group_by`` over
+    NULLs splits one key into several groups."""
+    codes = [
+        pc.dictionary_encode(c.combine_chunks(), null_encoding="encode").indices
+        for c in keys.columns
+    ]
+    names = [str(i) for i in range(len(codes))]
+    lists = (
+        pa.table([*codes, np.arange(keys.num_rows, dtype=np.int64)], names=[*names, "i"])
+        .group_by(names, use_threads=False)
+        .aggregate([("i", "list")])
+        .column("i_list")
+        .combine_chunks()
+    )
+    idx = lists.values.to_numpy()
+    off = lists.offsets.to_numpy()
+    return [idx[off[g] : off[g + 1]] for g in np.flatnonzero(idx[off[1:] - 1] >= since)]
+
+
+def _combine(batches, nkeys: int, per_batch, max_groups: int | None = None):
+    """Fold Arrow batches (or tables) whose first ``nkeys`` columns are the
+    keys into one state per key. ``per_batch(rb)`` gives ``step(state, idx) ->
+    (state, rows)``, folding rows ``idx`` (None: all) into ``state`` (None
+    until a row reaches it). The open states' keys are an Arrow table,
+    row i for state i, grouped together with each batch: a group whose
+    first index falls in it continues that state. Yields ``(key columns,
+    states, counts)`` when more than ``max_groups`` states are open and
+    at the end; without keys, one state even if no row arrived."""
+    known, states, counts = None, [], []
+    if not nkeys:
+        states, counts = [None], [0]
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        step = per_batch(rb)
+        if not nkeys:
+            states[0], n = step(states[0], None)
+            counts[0] += n
+            continue
+        keys = pa.table(rb.select(list(range(nkeys))))
+        known = keys.slice(0, 0) if known is None else known
+        nk, new_firsts = known.num_rows, []
+        for idx in _group_rows(pa.concat_tables([known, keys]), nk):
+            if idx[0] < nk:
+                slot, rows = idx[0], idx[1:] - nk
+            else:
+                slot, rows = len(states), idx - nk
+                states.append(None)
+                counts.append(0)
+                new_firsts.append(rows[0])
+            states[slot], n = step(states[slot], rows)
+            counts[slot] += n
+        if new_firsts:
+            known = pa.concat_tables([known, keys.take(new_firsts)]).combine_chunks()
+        if max_groups is not None and len(states) > max_groups:
+            yield known.columns, states, counts
+            known, states, counts = None, [], []
+    if states:
+        yield ([] if known is None else known.columns), states, counts
+
+
+def _partials_table(spec: SketchSpec, keys, states, counts, names) -> pa.Table:
+    """One ``*keys, sketch, rows_seen`` row per state (None: the zero)."""
+    sketches = [spec.to_bytes_fn(spec.zero_fn() if s is None else s) for s in states]
+    return pa.Table.from_arrays(
+        [*keys, pa.array(sketches, pa.binary()), pa.array(counts, pa.int64())],
+        names=names,
+    )
+
+
+def _blob_folder(spec: SketchSpec, nkeys: int):
+    """``per_batch`` for :func:`_combine` over ``*keys, sketch, rows_seen``
+    rows: from_bytes -> merge of a group's blobs in row order, from the
+    first decoded blob, and the sum of its rows_seen."""
+
+    def per_batch(rb):
+        blobs = rb.column(nkeys).to_pylist()
+        seen = rb.column(nkeys + 1).fill_null(0).to_numpy()
+
+        def step(acc, idx):
+            idx = range(len(blobs)) if idx is None else idx
+            for i in idx:
+                s = spec.from_bytes_fn(blobs[i])
+                acc = s if acc is None else spec.merge_fn(acc, s)
+            return acc, int(seen[idx].sum())
+
+        return step
+
+    return per_batch
+
+
+# ---------------------------------------------------------------------------
 # level 0: per-input-partition partial sketches (the map-side combine)
 
 # bound the per-task combine map: beyond this many concurrent groups the
@@ -235,14 +350,12 @@ def sketch_partials(
 
     One build serves both: the global build is the grouped one with no
     keys (a single state per task, emitted even when the task saw no
-    rows, so a global aggregate always yields one row). Only the key
-    columns go through pandas, for the groupby; each group's emitted
-    keys are an Arrow take of its first row, so key types round-trip
-    untouched, and values come from :func:`_arrow_values` (or, for
-    ``hash_mode='arrow'``, are the batch's Arrow arrays themselves).
+    rows, so a global aggregate always yields one row). Rows group in
+    :func:`_combine`; each group's emitted keys are an Arrow take of its
+    first row, so key types round-trip untouched, and values come from
+    :func:`_arrow_values` (or, for ``hash_mode='arrow'``, are the batch's
+    Arrow arrays themselves).
     """
-    import pyarrow as pa
-
     by = list(by or [])
     if salt_partitions:
         salt_cols = list(col) if isinstance(col, (list, tuple)) else [col]
@@ -264,79 +377,39 @@ def sketch_partials(
         key_fields
         + [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]
     )
+    names = [f.name for f in out_schema]
     nkeys = len(by)
     arrow_values = hash_mode == "arrow"
     max_groups = _MAX_GROUPS  # read here: the closure ships the value
 
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        states: dict[tuple, Any] = {}
-        counts: dict[tuple, int] = {}
-        key_rows: list = []  # first row of each new group, in states order
-        if not nkeys:
-            states[()], counts[()] = spec.zero_fn(), 0
+    def per_batch(rb):
+        # decode the whole batch ONCE (one vectorized kernel call), then
+        # slice per group — the per-group work is a take, not a hash
+        # invocation
+        if arrow_values:
+            vals = rb.columns[nkeys:]
+        else:
+            vals = _arrow_values(rb.column(nkeys), hash_mode)
 
-        def flush() -> "pa.Table":
-            if nkeys:
-                keys = pa.Table.from_batches(key_rows).combine_chunks().columns
-                key_rows.clear()
+        def step(state, idx):
+            if idx is None:
+                v = vals
+            elif arrow_values:
+                v = [a.take(idx) for a in vals]
             else:
+                v = vals[idx]
+            state = spec.update_fn(spec.zero_fn() if state is None else state, v)
+            return state, len(v[0]) if arrow_values else len(v)
+
+        return step
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for keys, states, counts in _combine(batches, nkeys, per_batch, max_groups):
+            if not nkeys:
                 tc = TaskContext.get()
                 pid = tc.partitionId() if tc is not None else 0
                 keys = [pa.array([pid % merge_buckets], pa.int64())]
-            out = pa.Table.from_arrays(
-                [
-                    *keys,
-                    pa.array([spec.to_bytes_fn(s) for s in states.values()], pa.binary()),
-                    pa.array(list(counts.values()), pa.int64()),
-                ],
-                names=[f.name for f in out_schema],
-            )
-            states.clear()
-            counts.clear()
-            return out
-
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            # decode the whole batch ONCE (one vectorized kernel call),
-            # then slice per group — the per-group work is a take, not a
-            # hash invocation
-            if arrow_values:
-                vals = rb.columns[nkeys:]
-            else:
-                vals = _arrow_values(rb.column(nkeys), hash_mode)
-            if not nkeys:
-                groups = [((), None)]
-            else:
-                key_batch = rb.select(list(range(nkeys)))
-                groups = (
-                    key_batch.to_pandas()
-                    .groupby(by, sort=False, dropna=False)
-                    .indices.items()
-                )
-            new_firsts = []
-            for key, idx in groups:
-                key = key if isinstance(key, tuple) else (key,)
-                if idx is None:
-                    v = vals
-                elif arrow_values:
-                    v = [a.take(idx) for a in vals]
-                else:
-                    v = vals[idx]
-                n = len(v[0]) if arrow_values else len(v)
-                if key in states:
-                    states[key] = spec.update_fn(states[key], v)
-                    counts[key] += n
-                else:
-                    states[key] = spec.update_fn(spec.zero_fn(), v)
-                    counts[key] = n
-                    new_firsts.append(idx[0])
-            if new_firsts:
-                key_rows.append(key_batch.take(new_firsts))
-            if len(states) > max_groups:
-                yield from flush().to_batches()
-        if states:
-            yield from flush().to_batches()
+            yield from _partials_table(spec, keys, states, counts, names).to_batches()
 
     return proj.mapInArrow(build, out_schema)
 
@@ -366,61 +439,30 @@ def _estimate_partials_partitions(partials: DataFrame) -> int:
         return 1 << 20  # unknown: choose the scale-safe topology
 
 
-def _fold(spec: SketchSpec, blobs) -> Any:
-    """from_bytes -> merge over serialized sketches; zero when empty."""
-    acc = None
-    for blob in blobs:
-        s = spec.from_bytes_fn(bytes(blob))
-        acc = s if acc is None else spec.merge_fn(acc, s)
-    return acc if acc is not None else spec.zero_fn()
-
-
 def _merge(partials: DataFrame, spec: SketchSpec, by: list[str]) -> DataFrame:
     """One merge stage: co-locate every group's blobs and fold them.
 
-    Grouped: hash-repartition on the keys + ONE mapInPandas call per
-    partition, instead of groupBy().applyInPandas — the latter ships
-    each group as its own Arrow batch and invokes the UDF per group,
-    whose per-call overhead dominates when groups are small (r6: 0.68s
-    -> 0.54s on the 80-group month query). The in-task pandas groupby
-    keeps null keys (dropna=False), like applyInPandas. Global (no
-    keys): the same function over ``repartition(1)``, emitting a zero
-    sketch if no partial arrives.
+    Grouped: hash-repartition on the keys + ONE mapInArrow call per
+    partition, running :func:`_combine` with blob folding and no flush
+    over the partition as one table (one grouping, however many groups
+    it holds), instead of a per-group UDF call, whose overhead dominates
+    when groups are small (r6: 0.68s -> 0.54s on the 80-group month
+    query). Keys are emitted as an Arrow take, so their types round-trip.
+    Global (no keys): the same function over ``repartition(1)``, emitting
+    a zero sketch if no partial arrives.
     """
-    out_schema = StructType(
-        [partials.schema[k] for k in by]
-        + [StructField("sketch", BinaryType()), StructField("rows_seen", LongType())]
-    )
+    names = [*by, "sketch", "rows_seen"]
+    per_batch = _blob_folder(spec, len(by))
 
-    def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            if not by:
-                yield pd.DataFrame(
-                    {"sketch": [spec.to_bytes_fn(spec.zero_fn())], "rows_seen": [0]}
-                )
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        if by:
-            groups = pdf.groupby(by, sort=False, dropna=False).indices.items()
-        else:
-            groups = [((), slice(None))]
-        rows: dict[str, list] = {k: [] for k in by}
-        rows["sketch"] = []
-        rows["rows_seen"] = []
-        for key, idx in groups:
-            key = key if isinstance(key, tuple) else (key,)
-            for i, k in enumerate(by):
-                rows[k].append(key[i])
-            rows["sketch"].append(spec.to_bytes_fn(_fold(spec, pdf["sketch"].iloc[idx])))
-            rows["rows_seen"].append(int(pdf["rows_seen"].iloc[idx].sum()))
-        yield pd.DataFrame(rows)
+    def merge_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rbs = [rb for rb in batches if rb.num_rows]
+        whole = [pa.Table.from_batches(rbs)] if rbs else []
+        for keys, states, counts in _combine(whole, len(by), per_batch):
+            yield from _partials_table(spec, keys, states, counts, names).to_batches()
 
-    if by:
-        stage = partials.repartition(*[F.col(k) for k in by])
-    else:
-        stage = partials.repartition(1)
-    return stage.mapInPandas(merge_partition, out_schema)
+    stage = partials.select(*names)
+    stage = stage.repartition(*by) if by else stage.repartition(1)
+    return stage.mapInArrow(merge_partition, stage.schema)
 
 
 def merge_sketch_partials(
@@ -546,7 +588,6 @@ def hll_intersect_udf():
 
     Error compounds with both sketches' errors (README.md:74-81 caveat)."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
 
     from ..sketchlib.hll import hll_intersect_estimate
 
@@ -584,13 +625,13 @@ def _overlap_matrix(
     reuse the exchange across the broadcast/probe sides). Only the
     level-0 partials are built: the per-group merge would add a keyed
     shuffle + Python stage whose whole output funnels into the ONE
-    matrix-emit task anyway, so that task folds the
-    (partition x group) blobs per group itself (same data volume a
-    broadcast would move), then answers every pair — O(groups^2)
-    arithmetic over KB blobs, trivially small wherever an all-pairs
-    matrix is a sensible ask.
+    matrix-emit task anyway, so that task (``repartition(1)`` +
+    mapInArrow) folds the (partition x group) blobs per group itself
+    with :func:`_combine` (same data volume a broadcast would move),
+    then answers every pair — O(groups^2) arithmetic over KB blobs,
+    trivially small wherever an all-pairs matrix is a sensible ask.
     """
-    from pyspark.sql.types import DoubleType
+    from pyspark.sql.pandas.types import to_arrow_type
 
     sk = sketch_partials(df, col, spec, [group_col], hash_mode)
     gtype = sk.schema[group_col].dataType
@@ -599,37 +640,33 @@ def _overlap_matrix(
         + [StructField(n, est_type) for n in ("distinct_a", "distinct_b", "union_est")]
         + [StructField(n, DoubleType()) for n in ("intersect_est", "jaccard_est")]
     )
+    est_arrow = to_arrow_type(est_type)
 
-    def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf[group_col].notna()]
-        merged = {
-            g: _fold(spec, pdf["sketch"].iloc[idx])
-            for g, idx in pdf.groupby(group_col, sort=False).indices.items()
-        }
-        groups = sorted(merged)
-        sketches = [merged[g] for g in groups]
-        ests = [estimate(s) for s in sketches]
-        rows = []
-        for i in range(len(groups)):
-            for j in range(i + 1, len(groups)):
-                union, inter = pair_fn(sketches[i], sketches[j])
-                rows.append(
-                    (
-                        groups[i],
-                        groups[j],
-                        ests[i],
-                        ests[j],
-                        union,
-                        inter,
-                        inter / union if union > 0 else 0.0,
-                    )
-                )
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
+    def emit_pairs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for keys, states, _ in _combine(batches, 1, _blob_folder(spec, 1)):
+            g = keys[0]
+            order = pc.sort_indices(g, null_placement="at_end").to_numpy()
+            order = order[: len(g) - g.null_count]  # NULL keys form no pair
+            sketches = [states[i] for i in order]
+            ests = pa.array([estimate(s) for s in sketches], est_arrow)
+            ia, ib = np.triu_indices(len(order), 1)
+            pairs = [pair_fn(sketches[i], sketches[j]) for i, j in zip(ia, ib)]
+            yield from pa.Table.from_arrays(
+                [
+                    g.take(order[ia]),
+                    g.take(order[ib]),
+                    ests.take(ia),
+                    ests.take(ib),
+                    pa.array([u for u, _ in pairs], est_arrow),
+                    pa.array([x for _, x in pairs], pa.float64()),
+                    pa.array(
+                        [x / u if u > 0 else 0.0 for u, x in pairs], pa.float64()
+                    ),
+                ],
+                names=[f.name for f in out_schema],
+            ).to_batches()
 
-    return (
-        sk.groupBy(F.lit(0).alias("__all"))
-        .applyInPandas(lambda _, pdf: emit_pairs(pdf), out_schema)
-    )
+    return sk.repartition(1).mapInArrow(emit_pairs, out_schema)
 
 
 def hll_overlap_matrix(

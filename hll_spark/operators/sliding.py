@@ -12,14 +12,14 @@ sliding-HLL spec over two JVM-side inputs per row:
 
 Only O(partitions x groups) sketch blobs (each O(m ln n)) ever cross
 the shuffle, independent of input size, so the plan survives a
-10^12-row scan. The window answers come AFTER the scan: one pass
-serves every window, where naive per-window COUNT(DISTINCT) would
-rescan per window.
+10^12-row scan. The window answers come AFTER the scan, in a narrow
+mapInArrow over the merged one-row-per-key frame: one pass serves every
+window, where naive per-window COUNT(DISTINCT) would rescan per window.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -126,18 +126,15 @@ def sliding_distinct_windows(
     row, matching grouped COUNT(DISTINCT) semantics.
     """
     wins = sorted(windows.items())
+    by = list(by or [])
+    out_schema = StructType(
+        [StructField("window", StringType()), StructField("distinct", LongType())]
+    )
     if by:
         blobs = sliding_hll_sketch_by(
             df, col, ts_col, by, cfg, explicit_threshold
         )
-        key_fields = [blobs.schema[k] for k in by]
-        out_schema = StructType(
-            key_fields
-            + [
-                StructField("window", StringType()),
-                StructField("distinct", LongType()),
-            ]
-        )
+        out_schema = StructType([blobs.schema[k] for k in by] + out_schema.fields)
         # the global anchor is ONE row — a pure-codegen max over the
         # input (cheaper than re-deriving the sketch subtree), broadcast
         # alongside every group blob (the only correct cross join:
@@ -150,51 +147,38 @@ def sliding_distinct_windows(
                 )
             )
         )
-        joined = blobs.join(F.broadcast(anchor_df))
+        blob_df = blobs.join(F.broadcast(anchor_df))
+    else:
+        blob_df = sliding_hll_sketch(
+            df, col, ts_col, cfg, explicit_threshold, merge_buckets
+        )
+    nkeys = len(by)
 
-        def answer_named(pdf: pd.DataFrame) -> pd.DataFrame:
-            out: list[tuple] = []
-            for _, row in pdf.iterrows():
-                if pd.isna(row["anchor_ts"]):
+    def answer(batches):
+        # rows are (by..., sketch[, anchor_ts]), one per key after the merge
+        for rb in batches:
+            take, names, ests = [], [], []
+            anchors = rb.column(nkeys + 1).to_pylist() if by else None
+            for i, blob in enumerate(rb.column(nkeys).to_pylist()):
+                s = SlidingHll.from_bytes(blob)
+                # grouped: the global anchor; global: the sketch's own (an
+                # empty input has none and answers no window)
+                anchor = anchors[i] if by else s.max_ts
+                if anchor is None:
                     continue
-                s = SlidingHll.from_bytes(bytes(row["sketch"]))
-                anchor = int(row["anchor_ts"])
                 for name, span_s in wins:
                     est = s.estimate(anchor - int(span_s) * 1_000_000)
-                    if est > 0:
-                        out.append(
-                            tuple(row[k] for k in by) + (name, est)
-                        )
-            return pd.DataFrame(out, columns=list(by) + ["window", "distinct"])
+                    if est > 0 or not by:
+                        take.append(i)
+                        names.append(name)
+                        ests.append(est)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *rb.select(list(range(nkeys))).take(pa.array(take, pa.int64())).columns,
+                    pa.array(names, pa.string()),
+                    pa.array(ests, pa.int64()),
+                ],
+                names=[f.name for f in out_schema],
+            )
 
-        return (
-            joined.groupBy(*by)
-            .applyInPandas(answer_named, out_schema)
-            .orderBy(*by, "window")
-        )
-
-    blob_df = sliding_hll_sketch(
-        df, col, ts_col, cfg, explicit_threshold, merge_buckets
-    )
-    out_schema = StructType(
-        [
-            StructField("window", StringType()),
-            StructField("distinct", LongType()),
-        ]
-    )
-
-    def answer(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = SlidingHll.from_bytes(bytes(pdf["sketch"].iloc[0]))
-        rows = []
-        # an empty input has no anchor and answers no window
-        if s.max_ts is not None:
-            for name, span_s in wins:
-                start = s.max_ts - int(span_s) * 1_000_000
-                rows.append((name, s.estimate(start)))
-        return pd.DataFrame(rows, columns=["window", "distinct"])
-
-    return (
-        blob_df.groupBy(F.lit(0).alias("g"))
-        .applyInPandas(lambda pdf: answer(pdf), out_schema)
-        .orderBy("window")
-    )
+    return blob_df.mapInArrow(answer, out_schema).orderBy(*by, "window")

@@ -94,64 +94,6 @@ def murmur3_finalizer_u32(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def _murmur3_fixed_length(mat: np.ndarray, length: int, seed: int) -> np.ndarray:
-    """MurmurHash3 x64-128 low64 over an (n, length) uint8 matrix."""
-    n = mat.shape[0]
-    h1 = np.full(n, seed, dtype=np.uint64)
-    h2 = np.full(n, seed, dtype=np.uint64)
-
-    nblocks = length // 16
-    if nblocks:
-        # little-endian 64-bit lanes
-        body = mat[:, : nblocks * 16].reshape(n, nblocks, 2, 8)
-        lanes = body.view("<u8").reshape(n, nblocks, 2).astype(np.uint64)
-        for i in range(nblocks):
-            k1 = lanes[:, i, 0].copy()
-            k2 = lanes[:, i, 1].copy()
-            k1 *= _C1
-            k1 = _rotl64(k1, 31)
-            k1 *= _C2
-            h1 ^= k1
-            h1 = _rotl64(h1, 27)
-            h1 += h2
-            h1 = h1 * _M5 + _A1
-            k2 *= _C2
-            k2 = _rotl64(k2, 33)
-            k2 *= _C1
-            h2 ^= k2
-            h2 = _rotl64(h2, 31)
-            h2 += h1
-            h2 = h2 * _M5 + _A2
-
-    tail_len = length & 15
-    if tail_len:
-        tail = np.zeros((n, 16), dtype=np.uint8)
-        tail[:, :tail_len] = mat[:, nblocks * 16 :]
-        lanes = tail.view("<u8").astype(np.uint64)
-        k1 = lanes[:, 0].copy()
-        k2 = lanes[:, 1].copy()
-        if tail_len > 8:
-            k2 *= _C2
-            k2 = _rotl64(k2, 33)
-            k2 *= _C1
-            h2 ^= k2
-        k1 *= _C1
-        k1 = _rotl64(k1, 31)
-        k1 *= _C2
-        h1 ^= k1
-
-    len64 = _u64(length)
-    h1 ^= len64
-    h2 ^= len64
-    h1 += h2
-    h2 += h1
-    h1 = _fmix64(h1)
-    h2 = _fmix64(h2)
-    h1 += h2
-    # h2 += h1  # high 64 bits — not needed for low64
-    return h1
-
-
 def _murmur3_padded_sorted(
     padded: np.ndarray, lens: np.ndarray, seed: int
 ) -> np.ndarray:

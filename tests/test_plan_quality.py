@@ -105,7 +105,7 @@ GATED = [
     "token_budget_selection",  # range shuffle + mapInPandas, join-free
     # closing-r4 additions
     "budget_mixture_by_lang",  # same pruned scan, grouped
-    "fd_gram_by_label",  # per-group blob build + applyInPandas merge
+    "fd_gram_by_label",  # per-group blob build + mapInArrow merge
     "profile_orders_columns",  # one mapInArrow scan + per-column merge
     "fk_discovery_tpch",  # per-column sketch scans + broadcast pair join
     "hll_overlap_events",  # ONE grouped build + single-task pair emit
@@ -183,3 +183,48 @@ def test_whole_stage_codegen_in_relational_queries(spark):
 def test_broadcast_join_for_small_dimension(spark):
     plan = _plan(spark, "join_mktsegment_orders")
     assert "BroadcastHashJoin" in plan
+
+
+def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
+    # the scaffold's level-0 build, merge, overlap emit and sliding window
+    # answers are all mapInArrow: no pandas conversion stage in any plan
+    from hll_spark.operators.agg import (
+        hll_overlap_matrix,
+        hll_sketch_agg,
+        hll_spec,
+        merge_sketch_partials,
+        sketch_partials,
+    )
+    from hll_spark.operators.sliding import sliding_distinct_windows
+
+    ev = spark.range(900).select(
+        (F.col("id") % 4).alias("grp"),
+        (F.col("id") * 37 % 409).alias("user_id"),
+        F.timestamp_micros(
+            F.lit(1_600_000_000_000_000) + (F.col("id") * 7919 % 5000) * 60_000_000
+        ).alias("ts"),
+    )
+    wins = {"d1": 86400, "d7": 7 * 86400}
+    partials = sketch_partials(ev, "user_id", hll_spec())
+    frames = {
+        "hll_global": hll_sketch_agg(ev, "user_id"),
+        "hll_grouped": hll_sketch_agg(ev, "user_id", by=["grp"]),
+        "two_level": merge_sketch_partials(partials, hll_spec(), two_level=True),
+        "overlap": hll_overlap_matrix(ev, "user_id", "grp"),
+        "sliding_global": sliding_distinct_windows(ev, "user_id", "ts", wins),
+        "sliding_grouped": sliding_distinct_windows(
+            ev, "user_id", "ts", wins, by=["grp"]
+        ),
+    }
+    plans = {
+        k: df._jdf.queryExecution().executedPlan().toString()
+        for k, df in frames.items()
+    }
+    for name, plan in plans.items():
+        assert "MapInArrow" in plan, name
+        assert "MapInPandas" not in plan, name
+        assert "FlatMapGroupsInPandas" not in plan, name
+    # grouped sliding: the merge's hash exchange, the anchor's single-
+    # partition and broadcast exchanges and the orderBy's range exchange —
+    # the window answers add no exchange of their own
+    assert plans["sliding_grouped"].count("Exchange") == 4

@@ -11,6 +11,7 @@ import decimal
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, TimestampType
 
 from hll_spark.operators import agg
 from hll_spark.operators.agg import (
@@ -40,7 +41,13 @@ def _key_columns(kind):
     if kind == "decimal":
         return {"k": (k.cast("decimal(10,2)") / F.lit(4)).cast("decimal(10,2)")}
     if kind == "nan_double":
-        return {"k": F.when(k == 0, F.lit(float("nan"))).otherwise(k * 0.5)}
+        # NaN, NULL and -0.0 (which groups with the 0.0 of k == 3)
+        return {
+            "k": F.when(k == 0, F.lit(float("nan")))
+            .when(k == 1, F.lit(-0.0))
+            .when(k == 2, F.lit(None))
+            .otherwise((k - 3) * 0.5)
+        }
     if kind == "composite":
         return {
             "k": F.when(k == 0, F.lit(None)).otherwise(F.concat(F.lit("s"), (k % 3).cast("string"))),
@@ -49,15 +56,29 @@ def _key_columns(kind):
     raise AssertionError(kind)
 
 
-def _as_text(by):
-    """Keys rendered JVM-side in the session time zone. The scaffold groups
-    a NaN double key with NULL and a timestamp key by its session-local
-    wall time (the merge stage's pandas conversion), so the reference
-    build groups by the same rendering."""
-    return [
-        F.when(F.col(k).cast("string") != "NaN", F.col(k).cast("string")).alias(k)
-        for k in by
-    ]
+def _as_text(df, by):
+    """Keys rendered JVM-side as the scaffold groups them: a timestamp by
+    its instant (unix_micros, so the two 01:30 instants of the DST
+    fall-back hour stay apart), a double with -0.0 as 0.0 and NaN kept
+    apart from NULL, anything else by its string form."""
+    out = []
+    for k in by:
+        c, t = F.col(k), df.schema[k].dataType
+        if isinstance(t, TimestampType):
+            c = F.unix_micros(c)
+        elif isinstance(t, DoubleType):
+            c = F.when(c == 0, F.lit(0.0)).otherwise(c)
+        out.append(c.cast("string").alias(k))
+    return out
+
+
+@pytest.fixture
+def small_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    yield
+    spark.conf.set(key, old)
 
 
 @pytest.fixture
@@ -68,15 +89,25 @@ def new_york(spark):
     spark.conf.set("spark.sql.session.timeZone", old)
 
 
-@pytest.mark.parametrize(
-    "kind",
-    ["string_null", "date", "timestamp_dst", "decimal", "nan_double", "composite"],
-)
+KEY_KINDS = ["string_null", "date", "timestamp_dst", "decimal", "nan_double", "composite"]
+
+
+@pytest.mark.parametrize("kind", KEY_KINDS)
 def test_grouped_key_types_byte_equal_across_partitions(spark, new_york, kind):
+    _check_grouped_key_type(spark, kind)
+
+
+@pytest.mark.parametrize("kind", KEY_KINDS)
+def test_grouped_key_types_byte_equal_small_batches(spark, new_york, small_batches, kind):
+    # 100-row Arrow batches make one key span several level-0 batches
+    _check_grouped_key_type(spark, kind)
+
+
+def _check_grouped_key_type(spark, kind):
     keys = _key_columns(kind)
     by = list(keys)
     base = spark.range(N).withColumns(keys).withColumn("v", F.col("id") * 31 % 211)
-    rows = base.select(*_as_text(by), F.xxhash64("v").alias("h")).collect()
+    rows = base.select(*_as_text(base, by), F.xxhash64("v").alias("h")).collect()
     want: dict = {}
     for r in rows:
         want.setdefault(tuple(r[k] for k in by), []).append(r["h"])
@@ -88,7 +119,7 @@ def test_grouped_key_types_byte_equal_across_partitions(spark, new_york, kind):
         out = hll_sketch_agg(base.repartition(n_parts), "v", by=by, cfg=CFG)
         got = {
             tuple(r[k] for k in by): bytes(r["sketch"])
-            for r in out.select(*_as_text(by), "sketch").collect()
+            for r in out.select(*_as_text(out, by), "sketch").collect()
         }
         assert got == want, (kind, n_parts)
 
@@ -124,15 +155,6 @@ def test_two_level_merge_byte_equals_single_level(spark, spec):
     assert len(one) == len(two) == 1
     assert bytes(one[0]["sketch"]) == bytes(two[0]["sketch"])
     assert one[0]["rows_seen"] == two[0]["rows_seen"] == 5000
-
-
-@pytest.fixture
-def small_batches(spark):
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "100")
-    yield
-    spark.conf.set(key, old)
 
 
 def test_early_flush_is_invisible(spark, monkeypatch, small_batches):
