@@ -170,11 +170,11 @@ def _minhash_enriched(
 # the pandas-UDF pass that builds them is the expensive stage. Each slot
 # keeps at most ONE frame alive: repeated calls over DIFFERENT inputs
 # would otherwise accumulate cached DataFrames in executor storage until
-# LRU pressure. A repeat call over the SAME input+params (matched by the
-# analyzed plan's semantic hash) reuses the already-materialized frame —
-# re-caching would be a no-op in Spark's CacheManager, and unpersisting
-# it would throw away a warm cache. clear_minhash_cache() drops all
-# slots eagerly.
+# LRU pressure. A repeat call over the SAME input+params (confirmed by
+# scanutil.same_result on the analyzed plans) reuses the
+# already-materialized frame — re-caching would be a no-op in Spark's
+# CacheManager, and unpersisting it would throw away a warm cache.
+# clear_minhash_cache() drops all slots eagerly.
 _CACHE_SLOTS: dict[str, tuple] = {}
 # check-then-act on the slot dict must be atomic: concurrent driver
 # threads (a normal Spark pattern) would otherwise both cache and one
@@ -183,18 +183,12 @@ _CACHE_SLOTS: dict[str, tuple] = {}
 _CACHE_LOCK = threading.Lock()
 
 
-def _plan_key(df: DataFrame):
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # non-JVM backend (e.g. connect) — no reuse key
-        return None
-
-
 def _bounded_cache(slot: str, df: DataFrame) -> DataFrame:
-    key = _plan_key(df)
+    from .scanutil import same_result
+
     with _CACHE_LOCK:
         prev = _CACHE_SLOTS.get(slot)
-        if prev is not None and key is not None and prev[0] == key:
+        if prev is not None and same_result(prev[0], df):
             return prev[1]
         if prev is not None:
             try:
@@ -202,7 +196,7 @@ def _bounded_cache(slot: str, df: DataFrame) -> DataFrame:
             except Exception:  # session already stopped — nothing to free
                 pass
         cached = df.cache()
-        _CACHE_SLOTS[slot] = (key, cached)
+        _CACHE_SLOTS[slot] = (df, cached)
         return cached
 
 
@@ -214,7 +208,7 @@ def clear_minhash_cache() -> None:
     """Unpersist every cached signature/shingle frame."""
     with _CACHE_LOCK:
         while _CACHE_SLOTS:
-            _, (key, df) = _CACHE_SLOTS.popitem()
+            _, (_, df) = _CACHE_SLOTS.popitem()
             try:
                 df.unpersist()
             except Exception:  # session already stopped — nothing to free

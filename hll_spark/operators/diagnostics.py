@@ -509,27 +509,6 @@ def _multi_theta_sketches(
     )
 
 
-def _plan_hash(df: DataFrame):
-    return df._jdf.queryExecution().analyzed().semanticHash()
-
-
-def _same_source(a: DataFrame, b: DataFrame) -> bool:
-    """Whether two frames compute the same result: the analyzed plans'
-    32-bit semantic hashes match AND ``sameResult`` confirms it (a hash
-    collision must not merge two tables' scans). Object identity where
-    the plans are unavailable (non-JVM backends)."""
-    if a is b:
-        return True
-    try:
-        return _plan_hash(a) == _plan_hash(b) and bool(
-            a._jdf.queryExecution().analyzed().sameResult(
-                b._jdf.queryExecution().analyzed()
-            )
-        )
-    except Exception:
-        return False
-
-
 def fk_containment_report(
     columns,
     k: int = 65536,
@@ -568,6 +547,7 @@ def fk_containment_report(
     from pyspark.sql.functions import broadcast
 
     from ..sketchlib.theta import ThetaSketch
+    from .scanutil import same_result
     from .sketches import (
         theta_estimate_udf,
         theta_intersect_udf,
@@ -594,7 +574,7 @@ def fk_containment_report(
     by_src: list = []  # (df, [(col, lbl), ...]) per distinct source plan
     for df, col, lbl in cols:
         for src, col_lbls in by_src:
-            if _same_source(src, df):
+            if same_result(src, df):
                 col_lbls.append((col, lbl))
                 break
         else:

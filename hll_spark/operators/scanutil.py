@@ -16,6 +16,10 @@ default parallelism. At scale neither condition holds (a 100 TB table
 has thousands of natural splits and the guard sees the size), so the
 exchange vanishes from the plan exactly where it would hurt — this is a
 plan decision from input statistics, not a local-mode constant.
+
+The module also holds the plan probes the rest of the library shares:
+``plan_stats`` (size and split estimates) and ``same_result`` (whether
+two frames compute the same result).
 """
 
 from __future__ import annotations
@@ -55,6 +59,29 @@ def plan_stats(df: DataFrame) -> tuple[int, int] | None:
     except Exception:
         return None
     return size, max(1, -(-size // max(max_pb, 1)))
+
+
+def plan_hash(df: DataFrame) -> int:
+    """32-bit semantic hash of ``df``'s analyzed plan (a cheap filter
+    for :func:`same_result`, never an identity on its own)."""
+    return df._jdf.queryExecution().analyzed().semanticHash()
+
+
+def same_result(a: DataFrame, b: DataFrame) -> bool:
+    """Whether two frames compute the same result: the analyzed plans'
+    semantic hashes match AND ``sameResult`` confirms it (a hash
+    collision must not stand in for another input). Object identity
+    where the plans are unavailable (non-JVM backends)."""
+    if a is b:
+        return True
+    try:
+        return plan_hash(a) == plan_hash(b) and bool(
+            a._jdf.queryExecution().analyzed().sameResult(
+                b._jdf.queryExecution().analyzed()
+            )
+        )
+    except Exception:
+        return False
 
 
 def plan_bytes(df: DataFrame) -> int:

@@ -7,10 +7,17 @@ serialized sketch per group key and unions each micro-batch's partial
 into it — a streaming COUNT(DISTINCT) with constant state, the thing the
 exact aggregation fundamentally cannot do at 100 TB/day ingest.
 
-Also provided: watermarked tumbling-window distinct counts built from the
-same kernel (late data beyond the watermark is dropped by Spark's window
+One fold, :func:`_sketch_per_key`, serves every per-key sketch stream:
+per-key HLL, any ``SketchSpec`` (theta, CMS, ...), Misra-Gries top-k,
+KLL/t-digest quantiles and watermarked tumbling/sliding windows. Each
+public function is a projection, a spec and an emit; the output ``key``
+keeps the key column's own Spark type. Window deadlines are epoch-ms
+computed JVM-side, so state eviction does not depend on the session
+time zone (late data beyond the watermark is dropped by Spark's window
 machinery; within the window the sketch union is order-insensitive, so
-late-but-accepted rows land exactly).
+late-but-accepted rows land exactly). Gap-based sessions keep their own
+update: their state is an open session that splits into segments, not
+a sketch fold.
 """
 
 from __future__ import annotations
@@ -23,12 +30,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
+from ..operators.agg import SketchSpec, hll_spec
+from ..operators.sketches import kll_spec, mg_spec
 from ..sketchlib.hll import HllConfig, HllSketch
 
 STATE_SCHEMA = StructType(
@@ -45,6 +55,83 @@ SESSION_STATE_SCHEMA = StructType(
 )
 
 
+def _sketch_per_key(
+    keyed: DataFrame,
+    keys: list[str],
+    spec: SketchSpec,
+    emit,
+    out_fields: list[StructField],
+    timeout_ms=None,
+) -> DataFrame:
+    """The one stateful fold behind every per-key streaming sketch.
+
+    Groups ``keyed`` on ``keys`` and keeps ONE serialized ``spec``
+    sketch plus a row count per key (``STATE_SCHEMA``): each call
+    restores the sketch, folds every chunk's ``__v`` column in with
+    ``spec.update_fn``, stores it back and yields
+    ``emit(key, sketch, blob, rows)`` (a pandas frame of ``out_fields``).
+    With ``timeout_ms(key)`` the state arms an event-time timeout at that
+    epoch-ms (never below the current watermark) and is removed once the
+    watermark passes it; without it, state lives as long as the query.
+    """
+
+    def update(
+        key: Tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            # the watermark passed the key's deadline: no more rows can be
+            # admitted, so the sketch is final — drop it
+            state.remove()
+            return
+        if state.exists:
+            blob, rows = state.get
+            sketch = spec.from_bytes_fn(bytes(blob))
+        else:
+            sketch, rows = spec.zero_fn(), 0
+        for pdf in batches:
+            sketch = spec.update_fn(sketch, pdf["__v"].to_numpy())
+            rows += len(pdf)
+        blob = spec.to_bytes_fn(sketch)
+        state.update((blob, rows))
+        if timeout_ms is not None:
+            state.setTimeoutTimestamp(
+                max(timeout_ms(key), state.getCurrentWatermarkMs() + 1)
+            )
+        yield emit(key, sketch, blob, rows)
+
+    return keyed.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=StructType(out_fields),
+        stateStructType=STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if timeout_ms is None
+            else GroupStateTimeout.EventTimeTimeout
+        ),
+    )
+
+
+_HLL_FIELDS = [
+    StructField("distinct_estimate", LongType()),
+    StructField("rows_seen", LongType()),
+    StructField("sketch", BinaryType()),
+]
+
+
+def _hll_row(key, sketch, blob, rows) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "key": [key],
+            "distinct_estimate": [sketch.estimate()],
+            "rows_seen": [rows],
+            "sketch": [blob],
+        }
+    )
+
+
 def streaming_hll_distinct(
     stream_df: DataFrame,
     col: str,
@@ -54,55 +141,19 @@ def streaming_hll_distinct(
     """Continuously-updated distinct count per ``key_col``.
 
     Emits (key, distinct_estimate, rows_seen, sketch) after every
-    micro-batch that touches the key. State per key is one serialized
-    sketch — bounded by the FULL representation size regardless of
-    stream length.
+    micro-batch that touches the key; ``key`` keeps ``key_col``'s type.
+    State per key is one serialized sketch — bounded by the FULL
+    representation size regardless of stream length.
     """
-    cfg = cfg or HllConfig()
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("distinct_estimate", LongType()),
-            StructField("rows_seen", LongType()),
-            StructField("sketch", BinaryType()),
-        ]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
-        else:
-            sketch, rows = HllSketch.empty(cfg), 0
-        for pdf in batches:
-            vals = pdf["__h"].to_numpy(np.int64)
-            sketch.add_hashed(vals)
-            rows += len(pdf)
-        blob = sketch.to_bytes()
-        state.update((blob, rows))
-        yield pd.DataFrame(
-            {
-                "key": [str(key[0])],
-                "distinct_estimate": [sketch.estimate()],
-                "rows_seen": [rows],
-                "sketch": [blob],
-            }
-        )
-
     hashed = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.xxhash64(F.col(col)).alias("__h"),
+        F.col(key_col), F.xxhash64(F.col(col)).alias("__v")
     )
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _sketch_per_key(
+        hashed,
+        [key_col],
+        hll_spec(cfg),
+        lambda key, sketch, blob, rows: _hll_row(key[0], sketch, blob, rows),
+        [StructField("key", hashed.schema[key_col].dataType)] + _HLL_FIELDS,
     )
 
 
@@ -126,81 +177,39 @@ def windowed_hll_distinct(
 
     Window assignment and watermarking are Spark built-ins; the sketch
     union inside each window group reuses the batch kernel. The stateful
-    operator is keyed by the window's (start, end) *timestamps* — not a
-    string cast — and uses ``EventTimeTimeout``: each update arms a
-    timeout at the window end, so once the watermark passes the window
-    (no further rows can be admitted) the state is removed. Per-window
-    state is therefore evicted, not grown without bound, on a
-    long-running stream.
+    operator is keyed by the window start *timestamp* plus the window
+    end in epoch milliseconds (computed JVM-side, so it is an instant
+    whatever the session time zone) and uses ``EventTimeTimeout``: each
+    update arms a timeout at the window end, so once the watermark
+    passes the window (no further rows can be admitted) the state is
+    removed. Per-window state is therefore evicted, not grown without
+    bound, on a long-running stream.
     """
-    cfg = cfg or HllConfig()
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("distinct_estimate", LongType()),
-            StructField("rows_seen", LongType()),
-            StructField("sketch", BinaryType()),
-        ]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        win_start, win_end = key
-        if state.hasTimedOut:
-            # watermark passed the window end: no more rows can be
-            # admitted for this window, so the sketch is final — drop it.
-            state.remove()
-            return
-        if state.exists:
-            blob, rows = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
-        else:
-            sketch, rows = HllSketch.empty(cfg), 0
-        for pdf in batches:
-            sketch.add_hashed(pdf["__h"].to_numpy(np.int64))
-            rows += len(pdf)
-        blob = sketch.to_bytes()
-        state.update((blob, rows))
-        end_ms = int(pd.Timestamp(win_end).value // 1_000_000)
-        # the timeout must sit above the current watermark; windows whose
-        # end already trails the watermark time out on the next trigger
-        state.setTimeoutTimestamp(max(end_ms, state.getCurrentWatermarkMs() + 1))
-        yield pd.DataFrame(
-            {
-                "key": [str(win_start)],
-                "distinct_estimate": [sketch.estimate()],
-                "rows_seen": [rows],
-                "sketch": [blob],
-            }
-        )
-
     # The watermark is declared on win_start (the grouping key), the
     # event-time column that actually reaches the stateful operator.
     # Since win_start <= ts, the effective late-data allowance is
     # `watermark` plus at most one window length — never shorter than
-    # requested — and the state timeout below still fires once no row
-    # for the window can be admitted.
+    # requested — and the state timeout still fires once no row for the
+    # window can be admitted.
     bucketed = (
         stream_df.select(
             F.window(F.col(ts_col), window, slide or window).alias("__w"),
-            F.xxhash64(F.col(col)).alias("__h"),
+            F.xxhash64(F.col(col)).alias("__v"),
         )
         .select(
             F.col("__w.start").alias("win_start"),
-            F.col("__w.end").alias("win_end"),
-            "__h",
+            F.unix_millis(F.col("__w.end")).alias("end_ms"),
+            "__v",
         )
         .withWatermark("win_start", watermark)
     )
-    return bucketed.groupBy("win_start", "win_end").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _sketch_per_key(
+        bucketed,
+        ["win_start", "end_ms"],
+        hll_spec(cfg),
+        lambda key, sketch, blob, rows: _hll_row(str(key[0]), sketch, blob, rows),
+        [StructField("key", StringType())] + _HLL_FIELDS,
+        timeout_ms=lambda key: int(key[1]),
     )
 
 
@@ -368,43 +377,21 @@ def streaming_sketch_distinct(
     estimate/probe with the sketch's scalar UDFs downstream. State stays
     bounded by the sketch's own size contract.
     """
-    out_schema = StructType(
+    hashed = stream_df.select(
+        F.col(key_col), F.xxhash64(F.col(col)).alias("__v")
+    )
+    return _sketch_per_key(
+        hashed,
+        [key_col],
+        spec,
+        lambda key, sketch, blob, rows: pd.DataFrame(
+            {"key": [key[0]], "sketch": [blob], "rows_seen": [rows]}
+        ),
         [
-            StructField("key", StringType()),
+            StructField("key", hashed.schema[key_col].dataType),
             StructField("sketch", BinaryType()),
             StructField("rows_seen", LongType()),
-        ]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            sketch = spec.from_bytes_fn(bytes(blob))
-        else:
-            sketch, rows = spec.zero_fn(), 0
-        for pdf in batches:
-            sketch = spec.update_fn(sketch, pdf["__h"].to_numpy(np.int64))
-            rows += len(pdf)
-        blob = spec.to_bytes_fn(sketch)
-        state.update((blob, rows))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "sketch": [blob], "rows_seen": [rows]}
-        )
-
-    hashed = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.xxhash64(F.col(col)).alias("__h"),
-    )
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
     )
 
 
@@ -436,37 +423,12 @@ def streaming_mg_topk(
     """
     if top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
-    from ..sketchlib.mg import MisraGries
 
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("rank", LongType()),
-            StructField("item", StringType()),
-            StructField("est_count", LongType()),
-            StructField("max_undercount", LongType()),
-            StructField("rows_seen", LongType()),
-        ]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            mg = MisraGries.from_bytes(bytes(blob))
-        else:
-            mg, rows = MisraGries(k), 0
-        for pdf in batches:
-            mg.update(pdf["__item"])
-            rows += len(pdf)
-        state.update((mg.to_bytes(), rows))
+    def emit(key, mg, blob, rows) -> pd.DataFrame:
         top = mg.top(top_n)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
-                "key": [str(key[0])] * len(top),
+                "key": [key[0]] * len(top),
                 "rank": np.arange(1, len(top) + 1, dtype=np.int64),
                 "item": [i for i, _ in top],
                 "est_count": np.array([c for _, c in top], dtype=np.int64),
@@ -476,15 +438,21 @@ def streaming_mg_topk(
         )
 
     items = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.col(item_col).cast("string").alias("__item"),
+        F.col(key_col), F.col(item_col).cast("string").alias("__v")
     )
-    return items.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _sketch_per_key(
+        items,
+        [key_col],
+        mg_spec(k),
+        emit,
+        [
+            StructField("key", items.schema[key_col].dataType),
+            StructField("rank", LongType()),
+            StructField("item", StringType()),
+            StructField("est_count", LongType()),
+            StructField("max_undercount", LongType()),
+            StructField("rows_seen", LongType()),
+        ],
     )
 
 
@@ -503,60 +471,35 @@ def streaming_quantiles(
     The projection difference from :func:`streaming_sketch_distinct`
     is the point: quantile sketches ORDER raw values, so the column
     streams in as doubles, never hashed. NULL/NaN values are dropped
-    (SQL aggregate semantics). State stays bounded by the sketch's own
+    JVM-side (SQL aggregate semantics), so ``rows_seen`` counts only the
+    values folded in. State stays bounded by the sketch's own
     size contract (KLL: O(k log(n/k)) items per key) regardless of
     stream length — the percentile dashboard the exact sort cannot
     provide over an unbounded stream. Quantile columns are named
     ``p50``-style from ``qs`` (dots -> underscores, so 0.999 -> p99_9).
     """
-    from ..operators.sketches import kll_spec
-
-    spec = spec or kll_spec()
     names = [("p" + format(q * 100, "g")).replace(".", "_") for q in qs]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate quantile columns from qs={qs}")
-    from pyspark.sql.types import DoubleType
 
-    out_schema = StructType(
+    def emit(key, sketch, blob, rows) -> pd.DataFrame:
+        row = {"key": [key[0]], "sketch": [blob], "rows_seen": [rows]}
+        for n, q in zip(names, qs):
+            row[n] = [float(sketch.quantile(q)) if rows else float("nan")]
+        return pd.DataFrame(row)
+
+    projected = stream_df.select(
+        F.col(key_col), F.col(col).cast("double").alias("__v")
+    ).where(F.col("__v").isNotNull() & ~F.isnan("__v"))
+    return _sketch_per_key(
+        projected,
+        [key_col],
+        spec or kll_spec(),
+        emit,
         [
-            StructField("key", StringType()),
+            StructField("key", projected.schema[key_col].dataType),
             StructField("sketch", BinaryType()),
             StructField("rows_seen", LongType()),
         ]
-        + [StructField(n, DoubleType()) for n in names]
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, rows = state.get
-            sketch = spec.from_bytes_fn(bytes(blob))
-        else:
-            sketch, rows = spec.zero_fn(), 0
-        for pdf in batches:
-            vals = pdf["__v"].to_numpy(np.float64)
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                sketch = spec.update_fn(sketch, vals)
-                rows += len(vals)
-        blob = spec.to_bytes_fn(sketch)
-        state.update((blob, rows))
-        row = {"key": [str(key[0])], "sketch": [blob], "rows_seen": [rows]}
-        for n, q in zip(names, qs):
-            row[n] = [float(sketch.quantile(q)) if rows else float("nan")]
-        yield pd.DataFrame(row)
-
-    projected = stream_df.select(
-        F.col(key_col).cast("string").alias(key_col),
-        F.col(col).cast("double").alias("__v"),
-    ).where(F.col("__v").isNotNull())
-    return projected.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        + [StructField(n, DoubleType()) for n in names],
     )

@@ -621,3 +621,29 @@ def test_embedding_join_matches_allpairs_on_random_vectors(spark):
         if round(cos[i, j], 6) >= 0.98
     }
     assert got == want  # tuned for miss prob <= 1e-6 at the threshold
+
+
+def test_minhash_cache_hash_collision_rebuilds(spark, monkeypatch):
+    """Two different inputs whose analyzed plans share a semantic hash
+    must not share the cached signature frame: sameResult confirms a
+    slot match, so the second input gets its own pairs."""
+    from hll_spark.operators import scanutil
+    from hll_spark.operators.dedup import clear_minhash_cache, minhash_lsh_pairs
+
+    def body(i):
+        return " ".join(f"w{i}_{j}" for j in range(40))
+
+    def pairs(rows):
+        df = spark.createDataFrame(rows, ["doc_id", "text"])
+        got = minhash_lsh_pairs(df, "text", "doc_id", threshold=0.5).collect()
+        return sorted((r.id_a, r.id_b) for r in got)
+
+    a = [(1, body(0)), (2, body(0)), (3, body(1))]
+    b = [(10, body(2)), (11, body(2)), (12, body(3))]
+    monkeypatch.setattr(scanutil, "plan_hash", lambda df: 0)
+    clear_minhash_cache()
+    try:
+        assert pairs(a) == [(1, 2)]
+        assert pairs(b) == [(10, 11)]
+    finally:
+        clear_minhash_cache()

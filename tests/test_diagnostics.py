@@ -243,11 +243,11 @@ def test_fk_report_semantic_hash_collision_keeps_tables_apart(spark, monkeypatch
     # hash must still be scanned separately: sameResult confirms a match
     from pyspark.sql import functions as F
 
-    from hll_spark.operators import diagnostics
+    from hll_spark.operators import diagnostics, scanutil
 
     a = spark.range(10).select(F.col("id").alias("k"))
     b = spark.range(5, 25).select(F.col("id").alias("k"))
-    monkeypatch.setattr(diagnostics, "_plan_hash", lambda df: 0)
+    monkeypatch.setattr(scanutil, "plan_hash", lambda df: 0)
     out = {
         (r["child_label"], r["parent_label"]): r.asDict()
         for r in diagnostics.fk_containment_report(

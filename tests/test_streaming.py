@@ -747,3 +747,110 @@ def test_streaming_dedup_increment_rejects_bad_index(spark, tmp_path):
         streaming_dedup_increment(
             stream, bad, "text", "doc_id", str(tmp_path / "o")
         )
+
+
+@pytest.fixture
+def session_tz(spark):
+    """Sets the session time zone for one test and restores it after."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    yield lambda tz: spark.conf.set(key, tz)
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_windowed_eviction_ignores_session_time_zone(
+    spark, tmp_path, session_tz, tz
+):
+    """A window's state lives until the watermark passes the window's end
+    INSTANT, whatever the session time zone: a late row the watermark
+    still admits joins the window's sketch instead of a fresh state."""
+    session_tz(tz)
+    src, ck, outd = (str(tmp_path / d) for d in ("src", "ck", "out"))
+    base = pd.Timestamp("2024-01-01 00:00:00")
+
+    def run_once(users, minutes):
+        pdf = pd.DataFrame(
+            {
+                "user_id": users,
+                "event_type": ["x"] * len(users),
+                "ts": base + pd.to_timedelta(minutes, unit="m"),
+            }
+        )
+        spark.createDataFrame(pdf).write.mode("append").parquet(src)
+        return run_stream(
+            spark,
+            src,
+            ck,
+            lambda s: windowed_hll_distinct(
+                s, "user_id", "ts", "1 hour", "2 hours", CFG
+            ),
+            outd,
+        )
+
+    run_once(np.arange(10), [70] * 10)  # 01:10, window [01:00, 02:00)
+    run_once([100], [150])  # 02:30: watermark -> 00:00, window still open
+    got = run_once([50], [105])  # late 01:45, admitted by the watermark
+    row = got.set_index("key").loc["2024-01-01 01:00:00"]
+    assert (row["distinct_estimate"], row["rows_seen"]) == (11, 11)
+
+
+@pytest.mark.parametrize("key_col", ["grp", "day"])
+def test_streamed_keys_keep_type_and_match_batch_bytes(spark, tmp_path, key_col):
+    """The output ``key`` keeps the key column's Spark type (long, date),
+    and each key's sketch after two micro-batches is byte-equal to the
+    batch aggregate over the same rows."""
+    from hll_spark.operators.agg import hll_sketch_agg
+    from hll_spark.operators.sketches import theta_sketch_agg, theta_spec
+    from hll_spark.streaming.stateful import streaming_sketch_distinct
+
+    rng = np.random.default_rng(5)
+    src = str(tmp_path / "src")
+    schema = "user_id long, grp long, day date"
+    for _ in range(2):  # one file each; maxFilesPerTrigger=1 -> two batches
+        grp = rng.integers(0, 3, 2000)
+        day = pd.Timestamp("2024-03-01") + pd.to_timedelta(grp, unit="D")
+        pdf = pd.DataFrame(
+            {"user_id": rng.integers(0, 5000, 2000), "grp": grp, "day": day.date}
+        )
+        spark.createDataFrame(pdf, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    rows_in = spark.read.schema(schema).parquet(src)
+    cases = [
+        (
+            lambda s: streaming_sketch_distinct(
+                s, "user_id", key_col, theta_spec(4096)
+            ),
+            theta_sketch_agg(rows_in, "user_id", 4096, by=[key_col]),
+        ),
+        (
+            lambda s: streaming_hll_distinct(s, "user_id", key_col, CFG),
+            hll_sketch_agg(rows_in, "user_id", by=[key_col], cfg=CFG),
+        ),
+    ]
+    for i, (build, batch) in enumerate(cases):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        out = build(stream)
+        assert out.schema["key"].dataType == stream.schema[key_col].dataType
+        emitted = []
+        q = (
+            out.writeStream.foreachBatch(
+                lambda bdf, bid: emitted.extend(bdf.collect())
+            )
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / f"ck{i}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        latest = {}
+        for r in sorted(emitted, key=lambda r: r.rows_seen):
+            latest[r.key] = bytes(r.sketch)
+        want = {r[key_col]: bytes(r.sketch) for r in batch.collect()}
+        assert len(want) == 3 and latest == want
+        assert len(emitted) == 6  # every key emitted in both micro-batches
