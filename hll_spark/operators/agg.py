@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     DoubleType,
     FloatType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -412,6 +413,61 @@ def sketch_partials(
             yield from _partials_table(spec, keys, states, counts, names).to_batches()
 
     return proj.mapInArrow(build, out_schema)
+
+
+def column_partials(
+    df: DataFrame, cols: dict, spec: SketchSpec, hash_mode: str | None = "xxhash64"
+) -> DataFrame:
+    """One scan, one ``spec`` sketch per labelled column: the level 0 of
+    :func:`sketch_partials` widened across columns instead of groups.
+
+    ``cols`` maps a label to a Column (a list of Columns with
+    ``hash_mode='arrow'``). Output:
+    ``label string, sketch binary, rows_seen long``, one row per
+    (input partition, label), emitted even when the partition has no
+    rows; merge with ``merge_sketch_partials(partials, spec, by=["label"])``.
+    ``hash_mode`` is as in :func:`sketch_partials`, but rows are never
+    filtered (another label's column may be non-null): 'xxhash64' hashes
+    non-null values JVM-side, 'murmur3' / None / 'raw' ship one raw
+    column whose NULLs :func:`_arrow_values` drops, and 'arrow' hands
+    the spec the label's list of Arrow arrays with NULLs kept, so its
+    ``rows_seen`` counts every row.
+    """
+    labels, spans, proj = list(cols), [], []
+    for lbl in labels:
+        cs = list(cols[lbl]) if isinstance(cols[lbl], (list, tuple)) else [cols[lbl]]
+        if hash_mode != "arrow" and len(cs) != 1:
+            raise ValueError(f"label {lbl!r}: several Columns need hash_mode='arrow'")
+        if hash_mode == "xxhash64":
+            cs = [F.when(cs[0].isNotNull(), F.xxhash64(cs[0]))]
+        spans.append((len(proj), len(proj) + len(cs)))
+        proj += [c.alias(f"__v{len(proj) + i}") for i, c in enumerate(cs)]
+    out_schema = StructType(
+        [
+            StructField("label", StringType()),
+            StructField("sketch", BinaryType()),
+            StructField("rows_seen", LongType()),
+        ]
+    )
+    names = [f.name for f in out_schema]
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        states = [spec.zero_fn() for _ in labels]
+        counts = [0] * len(labels)
+        for rb in batches:
+            for i, (lo, hi) in enumerate(spans):
+                if hash_mode == "arrow":
+                    v, n = rb.columns[lo:hi], rb.num_rows
+                else:
+                    v = _arrow_values(rb.column(lo), hash_mode)
+                    n = len(v)
+                if n:
+                    states[i] = spec.update_fn(states[i], v)
+                    counts[i] += n
+        keys = [pa.array(labels, pa.string())]
+        yield from _partials_table(spec, keys, states, counts, names).to_batches()
+
+    return df.select(*proj).mapInArrow(build, out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -20,15 +20,13 @@ per DISTINCT key, and AQE coalesces the tiny result.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import reduce
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     LongType,
     NumericType,
@@ -183,6 +181,92 @@ def join_plan_report(
     )
 
 
+def _profile_spec(hll_cfg, mg_k: int, kll_k: int):
+    """Every estimator of :func:`profile_table` over one column, as one
+    ``hash_mode='arrow'`` spec.
+
+    A state is [HLL, Misra-Gries, KLL, exact fields]; update takes the
+    column's [xxhash64 or NULL, string rendering, double view if
+    numeric] arrays. The bytes are the four parts, each length-prefixed,
+    the exact fields (null count, summed length, extrema) as JSON: these
+    blobs never leave the job.
+    """
+    import json
+    import struct
+
+    import pyarrow.compute as pc
+
+    from ..sketchlib.hll import HllConfig, HllSketch
+    from ..sketchlib.kll import KllSketch
+    from ..sketchlib.mg import MisraGries
+    from .agg import SketchSpec
+
+    cfg = hll_cfg or HllConfig()
+
+    def zero():
+        ex = {"n_null": 0, "total_len": 0}
+        ex.update(dict.fromkeys(("min_str", "max_str", "min_num", "max_num")))
+        return [HllSketch.empty(cfg), MisraGries(mg_k), KllSketch(kll_k), ex]
+
+    def extend(ex, kind, lo, hi):
+        if ex["min_" + kind] is None or lo < ex["min_" + kind]:
+            ex["min_" + kind] = lo
+        if ex["max_" + kind] is None or hi > ex["max_" + kind]:
+            ex["max_" + kind] = hi
+
+    def update(st, arrays):
+        hll, mg, kll, ex = st
+        h, s = arrays[0], arrays[1].drop_null()
+        ex["n_null"] += h.null_count
+        hv = h.drop_null()
+        if len(hv):
+            hll.add_hashed(hv.to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
+        if len(s):
+            ex["total_len"] += int(pc.sum(pc.utf8_length(s)).as_py() or 0)
+            mm = pc.min_max(s)
+            extend(ex, "str", mm["min"].as_py(), mm["max"].as_py())
+            vc = s.value_counts()
+            mg.update_counts(
+                vc.field("values").to_pylist(),
+                vc.field("counts").to_numpy(zero_copy_only=False),
+            )
+        if len(arrays) > 2:
+            v = arrays[2].drop_null().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            v = v[~np.isnan(v)]
+            if v.size:
+                kll.update(v)
+                extend(ex, "num", float(v.min()), float(v.max()))
+        return st
+
+    def merge(a, b):
+        ea, eb = a[3], b[3]
+        ea["n_null"] += eb["n_null"]
+        ea["total_len"] += eb["total_len"]
+        for kind in ("str", "num"):
+            if eb["min_" + kind] is not None:
+                extend(ea, kind, eb["min_" + kind], eb["max_" + kind])
+        return [a[0].union(b[0]), a[1].merge(b[1]), a[2].merge(b[2]), ea]
+
+    def to_bytes(st):
+        parts = [st[0].to_bytes(), st[1].to_bytes(), st[2].to_bytes(), json.dumps(st[3]).encode()]
+        return b"".join(struct.pack("<I", len(p)) + p for p in parts)
+
+    def from_bytes(blob):
+        parts, pos = [], 0
+        while pos < len(blob):
+            (n,) = struct.unpack_from("<I", blob, pos)
+            parts.append(blob[pos + 4 : pos + 4 + n])
+            pos += 4 + n
+        return [
+            HllSketch.from_bytes(parts[0]),
+            MisraGries.from_bytes(parts[1]),
+            KllSketch.from_bytes(parts[2]),
+            json.loads(parts[3]),
+        ]
+
+    return SketchSpec("profile", zero, update, merge, to_bytes, from_bytes)
+
+
 def profile_table(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -213,14 +297,15 @@ def profile_table(
     - ``quantiles`` — KLL estimates at the requested ranks (numeric
       columns only; exact while n fits the un-compacted sketch)
 
-    Execution shape (the agg.py scaffold, widened to all columns at
-    once): the scan projects ONLY the profiled columns (column pruning
-    reaches parquet), one ``mapInArrow`` pass builds every sketch for
-    every column per input partition — rows never shuffle; the shuffle
-    carries ``partitions x columns`` small blob rows — and a final
-    ``groupBy(col_name).applyInPandas`` merges partials and renders
-    estimates, one reducer per column. At 10^12 rows the cost is the
-    one pruned scan; everything downstream is KBs.
+    Execution shape (the agg.py scaffold, one label per column): the
+    scan projects ONLY the profiled columns (column pruning reaches
+    parquet) into flat Columns, ``agg.column_partials`` builds every
+    column's composite sketch (:func:`_profile_spec`) per input
+    partition — rows never shuffle; the shuffle carries ``partitions x
+    columns`` small blob rows — ``merge_sketch_partials`` merges them by
+    label, and a narrow ``mapInArrow`` in the merge's tasks renders the
+    estimates. At 10^12 rows the cost is the one pruned scan;
+    everything downstream is KBs.
 
     The per-batch kernels stay vectorized: HLL updates from the
     zero-copy int64 hash view, Misra-Gries from one Arrow
@@ -229,11 +314,9 @@ def profile_table(
     view. Only simple (atomic) column types are supported.
     """
     import pyarrow as pa
-    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..sketchlib.hll import HllConfig, HllSketch
-    from ..sketchlib.kll import KllSketch
-    from ..sketchlib.mg import MisraGries
+    from .agg import column_partials, merge_sketch_partials
 
     cols = list(df.columns if columns is None else columns)
     if not cols:
@@ -241,139 +324,22 @@ def profile_table(
     for c in cols:
         if c not in df.columns:
             raise ValueError(f"unknown column {c!r}")
-    cfg = hll_cfg or HllConfig()
     qs = [float(q) for q in quantiles]
     is_num = {c: isinstance(df.schema[c].dataType, NumericType) for c in cols}
+    spec = _profile_spec(hll_cfg, mg_k, kll_k)
 
-    proj = []
     # per profiled column: a null-preserved JVM-side hash (xxhash64 of
     # NULL would otherwise count a phantom distinct), the string
     # rendering, and — numeric only — the double view for KLL/min/max
-    for i, c in enumerate(cols):
+    flat = {}
+    for c in cols:
         col = F.col(c)
-        proj.append(F.when(col.isNotNull(), F.xxhash64(col)).alias(f"__h{i}"))
-        proj.append(col.cast("string").alias(f"__s{i}"))
+        flat[c] = [F.when(col.isNotNull(), F.xxhash64(col)), col.cast("string")]
         if is_num[c]:
-            proj.append(col.cast("double").alias(f"__d{i}"))
-    src = df.select(*proj)
-    name_idx = {n: i for i, n in enumerate(src.columns)}
-
-    partial_schema = StructType(
-        [
-            StructField("col_name", StringType()),
-            StructField("n_rows", LongType()),
-            StructField("n_null", LongType()),
-            StructField("total_len", LongType()),
-            StructField("min_num", DoubleType()),
-            StructField("max_num", DoubleType()),
-            StructField("min_str", StringType()),
-            StructField("max_str", StringType()),
-            StructField("hll", BinaryType()),
-            StructField("mg", BinaryType()),
-            StructField("kll", BinaryType()),
-        ]
+            flat[c].append(col.cast("double"))
+    merged = merge_sketch_partials(
+        column_partials(df, flat, spec, hash_mode="arrow"), spec, by=["label"]
     )
-    arrow_partial = pa.schema(
-        [
-            ("col_name", pa.string()),
-            ("n_rows", pa.int64()),
-            ("n_null", pa.int64()),
-            ("total_len", pa.int64()),
-            ("min_num", pa.float64()),
-            ("max_num", pa.float64()),
-            ("min_str", pa.string()),
-            ("max_str", pa.string()),
-            ("hll", pa.binary()),
-            ("mg", pa.binary()),
-            ("kll", pa.binary()),
-        ]
-    )
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        n_rows = 0
-        st = {
-            c: {
-                "null": 0,
-                "len": 0,
-                "min_num": None,
-                "max_num": None,
-                "min_str": None,
-                "max_str": None,
-                "hll": HllSketch.empty(cfg),
-                "mg": MisraGries(mg_k),
-                "kll": KllSketch(kll_k) if is_num[c] else None,
-            }
-            for c in cols
-        }
-        saw = False
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            saw = True
-            n_rows += rb.num_rows
-            for i, c in enumerate(cols):
-                s = st[c]
-                h = rb.column(name_idx[f"__h{i}"])
-                s["null"] += h.null_count
-                hv = h.drop_null()
-                if len(hv):
-                    s["hll"].add_hashed(
-                        hv.to_numpy(zero_copy_only=False).astype(
-                            np.int64, copy=False
-                        )
-                    )
-                sarr = rb.column(name_idx[f"__s{i}"]).drop_null()
-                if len(sarr):
-                    tl = pc.sum(pc.utf8_length(sarr)).as_py()
-                    s["len"] += int(tl or 0)
-                    mm = pc.min_max(sarr)
-                    lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                    if s["min_str"] is None or lo < s["min_str"]:
-                        s["min_str"] = lo
-                    if s["max_str"] is None or hi > s["max_str"]:
-                        s["max_str"] = hi
-                    vc = sarr.value_counts()
-                    s["mg"].update_counts(
-                        vc.field("values").to_pylist(),
-                        vc.field("counts").to_numpy(zero_copy_only=False),
-                    )
-                if is_num[c]:
-                    d = rb.column(name_idx[f"__d{i}"]).drop_null()
-                    if len(d):
-                        v = d.to_numpy(zero_copy_only=False).astype(
-                            np.float64, copy=False
-                        )
-                        v = v[~np.isnan(v)]
-                        if v.size:
-                            s["kll"].update(v)
-                            lo, hi = float(v.min()), float(v.max())
-                            if s["min_num"] is None or lo < s["min_num"]:
-                                s["min_num"] = lo
-                            if s["max_num"] is None or hi > s["max_num"]:
-                                s["max_num"] = hi
-        if not saw:
-            return
-        yield pa.RecordBatch.from_pydict(
-            {
-                "col_name": cols,
-                "n_rows": [n_rows] * len(cols),
-                "n_null": [st[c]["null"] for c in cols],
-                "total_len": [st[c]["len"] for c in cols],
-                "min_num": [st[c]["min_num"] for c in cols],
-                "max_num": [st[c]["max_num"] for c in cols],
-                "min_str": [st[c]["min_str"] for c in cols],
-                "max_str": [st[c]["max_str"] for c in cols],
-                "hll": [st[c]["hll"].to_bytes() for c in cols],
-                "mg": [st[c]["mg"].to_bytes() for c in cols],
-                "kll": [
-                    st[c]["kll"].to_bytes() if st[c]["kll"] is not None else None
-                    for c in cols
-                ],
-            },
-            schema=arrow_partial,
-        )
-
-    partials = src.mapInArrow(build, partial_schema)
 
     out_schema = StructType(
         [
@@ -392,121 +358,37 @@ def profile_table(
             StructField("quantiles", ArrayType(DoubleType())),
         ]
     )
+    arrow_out = to_arrow_schema(out_schema)
 
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        hll = None
-        mg = None
-        kll = None
-        for blob in pdf["hll"]:
-            s = HllSketch.from_bytes(bytes(blob))
-            hll = s if hll is None else hll.union(s)
-        for blob in pdf["mg"]:
-            s = MisraGries.from_bytes(bytes(blob))
-            mg = s if mg is None else mg.merge(s)
-        for blob in pdf["kll"]:
-            if blob is None:
-                continue
-            s = KllSketch.from_bytes(bytes(blob))
-            kll = s if kll is None else kll.merge(s)
-        mins = [x for x in pdf["min_str"] if x is not None]
-        maxs = [x for x in pdf["max_str"] if x is not None]
-        minn = pdf["min_num"].dropna()
-        maxn = pdf["max_num"].dropna()
-        top = mg.top(top_n)
-        return pd.DataFrame(
-            [
-                {
-                    "col_name": pdf["col_name"].iloc[0],
-                    "n_rows": int(pdf["n_rows"].sum()),
-                    "n_null": int(pdf["n_null"].sum()),
-                    "n_distinct_est": int(hll.estimate()),
-                    "total_len": int(pdf["total_len"].sum()),
-                    "min_str": min(mins) if mins else None,
-                    "max_str": max(maxs) if maxs else None,
-                    "min_num": float(minn.min()) if len(minn) else None,
-                    "max_num": float(maxn.max()) if len(maxn) else None,
-                    "top_values": [v for v, _ in top],
-                    "top_counts": [int(n) for _, n in top],
-                    "mg_err_bound": int(mg.error_bound),
-                    "quantiles": (
-                        [float(x) for x in kll.quantiles(qs)]
-                        if kll is not None and qs
-                        else None
-                    ),
-                }
-            ]
-        )
-
-    return partials.groupBy("col_name").applyInPandas(finish, out_schema)
-
-
-def _multi_theta_sketches(
-    df: DataFrame, col_lbls: list, k: int, hash_mode: str
-) -> DataFrame:
-    """(label, sketch) — one theta sketch per requested column of ONE
-    table, from a single scan (profile_table's one-scan-many-sketches
-    shape): per input partition the mapInArrow kernel updates every
-    column's sketch from the same batches, then the per-label partials
-    tree-merge. Sketch values are identical to per-column
-    ``theta_sketch_agg`` runs — the same null-dropped hashed values
-    feed the same update/merge kernels."""
-    import pyarrow as pa
-
-    from ..sketchlib.theta import ThetaSketch
-    from .agg import _arrow_values, merge_sketch_partials
-    from .sketches import theta_spec
-
-    spec = theta_spec(k)
-    proj = []
-    for i, (col, _) in enumerate(col_lbls):
-        c = F.col(col)
-        if hash_mode == "xxhash64":
-            proj.append(
-                F.when(c.isNotNull(), F.xxhash64(c)).alias(f"__h{i}")
-            )
-        else:
-            proj.append(c.alias(f"__h{i}"))
-    src = df.select(*proj)
-    labels = [lbl for _, lbl in col_lbls]
-
-    partial_schema = StructType(
-        [
-            StructField("label", StringType()),
-            StructField("sketch", BinaryType()),
-            StructField("rows_seen", LongType()),
-        ]
-    )
-    arrow_schema = pa.schema(
-        [
-            ("label", pa.string()),
-            ("sketch", pa.binary()),
-            ("rows_seen", pa.int64()),
-        ]
-    )
-
-    def build(batches) -> "Iterator[pa.RecordBatch]":
-        states = [spec.zero_fn() for _ in labels]
-        rows = [0] * len(labels)
+    def render(batches):
         for rb in batches:
-            if not rb.num_rows:
-                continue
-            for i in range(len(labels)):
-                vals = _arrow_values(rb.column(i), hash_mode)
-                states[i] = spec.update_fn(states[i], vals)
-                rows[i] += len(vals)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "label": labels,
-                "sketch": [spec.to_bytes_fn(s) for s in states],
-                "rows_seen": rows,
-            },
-            schema=arrow_schema,
-        )
+            rows = []
+            part = rb.to_pydict()
+            for label, blob, n_rows in zip(part["label"], part["sketch"], part["rows_seen"]):
+                if not n_rows:
+                    continue
+                hll, mg, kll, ex = spec.from_bytes_fn(blob)
+                top = mg.top(top_n)
+                rows.append(
+                    {
+                        **ex,
+                        "col_name": label,
+                        "n_rows": n_rows,
+                        "n_distinct_est": int(hll.estimate()),
+                        "top_values": [v for v, _ in top],
+                        "top_counts": [int(n) for _, n in top],
+                        "mg_err_bound": int(mg.error_bound),
+                        # an empty sketch's NaN ranks render as NULLs
+                        "quantiles": (
+                            [None if np.isnan(x) else float(x) for x in kll.quantiles(qs)]
+                            if is_num[label] and qs
+                            else None
+                        ),
+                    }
+                )
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_out)
 
-    partials = src.mapInArrow(build, partial_schema)
-    return merge_sketch_partials(partials, spec, by=["label"]).select(
-        "label", "sketch"
-    )
+    return merged.mapInArrow(render, out_schema)
 
 
 def fk_containment_report(
@@ -519,10 +401,12 @@ def fk_containment_report(
     foreign keys into which — from one theta sketch per column.
 
     ``columns`` is a list of ``(df, col, label)`` triples (labels must
-    be unique). Each column is scanned ONCE, projected to just that
-    column (pruning reaches the source), and collapsed to a single
-    k-row theta sketch; every ordered pair (child, parent) is then
-    answered from the tiny blob frame via a broadcast join:
+    be unique). Each source plan is scanned ONCE, projected to its
+    requested columns (pruning reaches the source), and built into one
+    theta sketch per column by ``agg.column_partials``; the partials of
+    every source go through ONE merge by label, and every ordered pair
+    (child, parent) is then answered from the tiny blob frame via a
+    broadcast join:
 
     - ``distinct_child`` / ``distinct_parent`` — cardinality estimates
     - ``intersect_est`` — the theta DIRECT common-theta intersection
@@ -547,12 +431,9 @@ def fk_containment_report(
     from pyspark.sql.functions import broadcast
 
     from ..sketchlib.theta import ThetaSketch
+    from .agg import column_partials, merge_sketch_partials
     from .scanutil import same_result
-    from .sketches import (
-        theta_estimate_udf,
-        theta_intersect_udf,
-        theta_sketch_agg,
-    )
+    from .sketches import theta_estimate_udf, theta_intersect_udf, theta_spec
 
     cols = list(columns)
     if len(cols) < 2:
@@ -579,30 +460,20 @@ def fk_containment_report(
                 break
         else:
             by_src.append((df, [(col, lbl)]))
-    frames = []
-    for df, col_lbls in by_src:
-        if len(col_lbls) == 1:
-            col, lbl = col_lbls[0]
-            sk = theta_sketch_agg(
-                df.select(col).where(F.col(col).isNotNull()),
-                col,
-                k=k,
-                hash_mode=hash_mode,
-            )
-            frames.append(sk.select(F.lit(lbl).alias("label"), "sketch"))
-        else:
-            frames.append(
-                _multi_theta_sketches(df, col_lbls, k, hash_mode)
-            )
-    allsk = frames[0]
-    for f in frames[1:]:
-        allsk = allsk.unionByName(f)
+    spec = theta_spec(k)
+    partials = [
+        column_partials(df, {lbl: F.col(col) for col, lbl in col_lbls}, spec, hash_mode)
+        for df, col_lbls in by_src
+    ]
+    allsk = merge_sketch_partials(
+        reduce(DataFrame.unionByName, partials), spec, by=["label"]
+    )
 
     # the labels are driver-side config, so the ordered-pair frame is
     # built locally and the blobs attach via two broadcast EQUI joins
     # (no nested-loop join anywhere in the plan); the left joins +
-    # coalesce also cover empty/all-null columns, whose ungrouped agg
-    # yields 0 rows — they stay in the report with an empty sketch
+    # coalesce also cover a source with no partitions, which yields no
+    # partial rows — its columns stay in the report with an empty sketch
     pair_rows = [(c, p) for c in labels for p in labels if c != p]
     from ..localdf import fast_local_df
 

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from ..operators.agg import SketchSpec, hll_spec
@@ -167,7 +168,9 @@ def windowed_hll_distinct(
     slide: str | None = None,
 ) -> DataFrame:
     """Tumbling (default) or sliding window distinct counts with a
-    late-data watermark.
+    late-data watermark. ``ts_col`` must be a ``TIMESTAMP`` column (a
+    ``TIMESTAMP_NTZ`` one names no instant to measure the watermark in;
+    cast it with the zone it was recorded in).
 
     ``slide`` < ``window`` turns the windows sliding: Spark's window()
     assigns each event to window/slide overlapping windows (one state
@@ -185,6 +188,11 @@ def windowed_hll_distinct(
     removed. Per-window state is therefore evicted, not grown without
     bound, on a long-running stream.
     """
+    if not isinstance(stream_df.schema[ts_col].dataType, TimestampType):
+        raise ValueError(
+            f"ts_col {ts_col!r} must be TIMESTAMP, got "
+            f"{stream_df.schema[ts_col].dataType.simpleString()}"
+        )
     # The watermark is declared on win_start (the grouping key), the
     # event-time column that actually reaches the stateful operator.
     # Since win_start <= ts, the effective late-data allowance is
@@ -231,12 +239,13 @@ def session_hll_distinct(
     the session CLOSES: either a later in-gap-violating event arrives,
     or the event-time watermark passes ``last + gap`` (EventTimeTimeout,
     which also removes state for idle keys — no unbounded growth).
+    ``key`` keeps ``key_col``'s type.
     """
     cfg = cfg or HllConfig()
     gap_ms = int(gap_seconds) * 1000
     out_schema = StructType(
         [
-            StructField("key", StringType()),
+            StructField("key", stream_df.schema[key_col].dataType),
             StructField("session_start_ms", LongType()),
             StructField("session_end_ms", LongType()),
             StructField("distinct_estimate", LongType()),
@@ -246,7 +255,7 @@ def session_hll_distinct(
 
     def _row(key, start_ms, last_ms, sketch, rows):
         return {
-            "key": str(key[0]),
+            "key": key[0],
             "session_start_ms": int(start_ms),
             "session_end_ms": int(last_ms),
             "distinct_estimate": int(sketch.estimate()),
@@ -312,7 +321,7 @@ def session_hll_distinct(
             yield pd.DataFrame(closed)
 
     prepared = stream_df.withWatermark(ts_col, watermark).select(
-        F.col(key_col).cast("string").alias(key_col),
+        F.col(key_col),
         F.col(ts_col),  # watermarked event-time column must survive
         (F.col(ts_col).cast("timestamp_ltz").cast("double") * 1000)
         .cast("long")

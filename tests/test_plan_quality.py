@@ -106,8 +106,8 @@ GATED = [
     # closing-r4 additions
     "budget_mixture_by_lang",  # same pruned scan, grouped
     "fd_gram_by_label",  # per-group blob build + mapInArrow merge
-    "profile_orders_columns",  # one mapInArrow scan + per-column merge
-    "fk_discovery_tpch",  # per-column sketch scans + broadcast pair join
+    "profile_orders_columns",  # one column_partials scan + merge by label
+    "fk_discovery_tpch",  # a column_partials scan per table, ONE label merge
     "hll_overlap_events",  # ONE grouped build + single-task pair emit
     "theta_overlap_orders",  # same shape, theta DIRECT intersections
     "chunk_documents",  # pure-JVM generator projection, zero shuffles
@@ -186,8 +186,9 @@ def test_broadcast_join_for_small_dimension(spark):
 
 
 def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
-    # the scaffold's level-0 build, merge, overlap emit and sliding window
-    # answers are all mapInArrow: no pandas conversion stage in any plan
+    # the scaffold's level-0 build, merge, overlap emit, sliding window
+    # answers and one-scan many-column builds (profile, FK discovery) are
+    # all mapInArrow: no pandas conversion stage in any plan
     from hll_spark.operators.agg import (
         hll_overlap_matrix,
         hll_sketch_agg,
@@ -195,6 +196,7 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
         merge_sketch_partials,
         sketch_partials,
     )
+    from hll_spark.operators.diagnostics import fk_containment_report, profile_table
     from hll_spark.operators.sliding import sliding_distinct_windows
 
     ev = spark.range(900).select(
@@ -215,6 +217,13 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
         "sliding_grouped": sliding_distinct_windows(
             ev, "user_id", "ts", wins, by=["grp"]
         ),
+        "profile": profile_table(ev, columns=["grp", "user_id"]),
+        "fk": fk_containment_report(
+            [
+                (ev, "user_id", "ev.user_id"),
+                (spark.range(300).select((F.col("id") * 3).alias("k")), "k", "other.k"),
+            ]
+        ),
     }
     plans = {
         k: df._jdf.queryExecution().executedPlan().toString()
@@ -228,3 +237,12 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
     # partition and broadcast exchanges and the orderBy's range exchange —
     # the window answers add no exchange of their own
     assert plans["sliding_grouped"].count("Exchange") == 4
+    # profile: the merge by label is the only shuffle; the render runs in
+    # its tasks. FK discovery: one merge by label for both tables — its
+    # two broadcast sides are one exchange once AQE reuses it, so the
+    # count is read from the executed plan
+    assert plans["profile"].count("Exchange") == 1
+    fk = frames["fk"]
+    fk.collect()
+    final = fk._jdf.queryExecution().executedPlan().toString()
+    assert final.split("== Initial Plan ==")[0].count("hashpartitioning(label") == 1

@@ -101,13 +101,20 @@ def test_profile_empty_table(spark):
 
 def test_profile_all_null_column(spark):
     df = spark.range(10).select(
-        F.lit(None).cast("string").alias("s"), F.col("id")
+        F.lit(None).cast("string").alias("s"),
+        F.lit(None).cast("double").alias("d"),
+        F.col("id"),
     )
-    row = _by_col(profile_table(df, columns=["s"]))["s"]
+    prof = _by_col(profile_table(df, columns=["s", "d"]))
+    row = prof["s"]
     assert row["n_rows"] == 10 and row["n_null"] == 10
     assert row["n_distinct_est"] == 0 and row["total_len"] == 0
     assert row["min_str"] is None and row["max_str"] is None
     assert row["top_values"] == [] and row["top_counts"] == []
+    num = prof["d"]
+    assert num["n_rows"] == 10 and num["n_null"] == 10
+    assert num["min_num"] is None and num["max_num"] is None
+    assert num["quantiles"] == [None, None, None]  # no values to rank
 
 
 def test_profile_scan_prunes_to_profiled_columns(spark, sf_dir):

@@ -2,8 +2,9 @@
 every sketch operator shares: grouped key types survive the level-0 build
 and the merge byte-for-byte at any partition count, both global merge
 topologies give the same bytes, the early flush of the level-0 combine
-map is invisible, and the sliding-HLL / Frequent Directions operators
-keep their outputs (including on empty input)."""
+map is invisible, a one-scan many-column build gives each column's own
+bytes, and the sliding-HLL / Frequent Directions operators keep their
+outputs (including on empty input)."""
 
 import datetime
 import decimal
@@ -176,6 +177,50 @@ def test_early_flush_is_invisible(spark, monkeypatch, small_batches):
         for r in merge_sketch_partials(partials, hll_spec(CFG), by=["g"]).collect()
     }
     assert got == want
+
+
+# --------------------------------------------------------- column partials
+
+
+@pytest.mark.parametrize(
+    "sketch, hash_mode",
+    [("theta", "xxhash64"), ("theta", "murmur3"), ("hll", "xxhash64")],
+)
+def test_column_partials_bytes_equal_single_column_builds(spark, sketch, hash_mode):
+    # one scan, one sketch per labelled column, one merge by label: each
+    # label's bytes equal its column's own build (NULLs dropped per
+    # column, an all-NULL column a zero sketch) at any partition count;
+    # theta's k=64 puts both real columns in its sampling regime
+    from hll_spark.operators.sketches import theta_sketch_agg, theta_spec
+
+    if sketch == "theta":
+        spec = theta_spec(64)
+        single = lambda df, c: theta_sketch_agg(df, c, k=64, hash_mode=hash_mode)
+    else:
+        spec = hll_spec(CFG)
+        single = lambda df, c: hll_sketch_agg(df, c, cfg=CFG, hash_mode=hash_mode)
+    base = spark.range(N).select(
+        F.when(F.col("id") % 5 != 0, F.col("id") * 7 % 263).alias("n"),
+        F.when(
+            F.col("id") % 3 != 0, F.concat(F.lit("s"), (F.col("id") % 141).cast("string"))
+        ).alias("s"),
+        F.lit(None).cast("long").alias("z"),
+    )
+    want = {}
+    for c in ("n", "s", "z"):
+        (r,) = single(base, c).collect()
+        want[c] = (bytes(r["sketch"]), r["rows_seen"])
+    assert want["z"][1] == 0
+    for n_parts in (1, 3, 7):
+        partials = agg.column_partials(
+            base.repartition(n_parts), {c: F.col(c) for c in want}, spec, hash_mode
+        )
+        assert partials.count() == 3 * n_parts  # a row per (partition, label)
+        got = {
+            r["label"]: (bytes(r["sketch"]), r["rows_seen"])
+            for r in merge_sketch_partials(partials, spec, by=["label"]).collect()
+        }
+        assert got == want, n_parts
 
 
 # ---------------------------------------------------------------- sliding

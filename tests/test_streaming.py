@@ -182,6 +182,11 @@ def test_session_windows_streaming(spark, tmp_path):
     pdf1 = pd.DataFrame(rows, columns=["user_id", "event_type", "ts"])
     pdf1["event_type"] = pdf1["event_type"].astype(str)
     spark.createDataFrame(pdf1).write.mode("append").parquet(src)
+    # a NULL user: its own one-event session, keyed NULL (not 'None')
+    spark.createDataFrame(
+        [(None, "3", (base + pd.Timedelta(minutes=30)).to_pydatetime())],
+        "user_id long, event_type string, ts timestamp",
+    ).write.mode("append").parquet(src)
 
     def run_once():
         stream = (
@@ -214,14 +219,18 @@ def test_session_windows_streaming(spark, tmp_path):
     spark.createDataFrame(pdf2).write.mode("append").parquet(src)
     run_once()
 
-    got = spark.read.parquet(outd).toPandas()
-    sess = got[got.key.isin(["7", "8"])].sort_values(
-        ["key", "session_start_ms"]
-    )
+    # read through Spark: toPandas would turn the NULL-bearing key to floats
+    from pyspark.sql import functions as F
+
+    got = spark.read.parquet(outd)
+    assert dict(got.dtypes)["key"] == "bigint"  # user_id's own type
+    sess = got.where(F.col("key").isin(7, 8)).orderBy("key", "session_start_ms")
     # user 7: 2 sessions of 10 rows / 5 distinct; user 8: 1 session of 5
-    assert [(r.key, r.rows_seen, r.distinct_estimate) for r in sess.itertuples()] == [
-        ("7", 10, 5), ("7", 10, 5), ("8", 5, 5),
+    assert [(r.key, r.rows_seen, r.distinct_estimate) for r in sess.collect()] == [
+        (7, 10, 5), (7, 10, 5), (8, 5, 5),
     ]
+    nulls = got.where(F.col("key").isNull()).collect()
+    assert [(r.rows_seen, r.distinct_estimate) for r in nulls] == [(1, 1)]
 
 
 def test_sink_sketch_table_upserts_latest(spark, tmp_path):
@@ -378,7 +387,7 @@ def test_session_late_out_of_order_data(spark, tmp_path):
     run_once()
 
     got = spark.read.parquet(outd).toPandas()
-    sess = got[got.key == "5"].sort_values("session_start_ms")
+    sess = got[got.key == 5].sort_values("session_start_ms")
     ms = lambda mins: int((base + pd.Timedelta(minutes=mins)).timestamp() * 1000)
     rows = [
         (r.session_start_ms, r.session_end_ms, r.rows_seen, r.distinct_estimate)
@@ -793,6 +802,16 @@ def test_windowed_eviction_ignores_session_time_zone(
     got = run_once([50], [105])  # late 01:45, admitted by the watermark
     row = got.set_index("key").loc["2024-01-01 01:00:00"]
     assert (row["distinct_estimate"], row["rows_seen"]) == (11, 11)
+
+
+def test_windowed_refuses_timestamp_ntz_before_planning(spark):
+    # a batch frame is enough: the check runs before any plan is built
+    df = spark.createDataFrame(
+        [(1, "x", pd.Timestamp("2024-01-01").to_pydatetime())],
+        "user_id long, event_type string, ts timestamp_ntz",
+    )
+    with pytest.raises(ValueError, match="'ts' must be TIMESTAMP, got timestamp_ntz"):
+        windowed_hll_distinct(df, "user_id", "ts")
 
 
 @pytest.mark.parametrize("key_col", ["grp", "day"])
