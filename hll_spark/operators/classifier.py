@@ -20,7 +20,7 @@ rows in fit or score:
   HARD-sigmoid link, ``p = clamp(1/2 + s/4, 0, 1)`` — the
   piecewise-linear sigmoid surrogate (slope 1/4 = the logistic
   derivative at 0; the same surrogate quantized inference engines
-  use). Each iteration is two shuffles over the cached feature frame
+  use). Each iteration is two shuffles over the reused feature frame
   (per-doc score sum, per-feature gradient sum) plus broadcast joins
   against the bounded weight frame; weights never leave the cluster.
 - **score**: one broadcast join + one per-doc sum, then the link.
@@ -163,8 +163,9 @@ def fit_quality_classifier(
 
     Per iteration: score join (feature frame x broadcast weights,
     per-doc sum), link + error, gradient join (feature frame x
-    per-doc error, per-feature sum), integer update. The feature
-    frame is cached once; weight lineage is cut per iteration
+    per-doc error, per-feature sum), integer update. The label and
+    feature frames are built once and reused by every iteration (no
+    cache outlives the fit); weight lineage is cut per iteration
     (localCheckpoint, lazy) so the plan does not grow with ``iters``.
     """
     if iters < 1:
@@ -173,10 +174,14 @@ def fit_quality_classifier(
         raise ValueError(f"lr_micro must be >= 1, got {lr_micro}")
     if pos_weight < 1:
         raise ValueError(f"pos_weight must be >= 1, got {pos_weight}")
-    labels = train.select(
-        F.col(id_col),
-        F.col(label_col).cast("int").cast("long").alias("__y"),
-    ).persist()
+    from .scanutil import reused
+
+    labels = reused(
+        train.select(
+            F.col(id_col),
+            F.col(label_col).cast("int").cast("long").alias("__y"),
+        )
+    )
     # the bias rides the SAME aggregations as the feature weights, as a
     # synthetic always-present feature (feat = -1, outside the hash
     # range): score = sum of weights over {doc's features + bias} and
@@ -187,14 +192,13 @@ def fit_quality_classifier(
     # fallback, since every doc carries at least the bias row. Feature
     # rows are distinct per doc, so the bias row must be too (a
     # duplicated training row would otherwise count the bias twice).
-    feats = (
+    feats = reused(
         hashed_features(train, text_col, id_col, n_features, bigrams, seed)
         .unionByName(
             labels.select(id_col)
             .distinct()
             .select(id_col, F.lit(-1).cast("long").alias("feat"))
         )
-        .persist()
     )
     ncounts = labels.agg(
         F.count(F.lit(1)).alias("__n"), F.sum("__y").alias("__p")

@@ -21,19 +21,26 @@ At 100 TB the load-bearing properties are: signatures are built in one
 mapInPandas pass (no per-row Python), candidate generation shuffles only
 (bucket_key, doc_id) pairs, and verification touches candidate pairs
 only — never the n^2 cross join.
+
+MinHash, the Hamming family (SimHash, image dHash, audio fingerprint)
+and embeddings share ONE candidate plan, :func:`_band_join`, in both
+its self-join and cross-table forms; each family supplies only a band
+key expression, a payload and a verify expression. A frame one plan
+reads more than once is reused inside that plan
+(:func:`~.scanutil.reused`); nothing is cached across calls.
 """
 
 from __future__ import annotations
 
 import math
-import threading
 import warnings
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, NumericType
 
 from .textkernels import (
     band_keys_matrix,
@@ -103,116 +110,137 @@ def duplicate_groups(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shingling + MinHash signatures (vectorized)
+# LSH band join: the one candidate plan of every near-dup family
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
+def _band_join(
+    left: DataFrame,
     id_col: str,
-    k: int = 128,
-    shingle_n: int = 3,
+    keys: Column,
+    payload: Column,
+    verify: Callable[[Column, Column], Column],
+    score: str,
+    keep: Callable[[Column], Column],
+    right: DataFrame | None = None,
+    unique_ids: bool = True,
 ) -> DataFrame:
-    """(id, signature array<long>) — one batch-flattened pass: tokens
-    hashed once per Arrow batch, segmented min per doc (textkernels)."""
+    """Near-duplicate pairs by banded LSH, never a cross join.
 
-    def sig_batch(texts: pd.Series) -> pd.Series:
-        sigs = minhash_matrix(texts, k, shingle_n).view(np.int64)
-        return pd.Series(list(sigs), index=texts.index)
+    Each row's ``keys`` (an array of band keys) posexplode to
+    (band_id, key) rows; two rows agreeing on any (band_id, key) are a
+    candidate (one equi-join), kept once per id pair. ``verify`` scores
+    each candidate from the two rows' ``payload`` JVM-side, and
+    ``keep`` filters on the ``score`` column.
 
-    sig_udf = pandas_udf(sig_batch, ArrayType(LongType()))
-    return df.select(F.col(id_col), sig_udf(F.col(text_col)).alias("signature"))
+    ``right=None`` self-joins ``left`` (``a.id < b.id``) and names the
+    output (id_a, id_b, score); with a ``right`` frame the output is
+    (left_id, right_id, score), one side from each table. Both frames
+    carry ``id_col`` and whatever ``keys`` and ``payload`` read.
 
+    The payload's type picks its route. A fixed-width number (a 64-bit
+    hash) rides through the join and the distinct, and its verify is
+    one bit count. A wider payload (a signature or vector array) stays
+    out of the bucket shuffle and rejoins by id after the distinct
+    through :func:`_unique_sigs`, so ``unique_ids=False`` keeps one
+    payload per id of a frame that may repeat ids (a stored index).
 
-def _minhash_enriched(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    bands: int,
-    shingle_n: int,
-    slot: str = "minhash",
-) -> DataFrame:
-    """(id, __s struct<sig array<long>, bk array<long>>) — ONE Python
-    pass computes signatures AND band keys; cached for reuse. ``slot``
-    names the bounded-cache slot: two-table operators (minhash_join)
-    must enrich both inputs without the second eviction-racing the
-    first out of the single default slot."""
-    if k % bands:
-        raise ValueError("k must be divisible by bands")
-    r = k // bands
-    from pyspark.sql.types import StructField, StructType
+    An array verify is CPU-bound but byte-light, and AQE's byte floor
+    would run it one or two tasks wide after the distinct (1.4
+    CPU-seconds on one task measured at sf0.1 for embeddings), so on
+    small inputs the candidates spread to the default parallelism
+    before the rejoin. The gate reads the INPUTS' statistics:
+    join-output estimates are unusable. A scalar verify is too cheap to
+    pay for that shuffle (simhash pairs measured slower with it).
+    """
+    from .scanutil import plan_is_small
 
-    enriched_schema = StructType(
-        [
-            StructField("sig", ArrayType(LongType())),
-            StructField("bk", ArrayType(LongType())),
-        ]
-    )
+    self_join = right is None
+    a_id, b_id = ("id_a", "id_b") if self_join else ("left_id", "right_id")
+    a_p, b_p = f"__p_{a_id}", f"__p_{b_id}"
+    right = left if self_join else right
+    carry = isinstance(left.select(payload).schema[0].dataType, NumericType)
 
-    @pandas_udf(enriched_schema)
-    def sig_and_bands(texts: pd.Series) -> pd.DataFrame:
-        sigs = minhash_matrix(texts, k, shingle_n)
-        keys = band_keys_matrix(sigs, bands, r)
-        return pd.DataFrame(
-            {"sig": list(sigs.view(np.int64)), "bk": list(keys)},
-            index=texts.index,
+    def banded(df: DataFrame, out_id: str, out_p: str) -> DataFrame:
+        carried = [payload.alias(out_p)] if carry else []
+        return df.select(
+            F.col(id_col).alias(out_id),
+            *carried,
+            F.posexplode(keys).alias("band_id", "key"),
         )
 
-    enriched = df.select(
-        F.col(id_col), sig_and_bands(F.col(text_col)).alias("__s")
+    cand = banded(left, a_id, a_p).join(
+        banded(right, b_id, b_p), ["band_id", "key"]
     )
-    return _remember_enriched(enriched, slot)
+    if self_join:
+        cand = cand.where(F.col(a_id) < F.col(b_id))
+    cand = cand.select(a_id, b_id, *([a_p, b_p] if carry else [])).distinct()
+    if not carry:
+        if plan_is_small(left) and (self_join or plan_is_small(right)):
+            cand = cand.repartition(
+                left.sparkSession.sparkContext.defaultParallelism
+            )
+        cand = cand.join(
+            _unique_sigs(left, id_col, a_id, a_p, unique_ids, payload), a_id
+        ).join(_unique_sigs(right, id_col, b_id, b_p, unique_ids, payload), b_id)
+    return (
+        cand.withColumn(score, verify(F.col(a_p), F.col(b_p)))
+        .where(keep(F.col(score)))
+        .select(a_id, b_id, score)
+    )
 
 
-# Signature/shingle frames are cached because every caller reads them
-# several times (bucket explode + rejoin / DF count + array verify), and
-# the pandas-UDF pass that builds them is the expensive stage. Each slot
-# keeps at most ONE frame alive: repeated calls over DIFFERENT inputs
-# would otherwise accumulate cached DataFrames in executor storage until
-# LRU pressure. A repeat call over the SAME input+params (confirmed by
-# scanutil.same_result on the analyzed plans) reuses the
-# already-materialized frame — re-caching would be a no-op in Spark's
-# CacheManager, and unpersisting it would throw away a warm cache.
-# clear_minhash_cache() drops all slots eagerly.
-_CACHE_SLOTS: dict[str, tuple] = {}
-# check-then-act on the slot dict must be atomic: concurrent driver
-# threads (a normal Spark pattern) would otherwise both cache and one
-# frame would lose its only reference while staying pinned in executor
-# storage — exactly the leak the slots exist to prevent
-_CACHE_LOCK = threading.Lock()
+def _unique_sigs(
+    index: DataFrame, key: str, out_id: str, out_sig: str,
+    unique_ids: bool = False, sig: Column | None = None,
+) -> DataFrame:
+    """(out_id, out_sig) with one row per id from a possibly
+    duplicate-id (legacy / externally built) index frame — min-sig-hash
+    representative, deterministic. ``sig`` defaults to the index's
+    ``sig`` column. Indexes built by :func:`minhash_index` are already
+    unique; the aggregate then reduces to a rename-cost pass and keeps
+    the join-explosion guard for stored tables that predate the keyed
+    contract. ``unique_ids=True`` (the caller vouches for the index)
+    skips the aggregate — one less shuffle of the stored index per
+    increment."""
+    sig = F.col("sig") if sig is None else sig
+    if unique_ids:
+        return index.select(F.col(key).alias(out_id), sig.alias(out_sig))
+    return index.groupBy(F.col(key).alias(out_id)).agg(
+        F.min_by(sig, F.xxhash64(sig)).alias(out_sig)
+    )
 
 
-def _bounded_cache(slot: str, df: DataFrame) -> DataFrame:
-    from .scanutil import same_result
-
-    with _CACHE_LOCK:
-        prev = _CACHE_SLOTS.get(slot)
-        if prev is not None and same_result(prev[0], df):
-            return prev[1]
-        if prev is not None:
-            try:
-                prev[1].unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
-        cached = df.cache()
-        _CACHE_SLOTS[slot] = (df, cached)
-        return cached
+# ---------------------------------------------------------------------------
+# MinHash + LSH
 
 
-def _remember_enriched(df: DataFrame, slot: str = "minhash") -> DataFrame:
-    return _bounded_cache(slot, df)
+def _minhash_agreement(sig_a: Column, sig_b: Column, k: int) -> Column:
+    """Estimated Jaccard of two k-minhash signatures: the fraction of
+    matching positions, fully JVM-side (zip_with/filter/size), so no
+    verify path crosses into Python; k=128 makes every fraction exactly
+    representable."""
+    n_match = F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v)
+    )
+    return n_match.cast("double") / F.lit(float(k))
 
 
-def clear_minhash_cache() -> None:
-    """Unpersist every cached signature/shingle frame."""
-    with _CACHE_LOCK:
-        while _CACHE_SLOTS:
-            _, (_, df) = _CACHE_SLOTS.popitem()
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
+def _minhash_band_join(
+    idx_l: DataFrame,
+    idx_r: DataFrame | None,
+    id_col: str,
+    threshold: float,
+    k: int,
+    unique_ids: bool = True,
+) -> DataFrame:
+    """(id, sig, bk) frames through :func:`_band_join`: bucket on the
+    band keys, verify the rejoined signatures (a self-join when
+    ``idx_r`` is None)."""
+    return _band_join(
+        idx_l, id_col, F.col("bk"), F.col("sig"),
+        lambda a, b: _minhash_agreement(a, b, k), "jaccard_est",
+        lambda s: s >= threshold, right=idx_r, unique_ids=unique_ids,
+    )
 
 
 def minhash_lsh_pairs(
@@ -239,54 +267,11 @@ def minhash_lsh_pairs(
     template-heavy web corpora use :func:`minhash_dedup_keep`, whose
     work and output stay O(n) regardless of cluster sizes.
     """
-    # bucket join ships only (band_id, key, id) — signatures rejoin on
-    # the candidate pairs, never through the explode. Keyed by id up
-    # front: duplicate input rows would otherwise multiply candidate
-    # and verify rows and emit duplicate pairs (see minhash_index).
-    enriched = _minhash_enriched(
-        _one_row_per_id(df, text_col, id_col, unique_ids), text_col, id_col,
-        k, bands, shingle_n,
-    )
-    banded = enriched.select(
-        F.col(id_col),
-        F.posexplode(F.col("__s.bk")).alias("band_id", "band_hash"),
-    )
-    left = banded.alias("a")
-    right = banded.alias("b")
-    candidates = (
-        left.join(
-            right,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    sig_a = enriched.select(
-        F.col(id_col).alias("id_a"), F.col("__s.sig").alias("sig_a")
-    )
-    sig_b = enriched.select(
-        F.col(id_col).alias("id_b"), F.col("__s.sig").alias("sig_b")
-    )
-
-    # matching-minhash fraction, fully JVM-side (zip_with/filter/size):
-    # no Python roundtrip on the candidate verify path, and k=128 makes
-    # every fraction exactly representable
-    n_match = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    )
-    return (
-        candidates.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .withColumn("jaccard_est", n_match.cast("double") / F.lit(float(k)))
-        .where(F.col("jaccard_est") >= threshold)
-        .select("id_a", "id_b", "jaccard_est")
-    )
+    # keyed by id up front: duplicate input rows would otherwise
+    # multiply candidate and verify rows and emit duplicate pairs (see
+    # minhash_index); the bucket join ships only (band_id, key, id)
+    idx = minhash_index(df, text_col, id_col, k, bands, shingle_n, unique_ids)
+    return _minhash_band_join(idx, None, id_col, threshold, k)
 
 
 def minhash_dedup_keep(
@@ -320,13 +305,9 @@ def minhash_dedup_keep(
     # keyed by id (duplicate rows collapse deterministically before
     # hashing; the final anti-join on the original frame preserves
     # every surviving input row — see minhash_index)
-    enriched = _minhash_enriched(
-        _one_row_per_id(df, text_col, id_col, unique_ids), text_col, id_col,
-        k, bands, shingle_n,
-    )
-    banded = enriched.select(
-        F.col(id_col),
-        F.posexplode(F.col("__s.bk")).alias("band_id", "band_hash"),
+    idx = minhash_index(df, text_col, id_col, k, bands, shingle_n, unique_ids)
+    banded = idx.select(
+        F.col(id_col), F.posexplode("bk").alias("band_id", "band_hash")
     )
     # bucket representative = min id (one row per bucket, O(buckets))
     reps = banded.groupBy("band_id", "band_hash").agg(
@@ -338,19 +319,14 @@ def minhash_dedup_keep(
         .agg(F.min("__rep").alias("__rep"))
         .where(F.col("__rep") < F.col(id_col))
     )
-    sig_self = enriched.select(F.col(id_col), F.col("__s.sig").alias("__sig_d"))
-    sig_rep = enriched.select(
-        F.col(id_col).alias("__rep"), F.col("__s.sig").alias("__sig_r")
-    )
-    n_match = F.size(
-        F.filter(
-            F.zip_with("__sig_d", "__sig_r", lambda x, y: x == y), lambda v: v
-        )
-    )
+    sig_self = idx.select(F.col(id_col), F.col("sig").alias("__sig_d"))
+    sig_rep = idx.select(F.col(id_col).alias("__rep"), F.col("sig").alias("__sig_r"))
     drop = (
         cand.join(sig_self, id_col)
         .join(sig_rep, "__rep")
-        .where(n_match.cast("double") / F.lit(float(k)) >= threshold)
+        .where(
+            _minhash_agreement(F.col("__sig_d"), F.col("__sig_r"), k) >= threshold
+        )
         .select(id_col)
     )
     return df.join(drop, id_col, "left_anti")
@@ -396,8 +372,7 @@ def minhash_join(
     output keeps them in separate columns.
     """
     idx_r = minhash_index(
-        right, text_col, id_col, k, bands, shingle_n,
-        unique_ids=unique_ids, _slot="minhash_join_r",
+        right, text_col, id_col, k, bands, shingle_n, unique_ids
     )
     return minhash_join_index(
         left, idx_r, text_col, id_col, threshold, k, bands, shingle_n,
@@ -413,10 +388,11 @@ def minhash_index(
     bands: int = 32,
     shingle_n: int = 3,
     unique_ids: bool = False,
-    _slot: str = "minhash_index",
 ) -> DataFrame:
     """Materializable near-dup index of a corpus: EXACTLY one row per
-    id, (id, sig array<long>, bk array<long>).
+    id, (id, sig array<long>, bk array<long>). ONE Python pass computes
+    signatures AND band keys, reused within the plan that reads it (the
+    band join reads it on both sides and again for the rejoin).
 
     The index is KEYED BY ``id_col``: duplicate input rows (the normal
     crawl case — the same url fetched repeatedly) collapse to one
@@ -439,11 +415,37 @@ def minhash_index(
     partitioned however the corpus is partitioned — the bucket join
     re-shuffles only the exploded (band_id, band_hash, id) triples.
     """
-    enr = _minhash_enriched(
-        _one_row_per_id(corpus, text_col, id_col, unique_ids),
-        text_col, id_col, k, bands, shingle_n, slot=_slot,
+    if k % bands:
+        raise ValueError("k must be divisible by bands")
+    from pyspark.sql.types import StructField, StructType
+
+    from .scanutil import fan_out_scan, reused
+
+    r = k // bands
+    enriched_schema = StructType(
+        [
+            StructField("sig", ArrayType(LongType())),
+            StructField("bk", ArrayType(LongType())),
+        ]
     )
-    return enr.select(
+
+    @pandas_udf(enriched_schema)
+    def sig_and_bands(texts: pd.Series) -> pd.DataFrame:
+        sigs = minhash_matrix(texts, k, shingle_n)
+        keys = band_keys_matrix(sigs, bands, r)
+        return pd.DataFrame(
+            {"sig": list(sigs.view(np.int64)), "bk": list(keys)},
+            index=texts.index,
+        )
+
+    # the signature UDF is the CPU-heavy stage: fan its input out, or
+    # a small keyed frame (AQE coalesces its shuffle to one or two
+    # partitions) or a single-row-group scan hashes on one core
+    keyed = fan_out_scan(_one_row_per_id(corpus, text_col, id_col, unique_ids))
+    enriched = keyed.select(
+        F.col(id_col), sig_and_bands(F.col(text_col)).alias("__s")
+    )
+    return reused(enriched).select(
         F.col(id_col),
         F.col("__s.sig").alias("sig"),
         F.col("__s.bk").alias("bk"),
@@ -469,27 +471,6 @@ def _one_row_per_id(
         return df.select(id_col, text_col)
     return df.groupBy(id_col).agg(
         F.min_by(text_col, F.xxhash64(text_col)).alias(text_col)
-    )
-
-
-def _unique_sigs(
-    index: DataFrame, key: str, out_id: str, out_sig: str,
-    unique_ids: bool = False,
-) -> DataFrame:
-    """(out_id, out_sig) with one row per id from a possibly
-    duplicate-id (legacy / externally built) index frame — min-sig-hash
-    representative, deterministic. Indexes built by
-    :func:`minhash_index` are already unique; the aggregate then
-    reduces to a rename-cost pass and keeps the join-explosion guard
-    for stored tables that predate the keyed contract.
-    ``unique_ids=True`` (the caller vouches for the index) skips the
-    aggregate — one less shuffle of the stored index per increment."""
-    if unique_ids:
-        return index.select(
-            F.col(key).alias(out_id), F.col("sig").alias(out_sig)
-        )
-    return index.groupBy(F.col(key).alias(out_id)).agg(
-        F.min_by("sig", F.xxhash64("sig")).alias(out_sig)
     )
 
 
@@ -560,60 +541,12 @@ def minhash_join_index(
     nor duplicate output pairs.
     """
     validate_minhash_index(index, id_col, k, bands)
-    enr_l = _minhash_enriched(
-        _one_row_per_id(new, text_col, id_col, unique_ids),
-        text_col, id_col, k, bands, shingle_n, slot="minhash_join_l",
-    )
-    idx_l = enr_l.select(
-        F.col(id_col),
-        F.col("__s.sig").alias("sig"),
-        F.col("__s.bk").alias("bk"),
-    )
-    return _banded_index_join(
-        idx_l, index, id_col, threshold, k, unique_ids=unique_ids
-    )
-
-
-def _banded_index_join(
-    idx_l: DataFrame,
-    idx_r: DataFrame,
-    id_col: str,
-    threshold: float,
-    k: int,
-    unique_ids: bool = False,
-) -> DataFrame:
-    """Candidate generation + verify over two (id, sig, bk) frames."""
-    banded_l = idx_l.select(
-        F.col(id_col).alias("left_id"),
-        F.posexplode(F.col("bk")).alias("band_id", "band_hash"),
-    )
-    banded_r = idx_r.select(
-        F.col(id_col).alias("right_id"),
-        F.posexplode(F.col("bk")).alias("band_id", "band_hash"),
-    )
-    candidates = (
-        banded_l.join(banded_r, ["band_id", "band_hash"])
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    # one signature row per id: a duplicate-id index frame would
-    # multiply every candidate row it joins (c copies -> c x the
+    idx_l = minhash_index(new, text_col, id_col, k, bands, shingle_n, unique_ids)
+    # one signature row per id on each side: a duplicate-id index frame
+    # would multiply every candidate row it joins (c copies -> c x the
     # verify work AND duplicate output pairs) — the measured 380 k ->
     # 67.8 M join explosion on the duplicate-dense rehearsal fixture
-    sig_l = _unique_sigs(idx_l, id_col, "left_id", "__sig_l", unique_ids)
-    sig_r = _unique_sigs(idx_r, id_col, "right_id", "__sig_r", unique_ids)
-    n_match = F.size(
-        F.filter(
-            F.zip_with("__sig_l", "__sig_r", lambda x, y: x == y), lambda v: v
-        )
-    )
-    return (
-        candidates.join(sig_l, "left_id")
-        .join(sig_r, "right_id")
-        .withColumn("jaccard_est", n_match.cast("double") / F.lit(float(k)))
-        .where(F.col("jaccard_est") >= threshold)
-        .select("left_id", "right_id", "jaccard_est")
-    )
+    return _minhash_band_join(idx_l, index, id_col, threshold, k, unique_ids)
 
 
 def dedup_increment(
@@ -652,10 +585,7 @@ def dedup_increment(
     At production scale the corpus index is precomputed
     (:func:`minhash_index`) — use :func:`dedup_increment_index`.
     """
-    idx = minhash_index(
-        corpus, text_col, id_col, k, bands, shingle_n,
-        unique_ids=unique_ids, _slot="minhash_join_r",
-    )
+    idx = minhash_index(corpus, text_col, id_col, k, bands, shingle_n, unique_ids)
     return dedup_increment_index(
         new, idx, text_col, id_col, threshold, k, bands, shingle_n, verify,
         unique_ids=unique_ids,
@@ -715,7 +645,7 @@ def _increment_rep_frames(
         .agg(F.min("__rep").alias("__rep"))
     )
     # one signature row per rep id (duplicate-id guard; see
-    # _banded_index_join) — hot reps are hot precisely because their
+    # minhash_join_index) — hot reps are hot precisely because their
     # duplicates are, so this is where the explosion concentrated
     sig_r = _unique_sigs(index, id_col, "__rep", "__sig_r", unique_ids)
     return reps, sig_r
@@ -740,29 +670,22 @@ def _dedup_increment_rep(
     # increment) are hashed once and verified once — the final
     # anti-join on the ORIGINAL frame still returns every surviving
     # input row
-    enr_l = _minhash_enriched(
-        _one_row_per_id(new, text_col, id_col, unique_ids),
-        text_col, id_col, k, bands, shingle_n, slot="minhash_join_l",
-    )
-    banded_l = enr_l.select(
-        F.col(id_col),
-        F.posexplode(F.col("__s.bk")).alias("band_id", "band_hash"),
+    idx = minhash_index(new, text_col, id_col, k, bands, shingle_n, unique_ids)
+    banded = idx.select(
+        F.col(id_col), F.posexplode("bk").alias("band_id", "band_hash")
     )
     cand = (
-        banded_l.join(reps, ["band_id", "band_hash"])
+        banded.join(reps, ["band_id", "band_hash"])
         .select(id_col, "__rep")
         .distinct()
     )
-    sig_n = enr_l.select(F.col(id_col), F.col("__s.sig").alias("__sig_l"))
-    n_match = F.size(
-        F.filter(
-            F.zip_with("__sig_l", "__sig_r", lambda x, y: x == y), lambda v: v
-        )
-    )
+    sig_n = idx.select(F.col(id_col), F.col("sig").alias("__sig_l"))
     drop = (
         cand.join(sig_n, id_col)
         .join(sig_r, "__rep")
-        .where(n_match.cast("double") / F.lit(float(k)) >= threshold)
+        .where(
+            _minhash_agreement(F.col("__sig_l"), F.col("__sig_r"), k) >= threshold
+        )
         .select(id_col)
         .distinct()
     )
@@ -814,8 +737,7 @@ def ngram_jaccard_pairs(
             index=texts.index,
         )
 
-
-    from .scanutil import fan_out_scan
+    from .scanutil import fan_out_scan, reused
 
     # non-deterministic mark (guide §4.4): the explode's implicit
     # size>0/isnotnull filter otherwise pushes below the fan-out
@@ -823,29 +745,27 @@ def ngram_jaccard_pairs(
     # shingle hash running TWICE, once on the starved pre-repartition
     # scan (ArrowEvalPython below AND above the Exchange)
     sh_udf = pandas_udf(shingles_batch, ArrayType(LongType())).asNondeterministic()
-    # cached: the exploded (id, shingle) postings are read several
-    # times (df aggregate, prefix ranking, verify joins, sizes).
+    # reused: the exploded (id, shingle) postings are read several
+    # times (df aggregate, hot split, self-join, hot counts, sizes).
     # fan_out_scan first: the shingle UDF is the CPU-heavy per-row
     # stage and a single-row-group input would otherwise hash the
     # corpus one-core.
-    exploded = _bounded_cache(
-        "ngram",
+    exploded = reused(
         fan_out_scan(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), sh_udf(F.col(text_col)).alias("sh"))
-        .select(F.col(id_col), F.explode("sh").alias("shingle")),
+        .select(F.col(id_col), F.explode("sh").alias("shingle"))
     )
     # per-doc distinct-shingle counts (exploded rows are unique per doc)
     sizes = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     hot = None
     if max_shingle_df is not None:
-        hot_all = _bounded_cache(
-            "ngram_hot",
+        hot_all = reused(
             exploded.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("__df"))
             .where(F.col("__df") > max_shingle_df)
-            .select("shingle"),
+            .select("shingle")
         )
-        # one cheap probe over the cached postings: when NO shingle
+        # one cheap probe over the reused postings: when NO shingle
         # exceeds the cap (the common case away from boilerplate-heavy
         # corpora) the anti-join and the whole shared-hot counting
         # branch — including a full shuffle of the candidate pairs —
@@ -939,6 +859,41 @@ def simhash_pairs(
     return hamming_band_pairs(hashed, id_col, "simhash", max_hamming)
 
 
+def _hamming_chunks(hash_col: str, max_hamming: int) -> Column:
+    """The ``max_hamming + 1`` pigeonhole chunks of a 64-bit hash as an
+    array of band keys, low bits first; widths differ by at most one
+    bit (4 x 16 at max_hamming=3, 13,13,13,13,12 at 4). Any pair within
+    the Hamming budget agrees on at least one chunk."""
+    n_chunks = max_hamming + 1
+    base_w = 64 // n_chunks
+    widths = [base_w + (1 if i < 64 % n_chunks else 0) for i in range(n_chunks)]
+    offsets = [sum(widths[:i]) for i in range(n_chunks)]
+    return F.array(
+        *[
+            F.shiftrightunsigned(F.col(hash_col), off).bitwiseAND(
+                F.lit((1 << w) - 1)
+            )
+            for off, w in zip(offsets, widths)
+        ]
+    )
+
+
+def _hamming_pairs(
+    left: DataFrame,
+    right: DataFrame | None,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+) -> DataFrame:
+    """:func:`_band_join` over 64-bit hashes: bucket on the pigeonhole
+    chunks, carry the hash, keep Hamming <= max_hamming."""
+    return _band_join(
+        left, id_col, _hamming_chunks(hash_col, max_hamming), F.col(hash_col),
+        lambda a, b: F.bit_count(a.bitwiseXOR(b)), "hamming",
+        lambda s: s <= max_hamming, right=right,
+    )
+
+
 def hamming_band_pairs(
     hashed: DataFrame,
     id_col: str,
@@ -949,50 +904,12 @@ def hamming_band_pairs(
     column, via pigeonhole banding (the simhash/dhash candidate rule):
     split into ``max_hamming + 1`` chunks — any pair within budget
     agrees on >= 1 chunk, so candidates come from per-chunk equality
-    self-joins and recall is exactly 1. The hashed frame is cached
-    because the self-join evaluates it twice (the hash may be an
+    self-joins and recall is exactly 1. The hashed frame is reused
+    because the self-join reads it twice (the hash may be an
     expensive UDF — simhash tokenization, image decode)."""
-    n_chunks = max_hamming + 1
-    base_w = 64 // n_chunks
-    widths = [base_w + (1 if i < 64 % n_chunks else 0) for i in range(n_chunks)]
-    offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    hashed = hashed.cache()
-    chunks = hashed.select(
-        id_col,
-        hash_col,
-        F.posexplode(
-            F.array(
-                *[
-                    (F.shiftrightunsigned(F.col(hash_col), off)).bitwiseAND(
-                        F.lit((1 << w) - 1)
-                    )
-                    for off, w in zip(offsets, widths)
-                ]
-            )
-        ).alias("chunk_id", "chunk"),
-    )
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"a.{hash_col}").alias("sh_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"b.{hash_col}").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    from .scanutil import reused
+
+    return _hamming_pairs(reused(hashed), None, id_col, hash_col, max_hamming)
 
 
 def hamming_band_join(
@@ -1011,39 +928,9 @@ def hamming_band_join(
     the standing corpus?". The hash frames are each a pure function of
     the payload, so the corpus side can be computed once, stored, and
     re-read per increment (the decode/UDF cost is paid only for new
-    rows)."""
-    n_chunks = max_hamming + 1
-    base_w = 64 // n_chunks
-    widths = [base_w + (1 if i < 64 % n_chunks else 0) for i in range(n_chunks)]
-    offsets = [sum(widths[:i]) for i in range(n_chunks)]
-
-    def chunked(df: DataFrame, out_id: str, out_hash: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(hash_col).alias(out_hash),
-            F.posexplode(
-                F.array(
-                    *[
-                        (F.shiftrightunsigned(F.col(hash_col), off)).bitwiseAND(
-                            F.lit((1 << w) - 1)
-                        )
-                        for off, w in zip(offsets, widths)
-                    ]
-                )
-            ).alias("chunk_id", "chunk"),
-        )
-
-    cand = (
-        chunked(left_hashed, "left_id", "sh_l")
-        .join(chunked(right_hashed, "right_id", "sh_r"), ["chunk_id", "chunk"])
-        .select("left_id", "sh_l", "right_id", "sh_r")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_l").bitwiseXOR(F.col("sh_r")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("left_id", "right_id", "hamming")
+    rows); each side is read once, so neither is reused."""
+    return _hamming_pairs(
+        left_hashed, right_hashed, id_col, hash_col, max_hamming
     )
 
 
@@ -1179,7 +1066,7 @@ def _tuned_hyperplane_params(
             "is effectively quadratic. Use a genuine near-dup threshold "
             "(>= ~0.8) or the IVF path at scale.",
             RuntimeWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
     return n_bands, n_planes
 
@@ -1194,8 +1081,81 @@ def _drop_zero_norm(df: DataFrame, vec_col: str) -> DataFrame:
     would otherwise let through (ADVICE r5) — rejected explicitly.
     The blocked-GEMM variant applies the same filter so all
     cosine-pair variants agree by contract."""
-    sq = F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x)
+    sq = _sq_norm(vec_col)
     return df.where(~F.isnan(sq) & (sq > 0))
+
+
+def _sq_norm(vec_col: str) -> Column:
+    return F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x)
+
+
+def _unit_vector(vec_col: str) -> Column:
+    """``vec_col`` scaled to unit length, JVM-side."""
+    norm = F.sqrt(_sq_norm(vec_col))
+    return F.transform(vec_col, lambda x: x / norm)
+
+
+def _cosine(unit_a: Column, unit_b: Column) -> Column:
+    """Cosine of two unit vectors (their dot product), rounded to 6
+    places — the score every cosine-pair variant thresholds."""
+    dot = F.aggregate(
+        F.zip_with(unit_a, unit_b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return F.round(dot, 6)
+
+
+def _embedding_pairs(
+    left: DataFrame,
+    right: DataFrame | None,
+    vec_col: str,
+    id_col: str,
+    threshold: float,
+    n_bands: int | None,
+    n_planes: int | None,
+    seed: int,
+    dim: int | None,
+) -> DataFrame:
+    """:func:`_band_join` over vectors: bucket on banded hyperplane
+    signs, rejoin the unit vectors, keep cosine >= threshold (a
+    self-join when ``right`` is None)."""
+    n_bands, n_planes = _tuned_hyperplane_params(threshold, n_bands, n_planes)
+    if dim is None:
+        # Spark array types don't carry a fixed length; one 1-row lookup
+        # at plan-build time. Pass dim explicitly to avoid it.
+        head = left.select(vec_col).head()
+        if head is None and right is not None:
+            head = right.select(vec_col).head()
+        if head is None or head[0] is None:
+            raise ValueError(
+                "cannot infer vector dim from an empty input (or null "
+                "first vector) — pass dim explicitly"
+            )
+        dim = len(head[0])
+    left = _drop_zero_norm(left, vec_col)
+    if right is None:
+        from .scanutil import fan_out_scan
+
+        # single-file inputs give the whole candidate machinery 1-2
+        # tasks; fan the scan out so the bucket UDF, the banded
+        # self-join probe and the cosine verify all run at cluster
+        # width (guide §2.5)
+        left = fan_out_scan(left.select(F.col(id_col), F.col(vec_col)))
+    else:
+        right = _drop_zero_norm(right, vec_col)
+    # non-deterministic mark (guide §4.4): without it the generator's
+    # implicit filter duplicates the bucket UDF below itself on each
+    # join side (a cache of the banded frame was also tried — the UDF
+    # is one matmul per batch, so the materialization cost more than
+    # the recompute it saved)
+    keys = _band_bucket_udf(dim, n_bands, n_planes, seed).asNondeterministic()(
+        F.col(vec_col)
+    )
+    return _band_join(
+        left, id_col, keys, _unit_vector(vec_col), _cosine, "cosine",
+        lambda s: s >= threshold, right=right,
+    )
 
 
 def embedding_dup_pairs(
@@ -1231,78 +1191,8 @@ def embedding_dup_pairs(
     the IVF path instead. The all-pairs exact form lives in
     ``embedding_dup_pairs_allpairs`` as the small-scale oracle.
     """
-    n_bands, n_planes = _tuned_hyperplane_params(threshold, n_bands, n_planes)
-    if dim is None:
-        # Spark array types don't carry a fixed length; one 1-row lookup
-        # at plan-build time. Pass dim explicitly to avoid it.
-        head = df.select(vec_col).head()
-        if head is None or head[0] is None:
-            raise ValueError(
-                "embedding_dup_pairs: cannot infer vector dim from an "
-                "empty DataFrame (or null first vector) — pass dim "
-                "explicitly"
-            )
-        dim = len(head[0])
-    from .scanutil import fan_out_scan, plan_is_small
-
-    df = _drop_zero_norm(df, vec_col)
-    small_input = plan_is_small(df)
-    # single-file inputs give the whole candidate machinery 1-2 tasks;
-    # fan the scan out so the bucket UDF, the banded self-join probe
-    # and the cosine verify all run at cluster width (guide §2.5)
-    df = fan_out_scan(df.select(F.col(id_col), F.col(vec_col)))
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    unit = df.select(
-        F.col(id_col),
-        F.transform(vec_col, lambda x: x / norm).alias("unit"),
-    )
-    # non-deterministic mark (guide §4.4): without it the generator's
-    # implicit filter duplicates the bucket UDF below itself on each
-    # join side (a cache of the banded frame was also tried — the UDF
-    # is one matmul per batch, so the materialization cost more than
-    # the recompute it saved)
-    banded = df.select(
-        F.col(id_col),
-        F.posexplode(
-            _band_bucket_udf(dim, n_bands, n_planes, seed)
-            .asNondeterministic()(F.col(vec_col))
-        ).alias("band_id", "bucket"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    if small_input:
-        # the per-candidate exact cosine is CPU-bound but byte-light;
-        # AQE's byte-floor would run it 1-2 wide after the distinct
-        # (1.4 CPU-seconds on one task measured at sf0.1). Gated on the
-        # INPUT's stats — join-output estimates are unusable.
-        candidates = candidates.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-    ua = unit.select(F.col(id_col).alias("id_a"), F.col("unit").alias("unit_a"))
-    ub = unit.select(F.col(id_col).alias("id_b"), F.col("unit").alias("unit_b"))
-    dot = F.aggregate(
-        F.zip_with("unit_a", "unit_b", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        candidates.join(ua, "id_a")
-        .join(ub, "id_b")
-        .withColumn("cosine", F.round(dot, 6))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return _embedding_pairs(
+        df, None, vec_col, id_col, threshold, n_bands, n_planes, seed, dim
     )
 
 
@@ -1315,20 +1205,11 @@ def embedding_dup_pairs_allpairs(
     """All-pairs exact variant — O(n^2); small-scale oracle cross-check
     for :func:`embedding_dup_pairs` only, never the at-scale path."""
     df = _drop_zero_norm(df, vec_col)
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    unit = df.select(
-        F.col(id_col),
-        F.transform(vec_col, lambda x: x / norm).alias("unit"),
-    )
+    unit = df.select(F.col(id_col), _unit_vector(vec_col).alias("unit"))
     a, b = unit.alias("a"), unit.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.unit"), F.col("b.unit"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .withColumn("cosine", F.round(dot, 6))
+        .withColumn("cosine", _cosine(F.col("a.unit"), F.col("b.unit")))
         .where(F.col("cosine") >= threshold)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
@@ -1363,53 +1244,8 @@ def embedding_join(
     store them to skip re-bucketing the standing corpus per increment.
     The loose-threshold warning applies unchanged.
     """
-    n_bands, n_planes = _tuned_hyperplane_params(threshold, n_bands, n_planes)
-    if dim is None:
-        head = left.select(vec_col).head() or right.select(vec_col).head()
-        if head is None or head[0] is None:
-            raise ValueError(
-                "embedding_join: cannot infer vector dim from empty "
-                "inputs (or null first vector) — pass dim explicitly"
-            )
-        dim = len(head[0])
-    left = _drop_zero_norm(left, vec_col)
-    right = _drop_zero_norm(right, vec_col)
-    # non-deterministic mark: same §4.4 duplicate-below-generator fix
-    # as embedding_dup_pairs
-    bucket_udf = _band_bucket_udf(
-        dim, n_bands, n_planes, seed
-    ).asNondeterministic()
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
-
-    def prepared(df, out_id):
-        banded = df.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(bucket_udf(F.col(vec_col))).alias("band_id", "bucket"),
-        )
-        unit = df.select(
-            F.col(id_col).alias(out_id),
-            F.transform(vec_col, lambda x: x / norm).alias(f"__unit_{out_id}"),
-        )
-        return banded, unit
-
-    banded_l, unit_l = prepared(left, "left_id")
-    banded_r, unit_r = prepared(right, "right_id")
-    candidates = (
-        banded_l.join(banded_r, ["band_id", "bucket"])
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    dot = F.aggregate(
-        F.zip_with("__unit_left_id", "__unit_right_id", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        candidates.join(unit_l, "left_id")
-        .join(unit_r, "right_id")
-        .withColumn("cosine", F.round(dot, 6))
-        .where(F.col("cosine") >= threshold)
-        .select("left_id", "right_id", "cosine")
+    return _embedding_pairs(
+        left, right, vec_col, id_col, threshold, n_bands, n_planes, seed, dim
     )
 
 

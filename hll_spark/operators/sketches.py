@@ -615,30 +615,6 @@ def _ams_blob(df: DataFrame, col: str, depth: int, width: int, seed: int):
     return AmsSketch.from_bytes(bytes(row["sketch"])), int(row["rows_seen"])
 
 
-def ams_self_join_size(
-    df: DataFrame,
-    col: str,
-    depth: int = 5,
-    width: int = 1024,
-    seed: int = 0,
-) -> DataFrame:
-    """One-row frame: estimated self-equi-join output size (F2) of
-    ``col`` plus the one-sigma error scale — the skew statistic that
-    prices a groupBy/join on this key BEFORE shuffling 10^12 rows.
-
-    Plan: the standard two-level sketch tree (only blobs shuffle),
-    final estimate driver-side from one merged blob.
-    """
-    from ..localdf import fast_local_df
-
-    spark = df.sparkSession
-    s, rows = _ams_blob(df, col, depth, width, seed)
-    return fast_local_df(spark, 
-        [(float(s.f2()), float(s.error_bound()), rows)],
-        "est_self_join_rows double, sigma double, rows_seen bigint",
-    )
-
-
 def ams_join_size(
     left: DataFrame,
     left_col: str,

@@ -255,31 +255,49 @@ def test_embedding_dup_pairs_threshold_one_and_empty(spark):
     assert any("quadratic" in str(x.message) for x in w)
 
 
-def test_minhash_cache_is_bounded(spark):
-    """Repeated minhash calls keep at most one cached signature frame."""
+def test_no_frame_outlives_a_call(spark):
+    """Near-dup operators and the classifier reuse frames only inside
+    the plan they return: the session's CacheManager stays empty after
+    each call, and a repeat call rebuilds instead of reading a cached
+    relation."""
+    from hll_spark.operators.classifier import fit_quality_classifier
     from hll_spark.operators.dedup import (
-        _CACHE_SLOTS,
-        clear_minhash_cache,
+        dedup_increment,
+        minhash_join,
         minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        simhash_pairs,
     )
 
-    df = spark.createDataFrame(
-        [(i, f"some text body number {i} " * 3) for i in range(20)],
+    def body(i):
+        return " ".join(f"w{i}_{j}" for j in range(20))
+
+    docs = spark.createDataFrame(
+        [(1, body(0)), (2, body(0)), (3, body(1)), (4, body(2))],
         ["doc_id", "text"],
     )
-    clear_minhash_cache()
-    for _ in range(3):
-        minhash_lsh_pairs(df, "text", "doc_id").count()
-    assert len(_CACHE_SLOTS) == 1
-    same = _CACHE_SLOTS["minhash"][1]
-    # same input+params: the warm cached frame is REUSED, not evicted
-    minhash_lsh_pairs(df, "text", "doc_id").count()
-    assert _CACHE_SLOTS["minhash"][1] is same
-    # different params: old entry evicted, still exactly one alive
-    minhash_lsh_pairs(df, "text", "doc_id", k=64, bands=16).count()
-    assert len(_CACHE_SLOTS) == 1 and _CACHE_SLOTS["minhash"][1] is not same
-    clear_minhash_cache()
-    assert len(_CACHE_SLOTS) == 0
+    new = spark.createDataFrame([(10, body(1)), (11, body(5))], ["doc_id", "text"])
+    train = docs.withColumn("y", (F.col("doc_id") % 2).cast("int"))
+    calls = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, "text", "doc_id"),
+        "minhash_join": lambda: minhash_join(new, docs, "text", "doc_id"),
+        "dedup_increment": lambda: dedup_increment(new, docs, "text", "doc_id"),
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs, "text", "doc_id"),
+        "simhash_pairs": lambda: simhash_pairs(docs, "text", "doc_id"),
+        "fit_quality_classifier": lambda: fit_quality_classifier(
+            train, "y", n_features=64, iters=1
+        ).weights,
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name, call in calls.items():
+        first = sorted(call().collect())
+        assert first and cache.isEmpty(), name
+        again = call()
+        plan = again._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, name
+        assert sorted(again.collect()) == first, name
+        assert cache.isEmpty(), name
 
 
 def test_ngram_df_cap_keeps_threshold_pairs(spark, sf_dir):
@@ -625,10 +643,10 @@ def test_embedding_join_matches_allpairs_on_random_vectors(spark):
 
 def test_minhash_cache_hash_collision_rebuilds(spark, monkeypatch):
     """Two different inputs whose analyzed plans share a semantic hash
-    must not share the cached signature frame: sameResult confirms a
-    slot match, so the second input gets its own pairs."""
+    must not share a signature frame: each call builds its own, so the
+    second input gets its own pairs."""
     from hll_spark.operators import scanutil
-    from hll_spark.operators.dedup import clear_minhash_cache, minhash_lsh_pairs
+    from hll_spark.operators.dedup import minhash_lsh_pairs
 
     def body(i):
         return " ".join(f"w{i}_{j}" for j in range(40))
@@ -641,9 +659,5 @@ def test_minhash_cache_hash_collision_rebuilds(spark, monkeypatch):
     a = [(1, body(0)), (2, body(0)), (3, body(1))]
     b = [(10, body(2)), (11, body(2)), (12, body(3))]
     monkeypatch.setattr(scanutil, "plan_hash", lambda df: 0)
-    clear_minhash_cache()
-    try:
-        assert pairs(a) == [(1, 2)]
-        assert pairs(b) == [(10, 11)]
-    finally:
-        clear_minhash_cache()
+    assert pairs(a) == [(1, 2)]
+    assert pairs(b) == [(10, 11)]

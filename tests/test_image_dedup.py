@@ -87,14 +87,17 @@ def test_jpeg_reencode_is_near_duplicate():
     assert d <= 2
 
 
-def test_banding_parity_with_brute_force(spark):
+# max_hamming 4 and 6 split the hash into 5 and 7 chunks of uneven width
+@pytest.mark.parametrize("max_hamming", [3, 4, 6])
+def test_banding_parity_with_brute_force(spark, max_hamming):
     rng = np.random.default_rng(17)
     n = 300
     base = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
-    # plant near-dup structure: 40 ids are 1-3 bit flips of earlier ones
+    # plant near-dup structure: 40 ids are 1..max_hamming bit flips of
+    # earlier ones
     for i in range(40):
         src = int(base[i])
-        flips = rng.choice(64, size=rng.integers(1, 4), replace=False)
+        flips = rng.choice(64, size=rng.integers(1, max_hamming + 1), replace=False)
         v = src
         for f in flips:
             v ^= 1 << int(f)
@@ -103,7 +106,7 @@ def test_banding_parity_with_brute_force(spark):
     hashed = spark.createDataFrame(pdf)
     got = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in hamming_band_pairs(hashed, "id", "h", 3).collect()
+        for r in hamming_band_pairs(hashed, "id", "h", max_hamming).collect()
     }
     u = base.astype(np.uint64)
 
@@ -113,7 +116,7 @@ def test_banding_parity_with_brute_force(spark):
     want = set()
     for a in range(n):
         ham = popcount(u ^ u[a])
-        for b in np.nonzero((ham <= 3) & (np.arange(n) > a))[0]:
+        for b in np.nonzero((ham <= max_hamming) & (np.arange(n) > a))[0]:
             want.add((a, int(b), int(ham[b])))
     assert got == want
 
@@ -265,7 +268,8 @@ def test_audio_dup_pairs_end_to_end(spark):
     assert 100 not in flat and 101 not in flat
 
 
-def test_band_join_parity_with_brute_force(spark):
+@pytest.mark.parametrize("max_hamming", [3, 4, 6])
+def test_band_join_parity_with_brute_force(spark, max_hamming):
     # cross-table analog of the self-join brute-force parity: split
     # the same planted near-dup population into two tables and demand
     # the exact cross-pair set (recall 1 within the Hamming budget)
@@ -276,7 +280,7 @@ def test_band_join_parity_with_brute_force(spark):
     base = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
     for i in range(40):
         src = int(base[i])
-        flips = rng.choice(64, size=rng.integers(1, 4), replace=False)
+        flips = rng.choice(64, size=rng.integers(1, max_hamming + 1), replace=False)
         v = src
         for f in flips:
             v ^= 1 << int(f)
@@ -289,7 +293,7 @@ def test_band_join_parity_with_brute_force(spark):
     )
     got = {
         (r["left_id"], r["right_id"], r["hamming"])
-        for r in hamming_band_join(left, right, "id", "h", 3).collect()
+        for r in hamming_band_join(left, right, "id", "h", max_hamming).collect()
     }
     u = base.astype(np.uint64)
 
@@ -299,7 +303,7 @@ def test_band_join_parity_with_brute_force(spark):
     want = set()
     for a in range(0, n, 2):  # left ids are even positions
         ham = popcount(u ^ u[a])
-        for b in np.nonzero(ham <= 3)[0]:
+        for b in np.nonzero(ham <= max_hamming)[0]:
             if b % 2 == 1:  # right ids are odd positions
                 want.add((a, int(b), int(ham[b])))
     assert got == want
