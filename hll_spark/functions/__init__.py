@@ -1,8 +1,10 @@
 """Scalar function surface (SURVEY.md §2.2 scalar-functions row).
 
-Pandas-UDF factories for the sketch family plus the spec-parity hash,
-re-exported here as the one-stop function registry. Everything generic
-(string/date/math) is deliberately *not* wrapped — use
+UDF factories for the sketch family plus the spec-parity hash,
+re-exported here as the one-stop function registry. Every sketch
+read-out is one Arrow UDF factory, :func:`hll_spark.operators.agg.sketch_udf`
+(NULL in, NULL out); the names below are thin calls to it. Everything
+generic (string/date/math) is deliberately *not* wrapped — use
 ``pyspark.sql.functions`` built-ins; they stay in whole-stage codegen.
 """
 
@@ -17,10 +19,17 @@ from ..operators.agg import (
     hll_estimate_udf,
     hll_intersect_udf,
     hll_union_udf,
+    sketch_udf,
+)
+from ..operators.sketches import (
+    bloom_might_contain_udf,
+    cms_query_udf,
+    theta_difference_udf,
+    theta_estimate_udf,
+    theta_intersect_udf,
+    theta_jaccard_udf,
 )
 from ..operators.text import fingerprint_udf, lang_id_udf
-from ..sketchlib.bloom import BloomFilter
-from ..sketchlib.cms import CountMinSketch
 from ..sketchlib.hashing import murmur3_x64_128_low64
 from ..sketchlib.kll import KllSketch
 from ..sketchlib.tdigest import TDigest
@@ -57,56 +66,13 @@ def extract_text_udf():
 
 
 def kll_quantile_udf(q: float):
-    """sketch bytes -> quantile value."""
-
-    def f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: float(KllSketch.from_bytes(bytes(b)).quantile(q)))
-
-    return pandas_udf(f, DoubleType())
+    """KLL sketch bytes -> quantile value (double)."""
+    return sketch_udf(KllSketch.from_bytes, lambda s: s.quantile(q), DoubleType())
 
 
 def tdigest_quantile_udf(q: float):
-    def f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: float(TDigest.from_bytes(bytes(b)).quantile(q)))
-
-    return pandas_udf(f, DoubleType())
-
-
-def cms_query_udf(cms_bytes: bytes):
-    """hashed item column -> estimated count, probing a broadcast CMS."""
-
-    def f(hashed: pd.Series) -> pd.Series:
-        cms = CountMinSketch.from_bytes(cms_bytes)
-        return pd.Series(
-            cms.query_hashed(hashed.to_numpy(np.int64)).astype(np.int64)
-        )
-
-    return pandas_udf(f, LongType())
-
-
-def bloom_might_contain_udf(bloom_bytes: bytes):
-    """hashed item column -> membership boolean against a broadcast Bloom."""
-    from pyspark.sql.types import BooleanType
-
-    def f(hashed: pd.Series) -> pd.Series:
-        bf = BloomFilter.from_bytes(bloom_bytes)
-        return pd.Series(bf.might_contain_hashed(hashed.to_numpy(np.int64)))
-
-    return pandas_udf(f, BooleanType())
-
-
-def theta_jaccard_udf():
-    """Set Jaccard |A∩B| / |A∪B| straight from two theta sketches —
-    the sketch-level analogue of the document-level MinHash estimate.
-
-    Delegates to :func:`hll_spark.operators.sketches.theta_jaccard_udf`
-    (the canonical implementation, whose denominator is the UNION
-    sketch's estimate rather than inclusion-exclusion, so numerator
-    and denominator ride the same common-theta sample in the
-    estimation tier; identical in the exact tier)."""
-    from ..operators.sketches import theta_jaccard_udf as _impl
-
-    return _impl()
+    """t-digest bytes -> quantile value (double)."""
+    return sketch_udf(TDigest.from_bytes, lambda s: s.quantile(q), DoubleType())
 
 
 def register_sql_functions(spark) -> None:
@@ -129,12 +95,6 @@ def register_sql_functions(spark) -> None:
     spark.udf.register("doc_fingerprint", fingerprint_udf())
     spark.udf.register("lang_id", lang_id_udf())
     spark.udf.register("extract_text", extract_text_udf())
-    from ..operators.sketches import (
-        theta_difference_udf,
-        theta_estimate_udf,
-        theta_intersect_udf,
-    )
-
     spark.udf.register("theta_cardinality", theta_estimate_udf())
     spark.udf.register("theta_intersect", theta_intersect_udf())
     spark.udf.register("theta_difference", theta_difference_udf())

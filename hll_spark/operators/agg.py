@@ -7,7 +7,7 @@ The execution shape (SURVEY.md §3.4, §4.3) is the same for every sketch:
     -> mapInArrow: per-(input partition, group) partial sketches   [level 0]
     -> [global, optional: merge by bucket]                         [level 1]
     -> mapInArrow merge on the group keys (global: one task)       [level 2]
-    -> estimate
+       (optionally answering from the merged sketches: ``answer``)
 
 The level-0 pre-combine is the load-bearing piece: Spark's grouped-map
 Python API has no map-side combine, so without it a 10^12-row job
@@ -30,7 +30,9 @@ One generic scaffold (:class:`SketchSpec` + :func:`sketch_partials` +
 :func:`merge_sketch_partials`) serves every sketch operator in the
 package — HLL, CMS, Bloom, KLL, t-digest, theta, Misra-Gries, sliding HLL,
 Frequent Directions and the fused extract-and-sketch flagship — each
-sketch only supplies zero/update/merge/serialize.
+sketch only supplies zero/update/merge/serialize. Sketch bytes that
+arrive already stored are read by one Arrow UDF factory,
+:func:`sketch_udf`.
 """
 
 from __future__ import annotations
@@ -39,12 +41,12 @@ from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -56,7 +58,7 @@ from pyspark.sql.types import (
 )
 
 from ..sketchlib.hashing import murmur3_x64_128_low64
-from ..sketchlib.hll import HllConfig, HllSketch, hll_union_all
+from ..sketchlib.hll import HllConfig, HllSketch, hll_intersect_estimate
 from .scanutil import plan_stats
 
 DEFAULT_SALT_SEED = 0x5B1FF00D
@@ -495,7 +497,9 @@ def _estimate_partials_partitions(partials: DataFrame) -> int:
         return 1 << 20  # unknown: choose the scale-safe topology
 
 
-def _merge(partials: DataFrame, spec: SketchSpec, by: list[str]) -> DataFrame:
+def _merge(
+    partials: DataFrame, spec: SketchSpec, by: list[str], answer: tuple | None = None
+) -> DataFrame:
     """One merge stage: co-locate every group's blobs and fold them.
 
     Grouped: hash-repartition on the keys + ONE mapInArrow call per
@@ -506,19 +510,44 @@ def _merge(partials: DataFrame, spec: SketchSpec, by: list[str]) -> DataFrame:
     query). Keys are emitted as an Arrow take, so their types round-trip.
     Global (no keys): the same function over ``repartition(1)``, emitting
     a zero sketch if no partial arrives.
+
+    ``answer = (fields, fn)`` emits ``*by, *fields`` instead of
+    ``*by, sketch, rows_seen``: ``fn(states, counts)`` answers from the
+    merged states in memory (a group no blob reached holds
+    ``spec.zero_fn()``), so the merge's sketches are never encoded to be
+    decoded again. It returns one list, numpy or Arrow array per field,
+    converted to the field's Arrow type with NaN as NULL (as from a
+    pandas UDF).
     """
-    names = [*by, "sketch", "rows_seen"]
     per_batch = _blob_folder(spec, len(by))
+    stage = partials.select(*by, "sketch", "rows_seen")
+    stage = stage.repartition(*by) if by else stage.repartition(1)
+    out_schema = stage.schema
+    if answer is not None:
+        fields, fn = answer
+        clash = set(by) & {f.name for f in fields}
+        if clash:
+            raise ValueError(
+                f"grouping column(s) {sorted(clash)} collide with the answer's columns"
+            )
+        out_schema = StructType([stage.schema[k] for k in by] + list(fields))
+        types = [to_arrow_type(f.dataType) for f in fields]
+    names = [f.name for f in out_schema]
 
     def merge_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rbs = [rb for rb in batches if rb.num_rows]
         whole = [pa.Table.from_batches(rbs)] if rbs else []
         for keys, states, counts in _combine(whole, len(by), per_batch):
-            yield from _partials_table(spec, keys, states, counts, names).to_batches()
+            if answer is None:
+                out = _partials_table(spec, keys, states, counts, names)
+            else:
+                states = [spec.zero_fn() if s is None else s for s in states]
+                vals = fn(states, counts)
+                cols = [pa.array(v, t, from_pandas=True) for v, t in zip(vals, types)]
+                out = pa.Table.from_arrays([*keys, *cols], names=names)
+            yield from out.to_batches()
 
-    stage = partials.select(*names)
-    stage = stage.repartition(*by) if by else stage.repartition(1)
-    return stage.mapInArrow(merge_partition, stage.schema)
+    return stage.mapInArrow(merge_partition, out_schema)
 
 
 def merge_sketch_partials(
@@ -526,6 +555,7 @@ def merge_sketch_partials(
     spec: SketchSpec,
     by: list[str] | None = None,
     two_level: bool | None = None,
+    answer: tuple | None = None,
 ) -> DataFrame:
     """Merge partials down to one sketch per group (or one total).
 
@@ -539,15 +569,16 @@ def merge_sketch_partials(
     (EXPLICIT-tier sketches) or the scan has >10^4 partitions.
     Grouped: one shuffle on the group keys — level 0 already collapsed
     each group to at most one blob per input partition (per flush).
+    ``answer`` is as in :func:`_merge`, applied by the final merge only.
     """
     by = list(by or [])
     if by:
-        return _merge(partials, spec, by)
+        return _merge(partials, spec, by, answer)
     if two_level is None:
         two_level = _estimate_partials_partitions(partials) > 4096
     if two_level:
         partials = _merge(partials, spec, ["bucket"])
-    return _merge(partials, spec, [])
+    return _merge(partials, spec, [], answer)
 
 
 def sketch_aggregate(
@@ -558,13 +589,15 @@ def sketch_aggregate(
     hash_mode: str | None = "xxhash64",
     merge_buckets: int = 16,
     salt_partitions: int | None = None,
+    answer: tuple | None = None,
 ) -> DataFrame:
     """Full pipeline: level-0 partials -> tree merge -> one sketch row per
-    group (columns: ``*by, sketch, rows_seen``)."""
+    group (columns: ``*by, sketch, rows_seen``, or ``*by`` and the
+    ``answer`` fields, see :func:`_merge`)."""
     partials = sketch_partials(
         df, col, spec, by, hash_mode, merge_buckets, salt_partitions
     )
-    return merge_sketch_partials(partials, spec, by)
+    return merge_sketch_partials(partials, spec, by, answer=answer)
 
 
 # ---------------------------------------------------------------------------
@@ -606,54 +639,67 @@ def hll_distinct(
         "distinct_" + "_".join(col) if isinstance(col, (list, tuple))
         else f"distinct_{col}"
     )
-    sketches = hll_sketch_agg(
-        df, col, by, cfg, hash_mode, merge_buckets, salt_partitions
+
+    def estimates(states, _counts):
+        return [[s.estimate() for s in states]]
+
+    return sketch_aggregate(
+        df, col, hll_spec(cfg), by, hash_mode, merge_buckets, salt_partitions,
+        answer=([StructField(alias, LongType())], estimates),
     )
-    est = hll_estimate_udf()
-    out = sketches.withColumn(alias, est(F.col("sketch")))
-    keep = list(by or []) + [alias]
-    return out.select(*keep)
+
+
+# ---------------------------------------------------------------------------
+# the one read-out of stored sketch bytes
+
+
+def sketch_udf(decode, read, return_type, probe=None):
+    """Arrow UDF answering from sketch bytes that arrive already stored
+    (a sketch column, a SQL argument, a broadcast build). Sketches a
+    merge has just built are answered in its task instead (``answer``
+    on :func:`merge_sketch_partials`).
+
+    Without ``probe``: each argument column holds sketch bytes, and a
+    row's value is ``read(*[decode(b) for b in its blobs])``, NULL when
+    any of its blobs is NULL. With ``probe`` (one sketch's bytes, or a
+    Broadcast of them): the one argument is an int64 hash column (e.g.
+    ``xxhash64``); each batch decodes the sketch once and
+    ``read(sketch, hashes)`` answers every row at once, NULL where the
+    hash is NULL. A NaN answer is NULL, as from a pandas UDF.
+    """
+    from pyspark import Broadcast
+    from pyspark.sql.functions import arrow_udf
+
+    rtype = to_arrow_type(return_type)
+
+    def readout(*cols: pa.Array) -> pa.Array:
+        if probe is None:
+            rows = zip(*[c.to_pylist() for c in cols])
+            vals = [None if None in r else read(*map(decode, r)) for r in rows]
+            return pa.array(vals, rtype, from_pandas=True)
+        h = cols[0]
+        sk = decode(probe.value if isinstance(probe, Broadcast) else probe)
+        out = read(sk, h.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64))
+        return pa.array(out, rtype, mask=h.is_null().to_numpy(zero_copy_only=False))
+
+    return arrow_udf(readout, return_type)
 
 
 def hll_estimate_udf():
-    """Scalar pandas UDF: sketch bytes -> cardinality estimate (long)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def hll_estimate(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: HllSketch.from_bytes(bytes(b)).estimate())
-
-    return hll_estimate
+    """sketch bytes -> cardinality estimate (long)."""
+    return sketch_udf(HllSketch.from_bytes, HllSketch.estimate, LongType())
 
 
 def hll_union_udf():
-    """Scalar pandas UDF: union two sketch-bytes columns."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(BinaryType())
-    def hll_union_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [hll_union_all([bytes(x), bytes(y)]) for x, y in zip(a, b)]
-        )
-
-    return hll_union_pair
+    """Union two sketch-bytes columns (bytes)."""
+    return sketch_udf(HllSketch.from_bytes, lambda a, b: a.union(b).to_bytes(), BinaryType())
 
 
 def hll_intersect_udf():
-    """Scalar pandas UDF: inclusion-exclusion |A ∩ B| estimate (double).
+    """Inclusion-exclusion |A ∩ B| estimate (double).
 
     Error compounds with both sketches' errors (README.md:74-81 caveat)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..sketchlib.hll import hll_intersect_estimate
-
-    @pandas_udf(DoubleType())
-    def hll_intersect(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [hll_intersect_estimate(bytes(x), bytes(y)) for x, y in zip(a, b)]
-        )
-
-    return hll_intersect
+    return sketch_udf(bytes, hll_intersect_estimate, DoubleType())
 
 
 def _overlap_matrix(

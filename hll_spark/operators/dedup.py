@@ -1591,9 +1591,7 @@ def decontaminate_ngrams_bloom(
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    from .sketches import bloom_build
-    from ..sketchlib.bloom import BloomFilter
-    from pyspark.sql.types import BooleanType
+    from .sketches import bloom_build, bloom_might_contain_udf
 
     def grams(col):
         return _word_ngrams(F.split(F.col(col), " +"), n)
@@ -1603,12 +1601,7 @@ def decontaminate_ngrams_bloom(
         .distinct()
     )
     blob = bloom_build(bench_grams, "gram", m_bits, k)
-    bc = df.sparkSession.sparkContext.broadcast(blob)
-
-    @pandas_udf(BooleanType())
-    def might_contain(hashed: pd.Series) -> pd.Series:
-        bf = BloomFilter.from_bytes(bc.value)
-        return pd.Series(bf.might_contain_hashed(hashed.to_numpy(np.int64)))
+    might_contain = bloom_might_contain_udf(df.sparkSession.sparkContext.broadcast(blob))
 
     from .scanutil import fan_out_scan
 

@@ -32,7 +32,6 @@ from pyspark.sql.types import (
     NumericType,
     StringType,
     StructField,
-    StructType,
 )
 
 
@@ -302,9 +301,9 @@ def profile_table(
     parquet) into flat Columns, ``agg.column_partials`` builds every
     column's composite sketch (:func:`_profile_spec`) per input
     partition — rows never shuffle; the shuffle carries ``partitions x
-    columns`` small blob rows — ``merge_sketch_partials`` merges them by
-    label, and a narrow ``mapInArrow`` in the merge's tasks renders the
-    estimates. At 10^12 rows the cost is the one pruned scan;
+    columns`` small blob rows — and ``merge_sketch_partials`` merges
+    them by label and answers the estimates from the merged sketches in
+    its tasks. At 10^12 rows the cost is the one pruned scan;
     everything downstream is KBs.
 
     The per-batch kernels stay vectorized: HLL updates from the
@@ -313,9 +312,6 @@ def profile_table(
     rows), min/max/length from Arrow compute, KLL from the float64
     view. Only simple (atomic) column types are supported.
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     from .agg import column_partials, merge_sketch_partials
 
     cols = list(df.columns if columns is None else columns)
@@ -325,7 +321,7 @@ def profile_table(
         if c not in df.columns:
             raise ValueError(f"unknown column {c!r}")
     qs = [float(q) for q in quantiles]
-    is_num = {c: isinstance(df.schema[c].dataType, NumericType) for c in cols}
+    numeric = [c for c in cols if isinstance(df.schema[c].dataType, NumericType)]
     spec = _profile_spec(hll_cfg, mg_k, kll_k)
 
     # per profiled column: a null-preserved JVM-side hash (xxhash64 of
@@ -335,60 +331,56 @@ def profile_table(
     for c in cols:
         col = F.col(c)
         flat[c] = [F.when(col.isNotNull(), F.xxhash64(col)), col.cast("string")]
-        if is_num[c]:
+        if c in numeric:
             flat[c].append(col.cast("double"))
+
+    fields = [
+        StructField("n_rows", LongType()),
+        StructField("n_null", LongType()),
+        StructField("n_distinct_est", LongType()),
+        StructField("total_len", LongType()),
+        StructField("min_str", StringType()),
+        StructField("max_str", StringType()),
+        StructField("min_num", DoubleType()),
+        StructField("max_num", DoubleType()),
+        StructField("top_values", ArrayType(StringType())),
+        StructField("top_counts", ArrayType(LongType())),
+        StructField("mg_err_bound", LongType()),
+        StructField("quantiles", ArrayType(DoubleType())),
+    ]
+
+    def render(states, counts):
+        rows = []
+        for (hll, mg, kll, ex), n in zip(states, counts):
+            top = mg.top(top_n)
+            rows.append(
+                {
+                    **ex,
+                    "n_rows": n,
+                    "n_distinct_est": hll.estimate(),
+                    "top_values": [v for v, _ in top],
+                    "top_counts": [int(c) for _, c in top],
+                    "mg_err_bound": mg.error_bound,
+                    # an empty sketch's NaN ranks are NULLs
+                    "quantiles": kll.quantiles(qs) if qs else None,
+                }
+            )
+        return [[r[f.name] for r in rows] for f in fields]
+
     merged = merge_sketch_partials(
-        column_partials(df, flat, spec, hash_mode="arrow"), spec, by=["label"]
+        column_partials(df, flat, spec, hash_mode="arrow"),
+        spec,
+        by=["label"],
+        answer=(fields, render),
     )
-
-    out_schema = StructType(
-        [
-            StructField("col_name", StringType()),
-            StructField("n_rows", LongType()),
-            StructField("n_null", LongType()),
-            StructField("n_distinct_est", LongType()),
-            StructField("total_len", LongType()),
-            StructField("min_str", StringType()),
-            StructField("max_str", StringType()),
-            StructField("min_num", DoubleType()),
-            StructField("max_num", DoubleType()),
-            StructField("top_values", ArrayType(StringType())),
-            StructField("top_counts", ArrayType(LongType())),
-            StructField("mg_err_bound", LongType()),
-            StructField("quantiles", ArrayType(DoubleType())),
-        ]
+    # a label no row reached (an empty frame) gets no row; a non-numeric
+    # column has no quantiles
+    quantiles_col = F.when(F.col("label").isin(numeric), F.col("quantiles"))
+    return merged.where(F.col("n_rows") > 0).select(
+        F.col("label").alias("col_name"),
+        *[f.name for f in fields[:-1]],
+        quantiles_col.alias("quantiles"),
     )
-    arrow_out = to_arrow_schema(out_schema)
-
-    def render(batches):
-        for rb in batches:
-            rows = []
-            part = rb.to_pydict()
-            for label, blob, n_rows in zip(part["label"], part["sketch"], part["rows_seen"]):
-                if not n_rows:
-                    continue
-                hll, mg, kll, ex = spec.from_bytes_fn(blob)
-                top = mg.top(top_n)
-                rows.append(
-                    {
-                        **ex,
-                        "col_name": label,
-                        "n_rows": n_rows,
-                        "n_distinct_est": int(hll.estimate()),
-                        "top_values": [v for v, _ in top],
-                        "top_counts": [int(n) for _, n in top],
-                        "mg_err_bound": int(mg.error_bound),
-                        # an empty sketch's NaN ranks render as NULLs
-                        "quantiles": (
-                            [None if np.isnan(x) else float(x) for x in kll.quantiles(qs)]
-                            if is_num[label] and qs
-                            else None
-                        ),
-                    }
-                )
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_out)
-
-    return merged.mapInArrow(render, out_schema)
 
 
 def fk_containment_report(

@@ -85,9 +85,9 @@ def fd_gram_by(
     """Per-group FD: one sketch per ``by`` cell, fully distributed.
 
     The scaffold's grouped build (per-(input partition, group)
-    partials, merged on the group keys) yields one sketch per group;
-    each group's sketched Gram matrix then expands JVM-side to
-    (by..., i, j, gram) rows (dim^2 per group)."""
+    partials, merged on the group keys) yields one sketch per group,
+    whose merge task answers its sketched Gram matrix; that expands
+    JVM-side to (by..., i, j, gram) rows (dim^2 per group)."""
     if not by:
         raise ValueError("by must name at least one grouping column")
     reserved = {"__v0", "__g", "__dim", "__p", "i", "j", "gram", "sketch", "rows_seen"}
@@ -97,15 +97,14 @@ def fd_gram_by(
             f"grouping column(s) {sorted(clash)} collide with the "
             "operator's output/internal names; rename them first"
         )
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(ArrayType(DoubleType()))
-    def gram(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: FDSketch.from_bytes(bytes(b)).gram().ravel())
+    def grams(states, _counts):
+        return [[s.gram().ravel() for s in states]]
 
     merged = sketch_aggregate(
-        df, F.col(col), fd_spec(ell), by, hash_mode="arrow"
-    ).select(*by, gram("sketch").alias("__g"))
+        df, F.col(col), fd_spec(ell), by, hash_mode="arrow",
+        answer=([StructField("__g", ArrayType(DoubleType()))], grams),
+    )
     dim = F.sqrt(F.size("__g")).cast("long")
     return merged.select(
         *by, dim.alias("__dim"), F.posexplode("__g").alias("__p", "gram")

@@ -10,19 +10,22 @@ Arrow and never run per-row Python.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     DoubleType,
     LongType,
+    StringType,
+    StructField,
+    StructType,
 )
 
 from ..sketchlib.bloom import BloomFilter
 from ..sketchlib.cms import CountMinSketch
 from ..sketchlib.kll import KllSketch
 from ..sketchlib.tdigest import TDigest
-from .agg import SketchSpec, sketch_aggregate
+from .agg import SketchSpec, sketch_aggregate, sketch_udf
 
 
 # ---------------------------------------------------------------------------
@@ -151,22 +154,23 @@ def cms_frequencies(
     """Estimate the frequency of each row of ``items_df[col]``.
 
     The CMS is built over ``df`` then broadcast (it is a few hundred
-    KB) and probed with a vectorized pandas UDF — the scale-path
-    pattern for "how often does each of these K items occur in 100 TB".
+    KB) and probed batch-wise by :func:`~.agg.sketch_udf` — the
+    scale-path pattern for "how often does each of these K items occur
+    in 100 TB".
     """
-    blob = cms_build(df, col, depth, width)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(blob)
+    bc = df.sparkSession.sparkContext.broadcast(cms_build(df, col, depth, width))
+    return items_df.withColumn(alias, cms_query_udf(bc)(F.xxhash64(F.col(col))))
 
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(LongType())
-    def probe(hashed: pd.Series) -> pd.Series:
-        cms = CountMinSketch.from_bytes(bc.value)
-        est = cms.query_hashed(hashed.to_numpy(np.int64))
-        return pd.Series(est.astype(np.int64))
+def _query_counts(sketch, hashes: np.ndarray) -> np.ndarray:
+    """Point estimates of a CMS or count sketch, as int64."""
+    return sketch.query_hashed(hashes).astype(np.int64)
 
-    return items_df.withColumn(alias, probe(F.xxhash64(F.col(col))))
+
+def cms_query_udf(cms_bytes):
+    """hashed item column -> estimated count, probing one CMS's bytes
+    (or a Broadcast of them)."""
+    return sketch_udf(CountMinSketch.from_bytes, _query_counts, LongType(), probe=cms_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -218,45 +222,36 @@ def bloom_filter_join(
     At scale this runs before the shuffle of a fact-dim join, cutting
     shuffle volume by the non-matching fraction; the bitmap is broadcast.
     """
-    blob = bloom_build(dim, dim_col, m_bits, k)
-    bc = fact.sparkSession.sparkContext.broadcast(blob)
+    bc = fact.sparkSession.sparkContext.broadcast(bloom_build(dim, dim_col, m_bits, k))
+    return fact.where(bloom_might_contain_udf(bc)(F.xxhash64(F.col(fact_col))))
 
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(BooleanType())
-    def might_contain(hashed: pd.Series) -> pd.Series:
-        bf = BloomFilter.from_bytes(bc.value)
-        return pd.Series(bf.might_contain_hashed(hashed.to_numpy(np.int64)))
-
-    return fact.where(might_contain(F.xxhash64(F.col(fact_col))))
+def bloom_might_contain_udf(bloom_bytes):
+    """hashed item column -> membership boolean against one Bloom
+    filter's bytes (or a Broadcast of them)."""
+    return sketch_udf(
+        BloomFilter.from_bytes, BloomFilter.might_contain_hashed, BooleanType(), probe=bloom_bytes
+    )
 
 
 # ---------------------------------------------------------------------------
 # quantile sketches
 
 
-def _quantiles_from_sketch_df(
-    sketches: DataFrame,
-    by: list[str] | None,
-    qs: list[float],
-    from_bytes,
-    prefix: str,
-) -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
+def _quantiles(df: DataFrame, col: str, spec: SketchSpec, qs, by) -> DataFrame:
+    """``*by`` and one double column per requested quantile (``q0_5``
+    for 0.5), answered in the merge task from each merged sketch; an
+    empty sketch's NaN is NULL. A repeated quantile is answered once
+    and selected twice (an Arrow batch cannot repeat a field name)."""
+    names = [f"q{str(q).replace('.', '_')}" for q in qs]
+    uniq = dict(zip(names, qs))
 
-    def make_udf(q: float):
-        def qf(blobs: pd.Series) -> pd.Series:
-            return blobs.map(lambda b: float(from_bytes(bytes(b)).quantile(q)))
+    def quantiles(states, _counts):
+        return [[s.quantile(q) for s in states] for q in uniq.values()]
 
-        return pandas_udf(qf, DoubleType())
-
-    cols = list(by or [])
-    out = sketches
-    for q in qs:
-        name = f"{prefix}{str(q).replace('.', '_')}"
-        out = out.withColumn(name, make_udf(q)(F.col("sketch")))
-        cols.append(name)
-    return out.select(*cols)
+    fields = [StructField(n, DoubleType()) for n in uniq]
+    merged = sketch_aggregate(df, col, spec, by, hash_mode=None, answer=(fields, quantiles))
+    return merged.select(*(by or []), *names)
 
 
 def kll_quantiles(
@@ -267,8 +262,7 @@ def kll_quantiles(
     k: int = 200,
 ) -> DataFrame:
     """Approximate quantiles of ``col`` via KLL (rank error ~ O(1/k))."""
-    sketches = sketch_aggregate(df, col, kll_spec(k), by, hash_mode=None)
-    return _quantiles_from_sketch_df(sketches, by, qs, KllSketch.from_bytes, "q")
+    return _quantiles(df, col, kll_spec(k), qs, by)
 
 
 def kll_range_buckets(
@@ -319,8 +313,7 @@ def tdigest_quantiles(
     delta: float = 200.0,
 ) -> DataFrame:
     """Approximate quantiles of ``col`` via t-digest (tail-accurate)."""
-    sketches = sketch_aggregate(df, col, tdigest_spec(delta), by, hash_mode=None)
-    return _quantiles_from_sketch_df(sketches, by, qs, TDigest.from_bytes, "q")
+    return _quantiles(df, col, tdigest_spec(delta), qs, by)
 
 
 # ---------------------------------------------------------------------------
@@ -356,60 +349,25 @@ def theta_sketch_agg(
 
 
 def theta_estimate_udf():
-    from pyspark.sql.functions import pandas_udf
-
+    """sketch bytes -> distinct estimate (double)."""
     from ..sketchlib.theta import ThetaSketch
 
-    @pandas_udf(DoubleType())
-    def est(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: ThetaSketch.from_bytes(bytes(b)).estimate_float()
-        )
-
-    return est
+    return sketch_udf(ThetaSketch.from_bytes, ThetaSketch.estimate_float, DoubleType())
 
 
 def theta_intersect_udf():
     """DIRECT |A∩B| estimate — no inclusion-exclusion: error scales with
     the intersection, not the union (the analytical gap HLL cannot close)."""
-    from pyspark.sql.functions import pandas_udf
-
     from ..sketchlib.theta import ThetaSketch
 
-    @pandas_udf(DoubleType())
-    def inter(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                ThetaSketch.from_bytes(bytes(x)).intersect_estimate(
-                    ThetaSketch.from_bytes(bytes(y))
-                )
-                for x, y in zip(a, b)
-            ],
-            index=a.index,
-        )
-
-    return inter
+    return sketch_udf(ThetaSketch.from_bytes, ThetaSketch.intersect_estimate, DoubleType())
 
 
 def theta_difference_udf():
     """DIRECT |A \\ B| estimate."""
-    from pyspark.sql.functions import pandas_udf
-
     from ..sketchlib.theta import ThetaSketch
 
-    @pandas_udf(DoubleType())
-    def diff(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                ThetaSketch.from_bytes(bytes(x)).difference_estimate(
-                    ThetaSketch.from_bytes(bytes(y))
-                )
-                for x, y in zip(a, b)
-            ],
-            index=a.index,
-        )
-
-    return diff
+    return sketch_udf(ThetaSketch.from_bytes, ThetaSketch.difference_estimate, DoubleType())
 
 
 # ---------------------------------------------------------------------------
@@ -462,17 +420,6 @@ def mg_top_items(
     oracle-checked driver query pins. Unlike CMS heavy hitters, no
     candidate set is needed: the summary carries the items.
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        ArrayType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..sketchlib.mg import MisraGries
-
-    sketches = mg_sketch_agg(df, col, k=k, by=by)
     entry = StructType(
         [
             StructField("item", StringType()),
@@ -481,22 +428,21 @@ def mg_top_items(
         ]
     )
 
-    @pandas_udf(ArrayType(entry))
-    def top(blobs: pd.Series) -> pd.Series:
-        out = []
-        for b in blobs:
-            s = MisraGries.from_bytes(bytes(b))
-            out.append(
-                [
-                    {"item": it, "count_lb": c, "error_bound": s.offset}
-                    for it, c in s.top(top_n)
-                ]
-            )
-        return pd.Series(out, index=blobs.index)
+    def top(states, _counts):
+        return [
+            [
+                [{"item": it, "count_lb": c, "error_bound": s.offset} for it, c in s.top(top_n)]
+                for s in states
+            ]
+        ]
 
     keys = [F.col(c) for c in (by or [])]
     return (
-        sketches.select(*keys, F.explode(top(F.col("sketch"))).alias("__e"))
+        sketch_aggregate(
+            df, col, mg_spec(k), by, hash_mode="raw",
+            answer=([StructField("__e", ArrayType(entry))], top),
+        )
+        .select(*keys, F.explode("__e").alias("__e"))
         .select(*keys, "__e.item", "__e.count_lb", "__e.error_bound")
     )
 
@@ -538,35 +484,20 @@ def distinct_sample(
     is then the complete distinct set — the oracle-checkable regime).
     Deterministic at any partitioning (tested byte-equal).
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType as _Bool,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..sketchlib.kmvsample import BottomKSample
-
-    sketches = sketch_aggregate(df, col, kmv_sample_spec(k), by, hash_mode="raw")
     entry = StructType(
-        [StructField("item", StringType()), StructField("is_exact", _Bool())]
+        [StructField("item", StringType()), StructField("is_exact", BooleanType())]
     )
 
-    @pandas_udf(ArrayType(entry))
-    def expand(blobs: pd.Series) -> pd.Series:
-        out = []
-        for b in blobs:
-            s = BottomKSample.from_bytes(bytes(b))
-            out.append(
-                [{"item": it, "is_exact": s.is_exact} for it in s.sample()]
-            )
-        return pd.Series(out, index=blobs.index)
+    def expand(states, _counts):
+        return [[[{"item": it, "is_exact": s.is_exact} for it in s.sample()] for s in states]]
 
     keys = [F.col(c) for c in (by or [])]
     return (
-        sketches.select(*keys, F.explode(expand(F.col("sketch"))).alias("__e"))
+        sketch_aggregate(
+            df, col, kmv_sample_spec(k), by, hash_mode="raw",
+            answer=([StructField("__e", ArrayType(entry))], expand),
+        )
+        .select(*keys, F.explode("__e").alias("__e"))
         .select(*keys, "__e.item", "__e.is_exact")
     )
 
@@ -728,26 +659,18 @@ def countsketch_frequencies(
     via the count-sketch point estimator (AmsSketch.query_hashed).
 
     The sketch is built over ``df`` then broadcast (a few hundred KB)
-    and probed with a vectorized pandas UDF — identical plan shape to
-    cms_frequencies, different estimator contract: unbiased with
+    and probed batch-wise by :func:`~.agg.sketch_udf` — identical plan
+    shape to cms_frequencies, different estimator contract: unbiased with
     ~sqrt(F2/width) error instead of CMS's one-sided eps*N
     overestimate, and valid on signed/turnstile streams. Use odd
     ``depth`` so integer medians stay exact.
     """
     from ..sketchlib.ams import AmsSketch
 
-    blob = countsketch_build(df, col, depth, width, seed)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(blob)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def probe(hashed: pd.Series) -> pd.Series:
-        sk = AmsSketch.from_bytes(bc.value)
-        est = sk.query_hashed(hashed.to_numpy(np.int64))
-        return pd.Series(est.astype(np.int64))
-
+    bc = df.sparkSession.sparkContext.broadcast(
+        countsketch_build(df, col, depth, width, seed)
+    )
+    probe = sketch_udf(AmsSketch.from_bytes, _query_counts, LongType(), probe=bc)
     return items_df.withColumn(alias, probe(F.xxhash64(F.col(col))))
 
 
@@ -761,22 +684,14 @@ def theta_jaccard_udf():
     the denominator is the union sketch's KMV estimate and the
     numerator the common-theta intersection — each within its own
     published bound. Empty-union pairs return 0.0."""
-    from pyspark.sql.functions import pandas_udf
-
     from ..sketchlib.theta import ThetaSketch
 
-    @pandas_udf(DoubleType())
-    def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            sa = ThetaSketch.from_bytes(bytes(x))
-            sb = ThetaSketch.from_bytes(bytes(y))
-            inter = sa.intersect_estimate(sb)
-            union = sa.union(sb).estimate_float()
-            out.append(inter / union if union > 0 else 0.0)
-        return pd.Series(out, index=a.index, dtype=float)
+    def jaccard(sa: ThetaSketch, sb: ThetaSketch) -> float:
+        inter = sa.intersect_estimate(sb)  # before union() replaces sa's values
+        union = sa.union(sb).estimate_float()
+        return inter / union if union > 0 else 0.0
 
-    return jac
+    return sketch_udf(ThetaSketch.from_bytes, jaccard, DoubleType())
 
 
 def theta_overlap_matrix(

@@ -188,8 +188,10 @@ def test_broadcast_join_for_small_dimension(spark):
 def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
     # the scaffold's level-0 build, merge, overlap emit, sliding window
     # answers and one-scan many-column builds (profile, FK discovery) are
-    # all mapInArrow: no pandas conversion stage in any plan
+    # all mapInArrow: no pandas conversion stage in any plan. "Sketch,
+    # then answer" APIs answer inside the merge task: no UDF stage after it
     from hll_spark.operators.agg import (
+        hll_distinct,
         hll_overlap_matrix,
         hll_sketch_agg,
         hll_spec,
@@ -197,6 +199,13 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
         sketch_partials,
     )
     from hll_spark.operators.diagnostics import fk_containment_report, profile_table
+    from hll_spark.operators.matrix import fd_gram_by
+    from hll_spark.operators.sketches import (
+        distinct_sample,
+        kll_quantiles,
+        mg_top_items,
+        tdigest_quantiles,
+    )
     from hll_spark.operators.sliding import sliding_distinct_windows
 
     ev = spark.range(900).select(
@@ -208,6 +217,8 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
     )
     wins = {"d1": 86400, "d7": 7 * 86400}
     partials = sketch_partials(ev, "user_id", hll_spec())
+    items = ev.select("grp", F.col("user_id").cast("string").alias("item"))
+    emb = ev.select("grp", F.array(F.col("user_id").cast("double"), F.lit(1.0)).alias("e"))
     frames = {
         "hll_global": hll_sketch_agg(ev, "user_id"),
         "hll_grouped": hll_sketch_agg(ev, "user_id", by=["grp"]),
@@ -224,6 +235,13 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
                 (spark.range(300).select((F.col("id") * 3).alias("k")), "k", "other.k"),
             ]
         ),
+        "hll_distinct_global": hll_distinct(ev, "user_id"),
+        "hll_distinct_grouped": hll_distinct(ev, "user_id", by=["grp"]),
+        "kll_5q": kll_quantiles(ev, "user_id", [0.1, 0.25, 0.5, 0.75, 0.9], by=["grp"]),
+        "tdigest": tdigest_quantiles(ev, "user_id", [0.5, 0.9], by=["grp"]),
+        "mg_top": mg_top_items(items, "item", by=["grp"]),
+        "distinct_sample": distinct_sample(items, "item", k=16, by=["grp"]),
+        "fd_gram_by": fd_gram_by(emb, "e", ["grp"], ell=4),
     }
     plans = {
         k: df._jdf.queryExecution().executedPlan().toString()
@@ -233,6 +251,9 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
         assert "MapInArrow" in plan, name
         assert "MapInPandas" not in plan, name
         assert "FlatMapGroupsInPandas" not in plan, name
+        assert "BatchEvalPython" not in plan, name
+        if name != "fk":  # its sketch pairs meet after a broadcast join
+            assert "ArrowEvalPython" not in plan, name
     # grouped sliding: the merge's hash exchange, the anchor's single-
     # partition and broadcast exchanges and the orderBy's range exchange —
     # the window answers add no exchange of their own
@@ -242,6 +263,8 @@ def test_sketch_scaffold_plans_have_no_pandas_udf_stage(spark):
     # two broadcast sides are one exchange once AQE reuses it, so the
     # count is read from the executed plan
     assert plans["profile"].count("Exchange") == 1
+    # profile: level 0 and the merge are its only Python stages
+    assert plans["profile"].count("MapInArrow") == 2
     fk = frames["fk"]
     fk.collect()
     final = fk._jdf.queryExecution().executedPlan().toString()

@@ -279,6 +279,18 @@ def test_sliding_windows_on_empty_input(spark):
     )
 
 
+def test_answer_column_colliding_with_a_key_raises(spark):
+    # the parent returned the estimate under both names, the key lost
+    from hll_spark.operators.agg import hll_distinct
+    from hll_spark.operators.sketches import kll_quantiles
+
+    df = spark.range(20).select(F.col("id").alias("v"), (F.col("id") % 2).alias("distinct_v"))
+    with pytest.raises(ValueError, match="collide"):
+        hll_distinct(df, "v", by=["distinct_v"])
+    with pytest.raises(ValueError, match="collide"):
+        kll_quantiles(df.withColumnRenamed("distinct_v", "q0_5"), "v", [0.5], by=["q0_5"])
+
+
 # -------------------------------------------------------- frequent directions
 
 

@@ -1,10 +1,12 @@
 """SQL function surface: the postgresql-hll-style query UX over
 spark.sql (functions/__init__.py register_sql_functions)."""
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import hll_spark.functions as fns
 from hll_spark.functions import register_sql_functions
 from hll_spark.operators.agg import hll_sketch_agg
 from hll_spark.sketchlib.hll import HllConfig
@@ -97,3 +99,87 @@ def test_sql_extract_text(spark, lang_sketches):
         "SELECT count(*) AS n FROM pages_sqlfn WHERE extract_text(html) != text"
     ).collect()[0]["n"]
     assert bad == 0
+
+
+def test_null_sketch_reads_out_as_null(spark, lang_sketches):
+    """A NULL blob is a NULL answer, not a failed query: unary, pair
+    (after an outer join) and quantile read-outs alike."""
+    from hll_spark.operators.sketches import kll_spec, theta_sketch_agg
+    from hll_spark.operators.agg import hll_estimate_udf, sketch_aggregate
+
+    row = spark.sql(
+        "SELECT hll_cardinality(CAST(NULL AS BINARY)) AS n, "
+        "theta_cardinality(CAST(NULL AS BINARY)) AS t"
+    ).collect()[0]
+    assert (row.n, row.t) == (None, None)
+
+    rows = spark.sql(
+        """
+        SELECT a.lang,
+               hll_cardinality(b.sketch) AS n,
+               hll_cardinality(hll_union(a.sketch, b.sketch)) AS u,
+               hll_intersect(a.sketch, b.sketch) AS i
+        FROM lang_sketches a LEFT JOIN lang_sketches b
+          ON a.lang = b.lang AND b.lang = 'en'
+        """
+    ).collect()
+    got = {r.lang: (r.n, r.u, r.i) for r in rows}
+    assert got["de"] == (None, None, None)
+    assert got["en"][:2] == (600, 600)
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"g": [1, 1, 2, 2, 3], "v": [1.0, 2.0, 3.0, 4.0, 5.0]})
+    )
+    # one group's sketch replaced by NULL, as a stored table may hold it
+    def null_g2(sk):
+        return sk.select("g", F.when(F.col("g") != 2, F.col("sketch")).alias("sketch"))
+
+    hll = null_g2(hll_sketch_agg(df, "v", by=["g"]))
+    est = {r.g: r.n for r in hll.select("g", hll_estimate_udf()("sketch").alias("n")).collect()}
+    assert est == {1: 2, 2: None, 3: 1}
+    theta = null_g2(theta_sketch_agg(df, "v", by=["g"]))
+    jac = theta.alias("a").join(theta.alias("b"), "g").select(
+        "g", fns.theta_jaccard_udf()("a.sketch", "b.sketch").alias("j")
+    )
+    assert {r.g: r.j for r in jac.collect()} == {1: 1.0, 2: None, 3: 1.0}
+    kll = null_g2(sketch_aggregate(df, "v", kll_spec(), by=["g"], hash_mode=None))
+    q = kll.select("g", fns.kll_quantile_udf(1.0)("sketch").alias("q"))
+    assert {r.g: r.q for r in q.collect()} == {1: 2.0, 2: None, 3: 5.0}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["kll_quantile_udf", "tdigest_quantile_udf", "cms_query_udf", "bloom_might_contain_udf"],
+)
+def test_sketch_function_exports_match_driver_side(spark, name):
+    """Each read-out export answers exactly as the driver-side sketch
+    method does on the same blob."""
+    from hll_spark.operators.agg import sketch_aggregate
+    from hll_spark.operators.sketches import bloom_build, cms_build, kll_spec, tdigest_spec
+    from hll_spark.sketchlib.bloom import BloomFilter
+    from hll_spark.sketchlib.cms import CountMinSketch
+    from hll_spark.sketchlib.kll import KllSketch
+    from hll_spark.sketchlib.tdigest import TDigest
+
+    df = spark.range(3000).select(
+        (F.col("id") % 3).alias("g"), (F.col("id") * 7919 % 1009).cast("double").alias("v")
+    )
+    if name in ("kll_quantile_udf", "tdigest_quantile_udf"):
+        kll = name == "kll_quantile_udf"
+        spec, cls = (kll_spec(64), KllSketch) if kll else (tdigest_spec(), TDigest)
+        sk = sketch_aggregate(df, "v", spec, by=["g"], hash_mode=None)
+        rows = sk.select("sketch", getattr(fns, name)(0.9)("sketch").alias("got")).collect()
+        want = [cls.from_bytes(bytes(r.sketch)).quantile(0.9) for r in rows]
+    else:
+        build, cls, probe = (
+            (cms_build, CountMinSketch, "query_hashed")
+            if name == "cms_query_udf"
+            else (bloom_build, BloomFilter, "might_contain_hashed")
+        )
+        blob = build(df, "v")
+        items = spark.range(0, 3000, 7).select(F.xxhash64(F.col("id").cast("double")).alias("h"))
+        rows = items.select("h", getattr(fns, name)(blob)("h").alias("got")).collect()
+        hashes = np.array([r.h for r in rows], np.int64)
+        want = getattr(cls.from_bytes(blob), probe)(hashes).tolist()
+    assert len(rows) > 2
+    assert [r.got for r in rows] == want
