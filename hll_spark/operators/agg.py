@@ -369,6 +369,13 @@ def sketch_partials(
             F.xxhash64(*[F.col(c) for c in salt_cols], F.lit(DEFAULT_SALT_SEED)),
         )
     proj = _project(df, col, by, hash_mode)
+    reserved = {"sketch", "rows_seen", *proj.columns[len(by):]}
+    clash = reserved.intersection(by)
+    if clash:
+        raise ValueError(
+            f"grouping column(s) {sorted(clash)} use names the sketch scaffold "
+            f"reserves for its own columns: {sorted(reserved)}"
+        )
     # NOTE (r6): a fan_out_scan here was A/B-tested and REVERTED —
     # at bench scale the level-0 kernel work per query is tens of ms,
     # so 32-way fan-out just multiplies Python-worker invocations and
@@ -777,7 +784,6 @@ def hll_overlap_matrix(
     group_col: str,
     cfg: HllConfig | None = None,
     hash_mode: str = "xxhash64",
-    merge_buckets: int = 16,
 ) -> DataFrame:
     """All-pairs audience overlap from ONE scan of the base table.
 

@@ -166,7 +166,7 @@ def fit_quality_classifier(
     per-doc error, per-feature sum), integer update. The label and
     feature frames are built once and reused by every iteration (no
     cache outlives the fit); weight lineage is cut per iteration
-    (localCheckpoint, lazy) so the plan does not grow with ``iters``.
+    (``scanutil.reused``) so the plan does not grow with ``iters``.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -242,13 +242,11 @@ def fit_quality_classifier(
             .groupBy("feat")
             .agg(F.sum("__err").alias("__g"))
         )
-        weights = (
-            weights.join(grads, "feat")
-            .select(
+        weights = reused(
+            weights.join(grads, "feat").select(
                 "feat",
                 (F.col("w") - _floordiv(F.col("__g"), divisor)).alias("w"),
             )
-            .localCheckpoint(eager=False)
         )
     bias = weights.where(F.col("feat") == -1).select(F.col("w").alias("b"))
     weights = weights.where(F.col("feat") >= 0)

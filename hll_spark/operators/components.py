@@ -21,11 +21,10 @@ stage count). The edge set provably converges to stars
 At 100 TB scale every shuffle in a round keys on a node id of the
 CURRENT edge list (which only shrinks): per round that is two
 window-min passes and two distincts — 4 key-hash shuffles — plus one
-tiny digest aggregate. Per-round ``localCheckpoint(eager=False)``
-truncates the lineage so the plan does not grow with the iteration
-count (the classic iterative-Spark failure mode); lazy, so the
-materialization rides the digest job instead of paying a separate
-eager action per round (one Spark job per round instead of two).
+tiny digest aggregate. Each round's edge list goes through
+``scanutil.reused``, the library's one lineage cut, so the plan does
+not grow with the iteration count (the classic iterative-Spark failure
+mode).
 
 Spark-first notes: the per-round convergence test compares a
 commutative edge-set digest (count + xor of xxhash64) computed
@@ -124,21 +123,20 @@ def connected_components(
     Edges may be in any orientation, with duplicates and self-loops;
     node ids must be integral (the min-label order is the id order).
     """
+    from .scanutil import reused
+
     # no up-front symmetrize: _large_star symmetrizes internally every
     # round, so a pre-pass would only add a full-edge-list shuffle.
-    # Checkpoints are LAZY: the digest aggregate right after each one
-    # is the action that materializes it, so every round is exactly one
-    # Spark job (eager checkpoints used to double the job count).
-    e = edges.select(
-        F.col(src).cast("long").alias("src"),
-        F.col(dst).cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
+    e = reused(
+        edges.select(
+            F.col(src).cast("long").alias("src"),
+            F.col(dst).cast("long").alias("dst"),
+        )
+    )
     digest = _edge_digest(e)
     for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        d2 = _edge_digest(e2)
-        e.unpersist()
-        e = e2
+        e = reused(_small_star(_large_star(e)))
+        d2 = _edge_digest(e)
         if d2 == digest:
             break
         digest = d2

@@ -32,14 +32,17 @@ mass must be conserved.
 
 Scale shape: each iteration is ONE shuffle (edge⋈rank hash join on
 src, then a map-side-combined sum by dst); the per-edge denominator
-join happens once before the loop; ``localCheckpoint`` every few
-iterations truncates the iterative lineage exactly as
-operators/components.py does.
+join happens once before the loop. The two loop-invariant frames and
+every ``_CUT_EVERY``-th rank frame go through ``scanutil.reused``, the
+library's one lineage cut, so the iterative plan stays bounded as in
+operators/components.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+_CUT_EVERY = 4  # iterations between lineage cuts of the rank frame
 
 _HREF_RE = r'href\s*=\s*"(https?://[^"#\s]+)'
 
@@ -89,7 +92,6 @@ def pagerank_hosts(
     edges: DataFrame,
     iterations: int = 3,
     damping_micro: int = 850_000,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(host, rank_micro) after ``iterations`` exact-integer damped
     PageRank steps over weighted edges (src_host, dst_host, n_links).
@@ -102,6 +104,8 @@ def pagerank_hosts(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not 0 <= damping_micro <= 1_000_000:
         raise ValueError("damping_micro must be in [0, 1e6]")
+    from .scanutil import reused
+
     base = 1_000_000 - damping_micro
 
     e = edges.select(
@@ -109,21 +113,19 @@ def pagerank_hosts(
         F.col("dst_host").alias("dst"),
         F.col("n_links").cast("long").alias("w"),
     )
-    # both loop-invariant frames get a LAZY lineage cut: nodes is
+    # both loop-invariant frames get a lineage cut: nodes is
     # referenced once per iteration (the left side of the rank join)
     # and would otherwise replay the caller's whole edge-derivation
     # chain (for the parity query: HTML link extraction) every
-    # iteration; lazy so the materialization rides the first action
-    # instead of paying an eager job at plan-build time
-    nodes = (
+    # iteration
+    nodes = reused(
         e.select(F.col("src").alias("host"))
         .unionByName(e.select(F.col("dst").alias("host")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     w_out = e.groupBy("src").agg(F.sum("w").alias("w_out"))
     # per-edge denominator fixed across iterations: join once, reuse
-    ew = e.join(w_out, "src").localCheckpoint(eager=False)
+    ew = reused(e.join(w_out, "src"))
 
     ranks = nodes.withColumn("rank_micro", F.lit(1_000_000).cast("long"))
     for i in range(iterations):
@@ -154,8 +156,8 @@ def pagerank_hosts(
                 .alias("rank_micro"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
+        if (i + 1) % _CUT_EVERY == 0:
+            ranks = reused(ranks)
     return ranks
 
 

@@ -161,17 +161,17 @@ def fit_bigram_lm(
     # model — without a lineage cut the corpus bigram explode+aggregate
     # executes once per exchange (twice per model, 4x in
     # dsir_importance). On a LARGE training corpus that duplication is
-    # a full extra pass, so cache the fitted model once (it is bounded
+    # a full extra pass, so materialize the fitted model once (it is bounded
     # by the distinct-gram count — broadcast-sized by the module
     # contract). On a small corpus the duplicate 1-task aggregates run
-    # concurrently on idle cores and the cache's materialization is
+    # concurrently on idle cores and the materialization is
     # pure overhead (interleaved A/B, r6: +0.2 s at sf0.1), so the cut
     # is gated on the plan-stats size of the training input — a scale
     # decision from input statistics, not a local-mode constant.
-    from .scanutil import LINEAGE_CUT_MIN_BYTES, plan_bytes
+    from .scanutil import LINEAGE_CUT_MIN_BYTES, plan_bytes, reused
 
     if plan_bytes(train) > LINEAGE_CUT_MIN_BYTES:
-        model = model.localCheckpoint(eager=False)
+        model = reused(model)
     contexts = model.groupBy("w_prev").agg(F.sum("cnt").alias("ctx"))
     return vocab, model, contexts, v_eff
 

@@ -33,8 +33,11 @@ corpus into ONE task in Spark:
    ``np.repeat``); no second shuffle, no driver data path beyond the
    per-partition totals.
 
-Both passes run over one cached ordered layout, so the partitioning
-seen by phase 2 and phase 3 is byte-identical.
+Both passes run over one ordered layout whose lineage is cut
+(``scanutil.reused``), so the partitioning seen by phase 2 and phase 3
+is byte-identical. ``pack_sequences`` and both budget selections share
+phases 1-2 (:func:`_ordered_totals`); each keeps its own projection,
+driver prefix sum and emit.
 """
 
 from __future__ import annotations
@@ -64,6 +67,29 @@ def _range_partitions(df: DataFrame) -> int:
         return max(df.rdd.getNumPartitions(), 1)
     except Exception:
         return 200
+
+
+def _ordered_totals(
+    df: DataFrame, base: DataFrame, sort_exprs: list, by: tuple = ()
+) -> tuple[DataFrame, list]:
+    """Phases 1-2 of the two-phase scan: ``base`` range-partitioned and
+    sorted on ``sort_exprs`` (one O(n) shuffle into a total order), its
+    lineage cut so the totals pass and the caller's emit pass cannot see
+    different range samplings, and the collected ``__sum`` of ``__tok``
+    per partition ``__pid`` (per partition and ``by`` columns) — one
+    tiny row each at any corpus size. ``df`` sizes the range shuffle."""
+    from .scanutil import reused
+
+    ordered = reused(
+        base.repartitionByRange(_range_partitions(df), *sort_exprs)
+        .sortWithinPartitions(*sort_exprs)
+    )
+    totals = (
+        ordered.groupBy(F.spark_partition_id().alias("__pid"), *by)
+        .agg(F.sum("__tok").alias("__sum"))
+        .collect()
+    )
+    return ordered, totals
 
 
 _MANIFEST_SCHEMA = StructType(
@@ -105,22 +131,8 @@ def pack_sequences(
         F.col(order_col).alias("__ord"),
         tokens.cast("long").alias("__tok"),
     ).where(F.col("__tok") > 0)
-    # phase 1: one O(n) shuffle into a total order. localCheckpoint
-    # pins the exact partition layout so the totals pass (phase 2) and
-    # the span pass (phase 3) cannot see different samplings.
-    ordered = (
-        base.repartitionByRange(_range_partitions(df), "__ord")
-        .sortWithinPartitions("__ord")
-        .localCheckpoint(eager=False)
-    )
-
-    # phase 2: per-partition token totals -> driver (one tiny row per
-    # partition at ANY corpus size) -> exclusive prefix sum
-    totals = (
-        ordered.groupBy(F.spark_partition_id().alias("__pid"))
-        .agg(F.sum("__tok").alias("__sum"))
-        .collect()
-    )
+    ordered, totals = _ordered_totals(df, base, ["__ord"])
+    # per-partition token totals -> exclusive prefix sum
     sums = {r["__pid"]: r["__sum"] for r in totals}
     bases: dict[int, int] = {}
     acc = 0
@@ -223,16 +235,7 @@ def select_to_token_budget(
         F.col(f"__o{i}").desc() if d else F.col(f"__o{i}").asc()
         for i, (_, d) in enumerate(norm)
     ]
-    ordered = (
-        base.repartitionByRange(_range_partitions(df), *sort_exprs)
-        .sortWithinPartitions(*sort_exprs)
-        .localCheckpoint(eager=False)
-    )
-    totals = (
-        ordered.groupBy(F.spark_partition_id().alias("__pid"))
-        .agg(F.sum("__tok").alias("__sum"))
-        .collect()
-    )
+    ordered, totals = _ordered_totals(df, base, sort_exprs)
     sums = {r["__pid"]: r["__sum"] for r in totals}
     live: dict[int, int] = {}
     acc = 0
@@ -434,18 +437,7 @@ def select_to_token_budget_grouped(
         F.col(f"__o{i}").desc() if d else F.col(f"__o{i}").asc()
         for i, (_, d) in enumerate(norm)
     ]
-    ordered = (
-        base.repartitionByRange(_range_partitions(df), *sort_exprs)
-        .sortWithinPartitions(*sort_exprs)
-        .localCheckpoint(eager=False)
-    )
-    totals = (
-        ordered.groupBy(
-            F.spark_partition_id().alias("__pid"), F.col("__g")
-        )
-        .agg(F.sum("__tok").alias("__sum"))
-        .collect()
-    )
+    ordered, totals = _ordered_totals(df, base, sort_exprs, by=("__g",))
 
     def cap_of(g):
         return int(budgets) if isinstance(budgets, int) else int(

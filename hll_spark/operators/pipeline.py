@@ -76,7 +76,7 @@ def clean_corpus(
                 f"is {id_type or 'missing'} — string ids would cast "
                 "to null and silently empty the corpus"
             )
-    from .scanutil import LINEAGE_CUT_MIN_BYTES, plan_bytes
+    from .scanutil import LINEAGE_CUT_MIN_BYTES, plan_bytes, reused
 
     kept = exact_dedup(df, [text_col], id_col)
     kept = (
@@ -93,7 +93,7 @@ def clean_corpus(
         # duplicate subtrees overlap on idle cores and the
         # materialization costs more than it saves (interleaved A/B,
         # r6) — a scale decision from input statistics.
-        kept = kept.localCheckpoint(eager=False)
+        kept = reused(kept)
     if exact_neardup:
         pairs = ngram_jaccard_pairs(
             kept, text_col, id_col, threshold=neardup_threshold,
@@ -157,6 +157,7 @@ def crawl_ingest(
     no stage sorts the corpus or enumerates unbounded pairs.
     """
     from .crawl import cap_per_key, domain_blocklist_filter, latest_crawl
+    from .scanutil import reused
     from .url import url_host
 
     out = latest_crawl(crawls, url_col, ts_col, tiebreak)
@@ -178,10 +179,8 @@ def crawl_ingest(
         # clean_corpus scans its input several times (digest groupBy +
         # join-back, quality gates, near-dup candidate + verify);
         # without a lineage cut each scan would REPLAY the
-        # latest_crawl aggregate and the cap's count-join. Same
-        # pattern as curate_corpus below; at cluster scale persist/
-        # checkpoint the ingested ledger the same way.
-        out = out.localCheckpoint(eager=False)
+        # latest_crawl aggregate and the cap's count-join.
+        out = reused(out)
         out = clean_corpus(
             out, text_col=text_col, id_col=url_col, **clean_kwargs
         )
@@ -249,6 +248,7 @@ def curate_corpus(
     """
     from ..plans.shards import assign_shards
     from .lm import bigram_lm_perplexity, dsir_importance
+    from .scanutil import reused
 
     n_lm_gates = (max_ppl is not None) + (min_logratio is not None)
     out = (
@@ -260,18 +260,15 @@ def curate_corpus(
         # each LM gate scans its input several times (vocab fit, model
         # fit, scoring, semi-join back); without a lineage cut every
         # scan would REPLAY the clean_corpus DAG — MinHash dedup
-        # included. localCheckpoint materializes the cleaned corpus
-        # once (same pattern as components.py's iteration truncation);
-        # at cluster scale persist/checkpoint the cleaned corpus the
-        # same way.
-        out = out.localCheckpoint(eager=False)
+        # included. The cut materializes the cleaned corpus once.
+        out = reused(out)
     if max_ppl is not None:
         scores = bigram_lm_perplexity(
             out, text_col, id_col, vocab_size=lm_vocab_size
         ).where(F.col("ppl") <= max_ppl)
         out = out.join(scores.select(id_col), id_col, "left_semi")
-        if min_logratio is not None:  # same replay argument between gates
-            out = out.localCheckpoint(eager=False)
+        if min_logratio is not None:
+            out = reused(out)
     if min_logratio is not None:
         if target is None:
             raise ValueError("min_logratio requires a target corpus")
@@ -285,7 +282,7 @@ def curate_corpus(
             raise ValueError("min_clf_score_micro requires a target corpus")
         from .classifier import fit_quality_classifier, score_quality
 
-        out = out.localCheckpoint(eager=False)  # same replay argument
+        out = reused(out)
         # target-vs-pool training frame; even/odd id doubling keeps ids
         # unique across the union without nondeterministic renumbering
         train = out.select(

@@ -19,21 +19,22 @@ plan decision from input statistics, not a local-mode constant.
 
 The module also holds the plan probes the rest of the library shares:
 ``plan_stats`` (size and split estimates) and ``same_result`` (whether
-two frames compute the same result), and ``reused``, the one way a plan
-reads an expensive frame more than once.
+two frames compute the same result), and ``reused``, the library's one
+lineage cut. Every frame a plan reads more than once (a self-join, a
+rejoin after a shuffle, a loop-invariant frame) and the rounds of the
+iterative operators (connected components, PageRank, the classifier's
+gradient descent) are cut through it; no other module calls
+``localCheckpoint``, ``checkpoint``, ``cache`` or ``persist``
+(``tests/test_lineage_cut.py`` checks this).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # inputs above this are left to their natural splits (an exchange of
-# this much data is no longer "trivial"); override per deployment
-FAN_OUT_MAX_BYTES = int(
-    os.environ.get("HLL_SPARK_FAN_OUT_MAX_BYTES", str(4 << 30))
-)
+# this much data is no longer "trivial")
+FAN_OUT_MAX_BYTES = 4 << 30
 
 
 # training/corpus inputs estimated above this (logical-plan stats) get
@@ -92,9 +93,9 @@ def plan_bytes(df: DataFrame) -> int:
     return stats[0] if stats is not None else 0
 
 
-def plan_is_small(df: DataFrame, max_bytes: int | None = None) -> bool:
+def plan_is_small(df: DataFrame) -> bool:
     """True when ``df``'s optimized-plan size estimate is available and
-    under ``max_bytes`` (default FAN_OUT_MAX_BYTES).
+    under FAN_OUT_MAX_BYTES.
 
     Use on frames whose statistics are trustworthy (scans, cached
     frames, pre-join inputs): join outputs inherit multiplied
@@ -105,38 +106,36 @@ def plan_is_small(df: DataFrame, max_bytes: int | None = None) -> bool:
     coalesce a compute-heavy shuffle down to a couple of tasks; on
     large inputs the byte volume itself gives AQE the parallelism and
     the caller leaves the plan alone."""
-    if max_bytes is None:
-        max_bytes = FAN_OUT_MAX_BYTES
     stats = plan_stats(df)
-    return stats is not None and stats[0] <= max_bytes
+    return stats is not None and stats[0] <= FAN_OUT_MAX_BYTES
 
 
-def fan_out_scan(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
+def fan_out_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the default parallelism when
     (and only when) its scan is parallelism-starved and small.
 
     Returns ``df`` unchanged when statistics are unavailable, when the
-    input is estimated above ``max_bytes`` (default 4 GiB, env
-    ``HLL_SPARK_FAN_OUT_MAX_BYTES``), or when the scan already yields
-    at least half the session's default parallelism. Row content is
-    untouched — only the partitioning changes, so any per-row map or
-    keyed aggregation downstream computes identical results.
+    input is estimated above FAN_OUT_MAX_BYTES (4 GiB), or when the
+    scan already yields at least half the session's default
+    parallelism. Row content is untouched — only the partitioning
+    changes, so any per-row map or keyed aggregation downstream
+    computes identical results.
     """
-    if max_bytes is None:
-        max_bytes = FAN_OUT_MAX_BYTES
     stats = plan_stats(df)
     if stats is None:  # non-classic backend — leave the plan alone
         return df
     size, parts = stats
     target = df.sparkSession.sparkContext.defaultParallelism
-    if size > max_bytes or parts * 2 >= target:
+    if size > FAN_OUT_MAX_BYTES or parts * 2 >= target:
         return df
     return df.repartition(target)
 
 
 def reused(df: DataFrame) -> DataFrame:
-    """``df`` materialized once for a plan that reads it more than once
-    (both sides of a self-join, a rejoin after a shuffle).
+    """``df`` with its lineage cut: the library's one cut, for a frame a
+    plan reads more than once (both sides of a self-join, a rejoin after
+    a shuffle, a loop-invariant frame) and for each round of an
+    iterative operator, whose plan would otherwise grow per round.
 
     A local checkpoint, computed when this is called: every read in
     the plan built on the returned frame scans its blocks. Nothing
@@ -148,9 +147,13 @@ def reused(df: DataFrame) -> DataFrame:
     job that reads it, while AQE's other query-stage jobs of the same
     plan still run tasks of the cut lineage; the driver has dropped
     those tasks' SQL metrics by then and logs "attempted to access
-    non-existent accumulator" per metric. The lazy form was also
-    slower in an interleaved A/B at sf0.1 (minhash_join_parity 0.61 s
-    vs 0.55 s). Local checkpoint blocks are lost with their executor,
-    and a read of a lost block fails the query instead of recomputing
-    it (a reliable checkpoint would not)."""
+    non-existent accumulator" per metric (sf0.1, ``local[4]`` on a
+    4-CPU VM: 39 such lines over 6 processes that each ran the 11
+    cutting queries 4 times with lazy cuts, none with eager ones). The
+    eager cut's extra job per cut moved no query's median past the lazy
+    form's interquartile range in an interleaved A/B on the same setup.
+    Local checkpoint blocks are lost with their executor, and a read of
+    a lost block fails the query instead of recomputing it; a reliable
+    ``checkpoint()`` would survive that but leaves its files behind
+    unless ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on."""
     return df.localCheckpoint(eager=True)

@@ -60,6 +60,7 @@ def streaming_dedup_increment(
         dedup_increment_index,
         validate_minhash_index,
     )
+    from hll_spark.operators.scanutil import reused
 
     # fail at wire-up, not first batch, on a wrong index frame
     # (columns, sig element type, AND stored sig/bk lengths vs k/bands
@@ -71,14 +72,13 @@ def streaming_dedup_increment(
     if verify == "rep":
         # the index-only frames (bucket representatives + unique rep
         # signatures) are pure functions of the STATIC index: compute
-        # them once at wire-up with lazy lineage cuts — the first
-        # batch materializes them, later batches join the cached
-        # frames — instead of re-running the index validation head()
-        # and the index-wide keying shuffle inside every micro-batch
-        # (ADVICE r5: per-batch latency scaled with index size)
+        # them once at wire-up through the lineage cut — every batch
+        # joins the materialized frames — instead of re-running the
+        # index validation head() and the index-wide keying shuffle
+        # inside every micro-batch (ADVICE r5: per-batch latency
+        # scaled with index size)
         reps, sig_r = _increment_rep_frames(index, id_col, unique_ids)
-        reps = reps.localCheckpoint(eager=False)
-        sig_r = sig_r.localCheckpoint(eager=False)
+        reps, sig_r = reused(reps), reused(sig_r)
 
         def keep_novel(bdf: DataFrame, batch_id: int) -> None:
             _dedup_increment_rep(

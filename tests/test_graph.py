@@ -67,9 +67,7 @@ def test_partition_invariance(spark, random_edges):
     }
     b = {
         r["host"]: r["rank_micro"]
-        for r in pagerank_hosts(
-            edf.repartition(13), iterations=4, checkpoint_every=2
-        ).collect()
+        for r in pagerank_hosts(edf.repartition(13), iterations=4).collect()
     }
     assert a == b
 

@@ -291,6 +291,17 @@ def test_answer_column_colliding_with_a_key_raises(spark):
         kll_quantiles(df.withColumnRenamed("distinct_v", "q0_5"), "v", [0.5], by=["q0_5"])
 
 
+@pytest.mark.parametrize("key", ["sketch", "rows_seen", "__v"])
+@pytest.mark.parametrize("op", ["hll_sketch_agg", "hll_distinct"])
+def test_key_named_like_a_scaffold_column_raises(spark, op, key):
+    # the parent failed at analysis with [AMBIGUOUS_REFERENCE]
+    from hll_spark.operators import agg
+
+    df = spark.range(100).select(F.col("id").alias("v"), (F.col("id") % 3).alias(key))
+    with pytest.raises(ValueError, match="reserves"):
+        getattr(agg, op)(df, "v", by=[key]).collect()
+
+
 # -------------------------------------------------------- frequent directions
 
 
